@@ -348,47 +348,23 @@ object Aggregates {
     * (value, event_id) order whose running weight crosses half the
     * total — the crossing test `2·cumw ≥ totw` is pure integer
     * arithmetic and the output is an INPUT double, so nothing is
-    * engine-accumulated. One (event_type) shuffle serves all three
-    * window passes. */
+    * engine-accumulated. One range exchange serves the rank and the
+    * running weight. */
   def qAggPercentileWeighted(s: SparkSession, sf: String): DataFrame = {
-    // round 14 (§2.5): the per-type running weight was a window
-    // partitioned by event_type — ~5 partitions at ANY scale, so each
-    // held a data-sized frame in one task. One rankedByRange over
-    // (event_type, value, event_id) range-partitions the whole frame
-    // and carries the GLOBAL inclusive weight sum; per-type cumw =
-    // global cumw − the type's exclusive offset, where the per-type
-    // totals/offsets are a constant-size (≤ #event_types) driver fold
-    // over an aggregate of the checkpointed blocks — the same annotated
-    // constant collect rankedByRange itself performs. The crossing
-    // test and the first-crossing pick (min global rank per type — each
-    // type's block is contiguous in the total order) are unchanged.
+    // not a window partitioned by event_type: that is ~5 partitions at
+    // ANY scale, each a data-sized frame in one task. One rankedByRange
+    // over (event_type, value, event_id) range-partitions the whole
+    // frame and carries the GLOBAL inclusive weight sum; each type's
+    // block is contiguous in that total order, so withinStratum turns
+    // it into the per-type running weight and total, and the first
+    // crossing is the min global rank per type.
     val base = Tables.events(s, sf)
       .select(col("event_type"), col("event_id"), col("value"),
         (lit(1) + col("user_id") % 3).as("wt"))
     val r = Util.rankedByRange(base,
       Seq(col("event_type"), col("value"), col("event_id")), "__rk",
-      Tables.rowCount(s, sf, "events"), sums = Seq("wt" -> "__gcum"))
-    // per-type total weight + exclusive offset, in event_type order
-    val perType = r.groupBy(col("event_type"))
-      .agg(sum(col("wt")).as("totw")).collect()
-      .sortBy(_.getString(0))
-    var off = 0L
-    val offRows = perType.map { row =>
-      val out = org.apache.spark.sql.Row(row.getString(0), row.getLong(1), off)
-      off += row.getLong(1)
-      out
-    }
-    val offDf = s.createDataFrame(
-      java.util.Arrays.asList(offRows: _*),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("event_type",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("totw",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("__woff",
-          org.apache.spark.sql.types.LongType))))
-    r.join(broadcast(offDf), "event_type")
-      .withColumn("cumw", col("__gcum") - col("__woff"))
+      sums = Seq("wt" -> "__gcum"))
+    Util.withinStratum(r, "event_type", "__gcum", col("wt"), "cumw", "totw")
       .where(lit(2) * col("cumw") >= col("totw"))
       .groupBy(col("event_type"))
       .agg(min(struct(col("__rk"), col("value"))).as("__first"),
@@ -574,8 +550,8 @@ object Aggregates {
     * ≤ ~60k rows at ANY scale), midranks are kept doubled (2·rank is
     * always integer), so U, ΣT=Σ(t³−t) and 2(U−μ) are exact BIGINTs; z
     * is one double expression over those integers, rounded to 6dp.
-    * Shape: data-sized hash agg to the value domain, a domain-sized
-    * window, a constant-size final agg. */
+    * Shape: data-sized hash agg to the value domain, a running count
+    * over it ([[Util.rankedByRange]]), a constant-size final agg. */
   def qAbMannwhitney(s: SparkSession, sf: String): DataFrame = {
     val d = Tables.events(s, sf)
       .withColumn("vfp", floor(col("value") * lit(100) + lit(0.5)).cast("long"))
@@ -583,19 +559,14 @@ object Aggregates {
       .groupBy(col("vfp"))
       .agg(sum(when(col("isa"), 1L).otherwise(0L)).as("ca"),
            count(lit(1)).as("ct"))
-    // round 14 (§2.5): the running count over the value grid was an
-    // UNPARTITIONED window — a single task holding the whole grid,
-    // defended only by a value-boundedness argument. rankedByRange's
-    // inclusive running sum (range shuffle + partition-local window +
-    // broadcast pid offsets) replaces it; the exclusive form the U
-    // statistic needs is inclusive − own count. The grid agg is pinned
-    // FIRST so the range sampling pass reads blocks instead of
-    // re-scanning events (sf10 A/B: the unpinned form scanned the fact
-    // table twice); the ≤100·max(value) grid keeps the checkpoint in
-    // the local tier.
-    val dc = Util.serCheckpoint(d, 1L << 20)
-    Util.rankedByRange(dc, Seq(col("vfp")), "__rk",
-        1L << 20, sums = Seq("ct" -> "__cum"))
+    // not an UNPARTITIONED window: that is a single task holding the
+    // whole grid. rankedByRange carries the inclusive running count;
+    // the exclusive form the U statistic needs is inclusive − own
+    // count. The range exchange's sampling pass reads the grid
+    // aggregate's materialized shuffle (adaptive execution runs that
+    // stage first), so events is scanned once.
+    Util.rankedByRange(d, Seq(col("vfp")), "__rk",
+        sums = Seq("ct" -> "__cum"))
       .withColumn("cum", col("__cum") - col("ct"))
       .withColumn("r2a", col("ca") * (lit(2L) * col("cum") + col("ct") + lit(1L)))
       .agg(sum(col("ca")).as("n1"), sum(col("ct") - col("ca")).as("n2"),
@@ -620,8 +591,8 @@ object Aggregates {
     * max|cum₁·n₂ − cum₂·n₁| (exact BIGINTs; ≤ n₁·n₂ ≈ 2.5e9·scale —
     * the one final division to the 6dp readout is the only float).
     * Shape: data-sized hash agg to the domain-bounded value grid
-    * (≤ 100·max value distinct rows at ANY scale), one cumulative
-    * window over it, a constant-size max. */
+    * (≤ 100·max value distinct rows at ANY scale), running sums over it
+    * ([[Util.rankedByRange]]), a constant-size max. */
   def qAbKs(s: SparkSession, sf: String): DataFrame = {
     val d = Tables.events(s, sf)
       .withColumn("vfp", floor(col("value") * lit(100) + lit(0.5)).cast("long"))
@@ -629,20 +600,14 @@ object Aggregates {
       .groupBy(col("vfp"))
       .agg(sum(when(col("isa"), 1L).otherwise(0L)).as("ca"),
            sum(when(col("isa"), 0L).otherwise(1L)).as("cb"))
-    // round 14 (§2.5): both running CDFs rode one UNPARTITIONED window
-    // over the value grid (plus a whole-frame-total window for n1/n2) —
-    // single-task shapes defended only by value boundedness. ONE
+    // not an UNPARTITIONED window over the grid (a single task): ONE
     // rankedByRange carries both inclusive running sums; the arm totals
-    // come from a constant-size aggregate over the same checkpointed
-    // blocks, broadcast back. estRows is the worst-case distinct bound
-    // and gates checkpoint posture only.
-    // grid pinned first for the same reason as q_ab_mannwhitney: one
-    // events scan, not two (range sampling reads blocks)
-    val dc = Util.serCheckpoint(d, 1L << 20)
-    val r = Util.rankedByRange(dc, Seq(col("vfp")),
-      "__rk", 1L << 20,
+    // are a 1-row aggregate over the same grid, broadcast back. Both
+    // branches read the grid aggregate's one shuffle (adaptive
+    // execution reuses the exchange), so events is scanned once.
+    val r = Util.rankedByRange(d, Seq(col("vfp")), "__rk",
       sums = Seq("ca" -> "cum_a", "cb" -> "cum_b"))
-    val tot = dc.agg(sum(col("ca")).as("n1"), sum(col("cb")).as("n2"))
+    val tot = d.agg(sum(col("ca")).as("n1"), sum(col("cb")).as("n2"))
     r.crossJoin(broadcast(tot))
       .withColumn("dnum", abs(col("cum_a") * col("n2") - col("cum_b") * col("n1")))
       .groupBy(col("n1"), col("n2"))
@@ -730,8 +695,7 @@ object Aggregates {
       .agg(sum(col("value").cast(D)).as("ltv_dec"))
       .withColumn("ltv_fp", expr("CAST(ltv_dec * 10000 AS BIGINT)"))
     val ranked = Util.rankedByRange(perUser,
-        Seq(col("ltv_fp"), col("user_id")), "r",
-        estRows = Tables.rowCount(s, sf, "events") / 64)
+        Seq(col("ltv_fp"), col("user_id")), "r")
     val totals = ranked.agg(count(lit(1)).as("n"),
                             sum(col("ltv_fp")).as("total_fp"))
     ranked.crossJoin(broadcast(totals))
@@ -777,18 +741,17 @@ object Aggregates {
     * tie order, cutoff rank = ⌈n/5⌉ computed as `(n+4) div 5`, share
     * in 1e-3 fixed point — ALL-INTEGER end to end.
     *
-    * Scale shape (round-13): rank AND the running event sum both come
-    * from [[Util.rankedByRange]]'s two-level prefix sum (partition-
-    * local cumsum + broadcast pid offsets over a sampled range
-    * shuffle) — the old plan was two unpartitioned windows over the
-    * #users frame, a single task holding every user at corpus scale.
+    * Scale shape: rank AND the running event sum both come from
+    * [[Util.rankedByRange]] (one sampled range exchange, partition
+    * offsets + local running sums) — the old plan was two unpartitioned
+    * windows over the #users frame, a single task holding every user
+    * at corpus scale.
     * The global totals ride a 1-row broadcast. */
   def qAggParetoShare(s: SparkSession, sf: String): DataFrame = {
     val counts = Tables.events(s, sf)
       .groupBy(col("user_id")).agg(count(lit(1)).as("x"))
     val ranked = Util.rankedByRange(counts,
         Seq(col("x").desc, col("user_id")), "r",
-        estRows = Tables.rowCount(s, sf, "events") / 64,
         sums = Seq("x" -> "cumx"))
     val totals = ranked.agg(count(lit(1)).as("n_users"),
                             sum(col("x")).as("total_events"))
@@ -884,22 +847,18 @@ object Aggregates {
     * one 1e6-fixed-point division (counts and ranks are integers — no
     * float accumulation anywhere).
     *
-    * Scale shape (round-13): the rank i comes from
-    * [[Util.rankedByRange]] — a sampled range shuffle of the per-user
-    * frame with partition-LOCAL row_number + broadcast pid offsets —
-    * not an unpartitioned window (the per-user frame is billions of
-    * rows in the LLM-pipeline genre; one task sorting it is the plan
-    * this engine exists to avoid). Sampled boundaries keep the
-    * tie-heavy key balanced: x=1 covers half the users on a power-law
-    * corpus, and a value-arithmetic bucket would put them all in one
-    * partition. */
+    * Scale shape: the rank i comes from [[Util.rankedByRange]] — a
+    * sampled range shuffle of the per-user frame, ranked as partition
+    * offset + local position — not an unpartitioned window (the
+    * per-user frame is billions of rows in the LLM-pipeline genre;
+    * one task sorting it is the plan this engine exists to avoid).
+    * Sampled boundaries keep the tie-heavy key balanced: x=1 covers
+    * half the users on a power-law corpus, and a value-arithmetic
+    * bucket would put them all in one partition. */
   def qAggGini(s: SparkSession, sf: String): DataFrame = {
     val counts = Tables.events(s, sf)
       .groupBy(col("user_id")).agg(count(lit(1)).as("x"))
-    // estRows ≈ #users (fixture ~64 events/user) — only gates the
-    // reliable-vs-local checkpoint inside rankedByRange, never results
-    Util.rankedByRange(counts, Seq(col("x"), col("user_id")), "i",
-        estRows = Tables.rowCount(s, sf, "events") / 64)
+    Util.rankedByRange(counts, Seq(col("x"), col("user_id")), "i")
       .agg(count(lit(1)).as("n_users"),
            sum(col("x")).as("total_events"),
            sum((col("i") * 2 - 1) * col("x")).as("wsum"))

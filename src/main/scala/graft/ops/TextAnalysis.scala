@@ -161,45 +161,21 @@ object TextAnalysis {
     * docs, chosen by md5-hash rank — reproducible like q_sample_hash
     * but with a guaranteed per-stratum quota (hash-threshold sampling
     * only hits the rate in expectation; small or skewed strata can
-    * land far off). One (lang)-partitioned window computes both the
-    * rank and the stratum size — a single shuffle; at 100 TB lang is
-    * low-cardinality so per-stratum sort distributes by range within
-    * the window's partitioning. */
+    * land far off). One range exchange on (lang, h, doc_id) computes
+    * the rank; the stratum sizes and offsets are a ≤ #langs aggregate
+    * over it. */
   def qSampleStratified(s: SparkSession, sf: String): DataFrame = {
-    // round 14 (§2.5): the per-lang hash rank was a window partitioned
-    // by lang — ~5 partitions at ANY scale, each a data-sized frame in
-    // one task. One rankedByRange over (lang, h, doc_id) range-
-    // partitions the whole frame; per-lang rank = global rank − the
-    // lang's exclusive offset, with the per-lang counts/offsets a
-    // constant-size (≤ #langs) driver fold over the checkpointed
-    // blocks — the same annotated constant collect rankedByRange
-    // itself performs.
+    // not a window partitioned by lang: that is ~5 partitions at ANY
+    // scale, each a data-sized frame in one task. One rankedByRange over
+    // (lang, h, doc_id) range-partitions the whole frame; each lang's
+    // block is contiguous in that total order, so withinStratum turns
+    // the global rank into the per-lang rank and count.
     val base = Tables.documents(s, sf)
       .select(col("doc_id"), col("lang"),
               md5(col("doc_id").cast("string")).as("h"))
-    val r = graft.ops.Util.rankedByRange(base,
-      Seq(col("lang"), col("h"), col("doc_id")), "__gr",
-      Tables.rowCount(s, sf, "documents"))
-    val perLang = r.groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_lang")).collect()
-      .sortBy(_.getString(0))
-    var off = 0L
-    val offRows = perLang.map { row =>
-      val out = org.apache.spark.sql.Row(row.getString(0), row.getLong(1), off)
-      off += row.getLong(1)
-      out
-    }
-    val offDf = s.createDataFrame(
-      java.util.Arrays.asList(offRows: _*),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("lang",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("n_lang",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("__loff",
-          org.apache.spark.sql.types.LongType))))
-    r.join(broadcast(offDf), "lang")
-      .withColumn("rk", col("__gr") - col("__loff"))
+    val r = Util.rankedByRange(base,
+      Seq(col("lang"), col("h"), col("doc_id")), "__gr")
+    Util.withinStratum(r, "lang", "__gr", lit(1L), "rk", "n_lang")
       .where(col("rk") <= ceil(col("n_lang") / lit(10.0)))
       .select(col("doc_id"), col("lang"), col("rk"))
       .orderBy("lang", "rk")
@@ -547,10 +523,10 @@ object TextAnalysis {
     * its FIRST containing doc (min doc_id — exact, order-independent),
     * cumulative vocabulary per decile. ALL-INTEGER.
     *
-    * Scale shape (round-13): the decile split was `ntile(10)` over an
+    * Scale shape: the decile split was `ntile(10)` over an
     * UNPARTITIONED doc_id window — a single task sorting every doc id.
-    * Now: exact global rank via [[Util.rankedByRange]] (range shuffle +
-    * pid-offset prefix sums, partition-local windows only) and the
+    * Now: exact global rank via [[Util.rankedByRange]] (one range
+    * exchange + partition offsets, no window) and the
     * closed-form [[Util.ntileFromRank]] — bit-identical bucket
     * assignment, no data-sized single-task stage. The one remaining
     * unpartitioned window runs over the 10-row decile frame. */
@@ -558,7 +534,7 @@ object TextAnalysis {
     val nDocs = Tables.rowCount(s, sf, "documents")
     val docs = Util.rankedByRange(
         Tables.documents(s, sf).select(col("doc_id")),
-        Seq(col("doc_id")), "__r", estRows = nDocs)
+        Seq(col("doc_id")), "__r")
       .withColumn("decile",
         Util.ntileFromRank(col("__r"), lit(nDocs), 10).cast("int"))
       .drop("__r")

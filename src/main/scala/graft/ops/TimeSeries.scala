@@ -1559,9 +1559,8 @@ object TimeSeries {
     * Scale shape (round-13): the three quintile scores were three
     * UNPARTITIONED ntile windows over the per-user frame — fine for
     * the telemetry genre's "tiny" user counts, a single-task sort ×3
-    * at the LLM-pipeline scale this engine also claims. Round 13
-    * replaced them with three sequential [[Util.rankedByRange]] passes;
-    * round 14 fuses those into ONE: the per-user frame explodes to
+    * at the LLM-pipeline scale this engine also claims. They are now
+    * ONE [[Util.rankedByRange]]: the per-user frame explodes to
     * (metric_id, key, user_id) rows — the three order keys cast to one
     * DECIMAL(38,4) domain, an exact, order-preserving embedding for
     * day counts, purchase counts, and the DECIMAL(28,4) revenue — and
@@ -1570,9 +1569,8 @@ object TimeSeries {
     * order, so its per-metric rank is just global_rank − metric_id·n,
     * and one exchange-free pivot (groupBy user_id over the 3n rows)
     * recovers the per-user score triple. Cost: one sampled range
-    * shuffle + one checkpoint + one constant-size offsets collect,
-    * where round 13 paid three of each (the bench's one real
-    * regression, ×4.1 at fixture scale). Buckets stay bit-identical
+    * exchange and one ≤ #partitions offsets job, where three separate
+    * ranks would pay three of each. Buckets stay bit-identical
     * (closed-form [[Util.ntileFromRank]], ties broken on user_id). */
   def qTsRfm(s: SparkSession, sf: String): DataFrame = {
     val D38 = org.apache.spark.sql.types.DecimalType(38, 4)
@@ -1582,8 +1580,6 @@ object TimeSeries {
       .agg(expr("unix_micros(max(ts)) div 86400000000").as("last_day"),
            count(lit(1)).as("f"),
            sum(col("value").cast(org.apache.spark.sql.types.DecimalType(28, 4))).as("m"))
-    // estRows ≈ 3 × #purchasing users — gates checkpoint posture only
-    val est = 3L * (Tables.rowCount(s, sf, "events") / 256)
     val longF = users.select(col("user_id"),
       explode(array(
         struct(lit(0).as("mid"), col("last_day").cast(D38).as("k")),
@@ -1591,9 +1587,9 @@ object TimeSeries {
         struct(lit(2).as("mid"), col("m").cast(D38).as("k")))).as("e"))
       .select(col("e.mid").as("mid"), col("e.k").as("k"), col("user_id"))
     val ranked = Util.rankedByRange(longF,
-      Seq(col("mid"), col("k"), col("user_id")), "__r", est)
+      Seq(col("mid"), col("k"), col("user_id")), "__r")
     // n per metric = total/3 exactly (every user contributes one row
-    // per metric); the agg reads the checkpointed blocks
+    // per metric)
     val totals = ranked.agg((count(lit(1)) / 3).cast("long").as("__n"))
     val scored = ranked.crossJoin(broadcast(totals))
       .withColumn("score",

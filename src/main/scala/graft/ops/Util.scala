@@ -426,78 +426,47 @@ object Util {
   }
 
   /** Exact 1-based GLOBAL rank (+ optional inclusive running sums of
-    * LONG columns) over a total order — the scale-safe replacement for
-    * an unpartitioned `Window.orderBy(keys)` row_number / running sum,
-    * which Spark executes as ONE task holding the entire frame (the
-    * "WindowExec: No Partition Defined" warning). Correct-but-deadly
-    * once the frame is data-sized: per-user / per-doc frames are
+    * integral columns) over a total order — the scale-safe replacement
+    * for an unpartitioned `Window.orderBy(keys)` row_number / running
+    * sum, which Spark executes as ONE task holding the entire frame
+    * (the "WindowExec: No Partition Defined" warning). Correct-but-
+    * deadly once the frame is data-sized: per-user / per-doc frames are
     * billions of rows in the LLM-pipeline genre this engine claims.
     *
-    * Shape — the two-level prefix sum (q_pipeline_pack's trick) on a
-    * SAMPLED range partitioning, so skewed, tie-heavy sort keys still
-    * balance (a value-arithmetic bucket would put every x=1 user in
-    * one bucket; RangePartitioner boundaries include the tiebreak
-    * key):
-    *   1. range-repartition on the sort keys and PIN the partitioning
-    *      with [[serCheckpoint]] — boundaries are re-sampled per
-    *      action, so without the pin the offsets job and the rank pass
-    *      could disagree on pid membership (estRows picks reliable vs
-    *      local checkpoint exactly like the graph loops);
-    *   2. per-pid (count, Σ sum-col) — ≤ spark.sql.shuffle.partitions
-    *      rows, CONSTANT-size, the one annotated driver collect — folds
-    *      to exclusive pid offsets (pid order == key order under range
-    *      partitioning);
-    *   3. offsets broadcast back onto partition-LOCAL row_number /
-    *      cumsum windows: global rank = pid offset + local rank,
-    *      identical to the global window's output for any TOTAL order
-    *      (callers append the table PK as tiebreak, exactly as the
-    *      windows they replace did; keys must be name-based `col(..)`
-    *      refs so they re-resolve after the checkpoint).
+    * Shape — the native [[graft.plans.RankByRangeExec]]: one sampled
+    * range exchange on `keys` (sampled boundaries keep skewed, tie-heavy
+    * keys balanced: a value-arithmetic bucket would put every x=1 user
+    * in one bucket), per-partition counts/sums folded into exclusive
+    * offsets, rank = offset + local position. Lazy: no checkpoint, no
+    * driver-built DataFrame.
     *
-    * Cost: one range shuffle + the checkpoint materialization + a
-    * constant collect — vs a single task sorting the full frame. */
+    * `sums` pairs an integral input column with its LONG output column;
+    * a running sum is NULL until the first non-null input, as in SQL.
+    * Ranks equal the global window's for any TOTAL order — callers
+    * append the table PK as tiebreak, exactly as the windows they
+    * replace did. */
   def rankedByRange(df: DataFrame, keys: Seq[Column], rankCol: String,
-                    estRows: Long,
-                    sums: Seq[(String, String)] = Nil): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
-    val s = df.sparkSession
-    val p = s.conf.getOption("spark.sql.shuffle.partitions").map(_.toInt).getOrElse(32)
-    val ranged = serCheckpoint(
-      df.repartitionByRange(p, keys: _*)
-        .withColumn("__pid", spark_partition_id()),
-      estRows)
-    val aggs = count(lit(1)).as("__cnt") +:
-      sums.map { case (c, _) => sum(col(c)).as(s"__sum_$c") }
-    // ≤ p rows by construction — constant-size driver collect
-    val perPid = ranged.groupBy(col("__pid"))
-      .agg(aggs.head, aggs.drop(1): _*)
-      .collect()
-      .sortBy(_.getInt(0))
-    var off = 0L
-    val sumOffs = Array.fill(sums.length)(0L)
-    val offRows = perPid.map { r =>
-      // Seq[Any], NOT Seq(...): bare Seq(Int, Long) unifies to
-      // Seq[Long] and silently widens the pid — breaking the
-      // IntegerType field under the LocalRelation
-      val out = org.apache.spark.sql.Row.fromSeq(
-        Seq[Any](r.getInt(0), off) ++ sumOffs.toSeq)
-      off += r.getLong(1)
-      sums.indices.foreach(i => sumOffs(i) += r.getLong(2 + i))
-      out
-    }
-    val schema = StructType(
-      StructField("__pid", IntegerType) :: StructField("__off", LongType) ::
-      sums.toList.map { case (c, _) => StructField(s"__soff_$c", LongType) })
-    val offDf = s.createDataFrame(
-      java.util.Arrays.asList(offRows: _*), schema)
-    val w = Window.partitionBy(col("__pid")).orderBy(keys: _*)
-    val cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val withRank = ranged.join(broadcast(offDf), "__pid")
-      .withColumn(rankCol, col("__off") + row_number().over(w))
-    sums.foldLeft(withRank) { case (d, (c, out)) =>
-        d.withColumn(out, col(s"__soff_$c") + sum(col(c)).over(cum)) }
-      .drop("__pid" +: "__off" +: sums.map { case (c, _) => s"__soff_$c" }: _*)
+                    sums: Seq[(String, String)] = Nil): DataFrame =
+    graft.plans.RankByRange(df, keys, rankCol, sums)
+
+  /** Per-stratum view of a [[rankedByRange]] frame whose order LEADS
+    * with `stratum`: each stratum is one contiguous block of the global
+    * order, so its exclusive offset is `min(cum − step)` over the block
+    * and `local = cum − offset` restarts at the block's first row. With
+    * `cum` a rank and `step` = 1 this is the per-stratum rank (offset =
+    * min(rank) − 1, total = the stratum's row count); with `cum` a
+    * running weight sum and `step` the weight it is the per-stratum
+    * running weight (total = the stratum's Σ weight). Adds `localCol`
+    * and `totalCol`. The offsets come from one `groupBy` in the engine's
+    * own order and join back null-safe (`<=>`), so a NULL stratum is a
+    * stratum like any other; the ≤ #strata offset rows broadcast. */
+  def withinStratum(ranked: DataFrame, stratum: String, cum: String,
+                    step: Column, localCol: String, totalCol: String): DataFrame = {
+    val offs = ranked.groupBy(col(stratum).as("__stratum"))
+      .agg(min(col(cum) - step).as("__soff"), sum(step).as(totalCol))
+    ranked.join(broadcast(offs), col(stratum) <=> col("__stratum"))
+      .withColumn(localCol, col(cum) - col("__soff"))
+      .drop("__stratum", "__soff")
   }
 
   /** Gopher-style integer quality rules (word-count band, mean word

@@ -201,10 +201,7 @@ object AsOfJoin {
                     payloadCols: Seq[String],
                     forward: Boolean = false): DataFrame = {
     val spark: SparkSession = left.sparkSession
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    if (!classic.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      classic.experimental.extraStrategies =
-        classic.experimental.extraStrategies :+ AsOfJoinStrategy
+    registerStrategy(spark, AsOfJoinStrategy)
     val lp = Bridge.analyzed(left)
     val rp = Bridge.analyzed(right)
     def attr(p: LogicalPlan, name: String): Attribute =

@@ -404,7 +404,7 @@ object StreamOps {
     * RSI = (10000·gain) div (gain+loss) with the same 5000 flat-frame
     * midpoint pin. O(1) state per key regardless of stream length;
     * exact integer arithmetic → replay/shard-move invariant. */
-  private class RsiProcessor(ttlMs: Long)
+  private[graft] class RsiProcessor(ttlMs: Long)
       extends org.apache.spark.sql.streaming.StatefulProcessor[String, Event, RsiOut] {
     import org.apache.spark.sql.{Encoders => E}
     @transient private var state: org.apache.spark.sql.streaming.ValueState[RsiState] = _
@@ -437,7 +437,10 @@ object StreamOps {
       })
       val buf = new Array[Long](15)
       var n = 0
-      st.buf.foreach { v => buf(n) = v; n += 1 } // ≤ 15 by invariant
+      // the newest ≤ 15 samples: a restored state written out of spec
+      // (longer than the ring) must not overflow the array and kill
+      // the query
+      st.buf.takeRight(15).foreach { v => buf(n) = v; n += 1 }
       var i = 0
       while (i < arr.length) {
         val e = arr(i)

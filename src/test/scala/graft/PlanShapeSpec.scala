@@ -673,6 +673,24 @@ class PlanShapeSpec extends SparkSpec {
   private def unpartitioned(df: org.apache.spark.sql.DataFrame): Int =
     windowNodes(df).count(_.partitionSpec.isEmpty)
 
+  /** The plan ranks through the native RankByRangeExec, and each such
+    * node reads a RangePartitioning exchange (under the partition-local
+    * sort the planner adds). Reads the adaptive plan before execution:
+    * the initial plan, exchanges inserted. */
+  private def ranksOverRangeExchange(df: org.apache.spark.sql.DataFrame): Boolean = {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    val root = df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        a.executedPlan
+      case p => p
+    }
+    val ranks = root.collect { case r: graft.plans.RankByRangeExec => r }
+    ranks.nonEmpty && ranks.forall(_.child.collectFirst {
+      case e: ShuffleExchangeExec => e.outputPartitioning
+    }.exists(_.isInstanceOf[RangePartitioning]))
+  }
+
   test("q_text_zipf: top-1000 is a TakeOrderedAndProject heap cut — zero windows anywhere") {
     val df = TextAnalysis.qTextZipf(spark, sf)
     assert(plan(df).contains("TakeOrderedAndProject"),
@@ -694,8 +712,8 @@ class PlanShapeSpec extends SparkSpec {
         "q_ts_rfm" -> TimeSeries.qTsRfm(spark, sf))) {
       assert(unpartitioned(df) == 0,
              s"$name: the per-user frame must never sort in one window task")
-      assert(windowNodes(df).nonEmpty,
-             s"$name: expected the pid-partitioned rank window to survive planning")
+      assert(ranksOverRangeExchange(df),
+             s"$name: expected RankByRangeExec over a RangePartitioning exchange")
     }
   }
 
@@ -707,8 +725,8 @@ class PlanShapeSpec extends SparkSpec {
         "q_sample_stratified" -> TextAnalysis.qSampleStratified(spark, sf))) {
       assert(unpartitioned(df) == 0,
              s"$name: the value grid / stratum frame must never sort in one window task")
-      assert(windowNodes(df).nonEmpty,
-             s"$name: expected the pid-partitioned rank window to survive planning")
+      assert(ranksOverRangeExchange(df),
+             s"$name: expected RankByRangeExec over a RangePartitioning exchange")
     }
   }
 

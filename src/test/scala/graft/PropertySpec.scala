@@ -503,6 +503,108 @@ class PropertySpec extends SparkSpec {
     assert(bad == 0, "per-stratum quota must be exact, not in-expectation")
   }
 
+  /** A session over the shared context with adaptive execution on and
+    * `parts` range partitions, un-coalesced. */
+  private def rangeSession(parts: Int) = {
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.adaptive.enabled", "true")
+    s2.conf.set("spark.sql.shuffle.partitions", parts.toString)
+    s2.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    s2
+  }
+
+  test("rankedByRange == global row_number + running sums (AQE, desc key, nulls, int+long sums, hot key, empty partitions)") {
+    import org.apache.spark.sql.expressions.Window
+    val s2 = rangeSession(64)
+    import s2.implicits._
+    // 40 rows over 64 range partitions. k = 7 is the hot key (every
+    // even id), broken by the id tiebreak; k is null on two ids; the
+    // int sum input vi is null on a quarter of the rows, on the null-k
+    // rows and on id 2 (first in the desc order), the long input vl on
+    // the three smallest ids and the null-k rows — so each order starts
+    // with a run of null sum inputs
+    val rows = (1L to 40L).map { id =>
+      val k: Option[Int] =
+        if (id % 2 == 0) Some(7) else if (id % 9 == 0) None else Some((id % 5).toInt)
+      val vi: Option[Int] =
+        if (id % 4 == 1 || id % 9 == 0 || id == 2) None else Some((id * 3 % 11).toInt - 5)
+      val vl: Option[Long] = if (id < 4 || id % 9 == 0) None else Some(id * 1000003L)
+      (id, k, vi, vl)
+    }
+    val df = rows.toDF("id", "k", "vi", "vl").repartition(3)
+    val cols = Seq("id", "r", "ci", "cl").map(col)
+    for (keys <- Seq(Seq(col("k").desc, col("id")), Seq(col("k"), col("id").desc))) {
+      val got = Util.rankedByRange(df, keys, "r", sums = Seq("vi" -> "ci", "vl" -> "cl"))
+      assert(got.queryExecution.executedPlan.toString.contains("RankByRange"),
+             "the native operator must plan")
+      assert(got.schema("ci").dataType == org.apache.spark.sql.types.LongType &&
+             got.schema("cl").dataType == org.apache.spark.sql.types.LongType)
+      val w = Window.orderBy(keys: _*)
+      val cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val ref = df.withColumn("r", row_number().over(w).cast("long"))
+        .withColumn("ci", sum(col("vi")).over(cum))
+        .withColumn("cl", sum(col("vl")).over(cum))
+      val g = got.select(cols: _*).collect().toSet
+      val want = ref.select(cols: _*).collect().toSet
+      assert(g == want, s"keys $keys: ${g.diff(want)} vs ${want.diff(g)}")
+      assert(want.exists(_.isNullAt(2)) && want.exists(_.isNullAt(3)),
+             "the fixture must exercise null-until-first-input running sums")
+    }
+    // one key tied on every row: the range exchange puts all rows in its
+    // first partition and leaves the rest empty. With a constant sum
+    // input the (rank, running sum) pairs do not depend on how the tie
+    // is broken, so they compare with the window's as a set
+    val tied = (1L to 12L).map(id => (id, 5, 3, Option.empty[Long]))
+      .toDF("id", "k", "vi", "vl").repartition(3)
+    val tg = Util.rankedByRange(tied, Seq(col("k")), "r", sums = Seq("vi" -> "ci", "vl" -> "cl"))
+    assert(tg.rdd.mapPartitions(it => Iterator(it.size)).collect().contains(0),
+           "the tied frame must leave a range partition empty")
+    val tw = Window.orderBy(col("k"))
+    val tref = tied.withColumn("r", row_number().over(tw).cast("long"))
+      .withColumn("ci", sum(col("vi")).over(tw.rowsBetween(Window.unboundedPreceding, 0)))
+      .withColumn("cl", sum(col("vl")).over(tw.rowsBetween(Window.unboundedPreceding, 0)))
+    val tc = Seq("r", "ci", "cl").map(col)
+    assert(tg.select(tc: _*).collect().toSet == tref.select(tc: _*).collect().toSet)
+    // an input with no rows: every partition is empty
+    assert(Util.rankedByRange(df.where(lit(false)), Seq(col("id")), "r",
+      sums = Seq("vi" -> "ci")).count() == 0)
+    // integral sums only, checked when the plan is built
+    intercept[IllegalArgumentException] {
+      Util.rankedByRange(df.withColumn("d", lit(1.5)), Seq(col("id")), "r",
+        sums = Seq("d" -> "cd"))
+    }
+  }
+
+  test("withinStratum == Window.partitionBy(stratum): strata whose UTF-16 and UTF-8 orders disagree, and a null stratum") {
+    import org.apache.spark.sql.expressions.Window
+    val s2 = rangeSession(8)
+    import s2.implicits._
+    // "\uFFFF" > "\uD83D\uDE00" in Java (UTF-16) order but < in Spark's
+    // UTF-8 binary order; a driver-side String sort of the strata
+    // would assign the wrong offsets, and a null stratum would throw
+    val strata = Seq(Some("\uFFFF"), Some("\uD83D\uDE00"), None, Some("a"))
+    val rows = (1L to 60L).map { id =>
+      (id, strata((id % 4).toInt), (id * 7 % 13).toInt, 1L + id % 3) }
+    val df = rows.toDF("id", "st", "v", "wt").repartition(3)
+    val r = Util.rankedByRange(df, Seq(col("st"), col("v"), col("id")), "gr",
+      sums = Seq("wt" -> "gcum"))
+    val byRank = Util.withinStratum(r, "st", "gr", lit(1L), "rk", "n")
+    val byWeight = Util.withinStratum(r, "st", "gcum", col("wt"), "cumw", "totw")
+    val p = Window.partitionBy(col("st")).orderBy(col("v"), col("id"))
+    val run = p.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val ref = df
+      .withColumn("rk", row_number().over(p).cast("long"))
+      .withColumn("n", count(lit(1)).over(Window.partitionBy(col("st"))))
+      .withColumn("cumw", sum(col("wt")).over(run))
+      .withColumn("totw", sum(col("wt")).over(Window.partitionBy(col("st"))))
+    def rowsOf(d: org.apache.spark.sql.DataFrame, c: String*) =
+      d.select((col("id") +: c.map(col)): _*).collect().toSet
+    assert(rowsOf(byRank, "rk", "n") == rowsOf(ref, "rk", "n"))
+    assert(rowsOf(byWeight, "cumw", "totw") == rowsOf(ref, "cumw", "totw"))
+    assert(byRank.count() == 60 && byRank.where(col("st").isNull).count() == 15,
+           "the null stratum must survive the offset join")
+  }
+
   test("uptime is bounded (0, 100] and active hours never exceed the span") {
     import org.apache.spark.sql.functions._
     val u = graft.ops.TimeSeries.qTsUptime(spark, sf)

@@ -1331,6 +1331,53 @@ class StreamingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     }
   }
 
+  test("restart: an out-of-spec restored RSI ring (20 samples) keeps the newest 15") {
+    // drive the processor directly against a restored state LONGER than
+    // the ring — a state written by an older or foreign build; the
+    // restore must keep the newest 15 samples instead of overflowing
+    import org.apache.spark.sql.Encoder
+    import org.apache.spark.sql.streaming._
+    val restored = (1 to 20).map(_ * 1000L).toVector
+    var held: StreamOps.RsiState = StreamOps.RsiState(restored)
+    val state = new ValueState[StreamOps.RsiState] {
+      def exists(): Boolean = held != null
+      def get(): StreamOps.RsiState = held
+      def update(v: StreamOps.RsiState): Unit = held = v
+      def clear(): Unit = held = null
+    }
+    val handle = new StatefulProcessorHandle {
+      def getValueState[T](n: String, e: Encoder[T], t: TTLConfig): ValueState[T] =
+        state.asInstanceOf[ValueState[T]]
+      def getValueState[T](n: String, t: TTLConfig)(implicit e: Encoder[T]): ValueState[T] =
+        state.asInstanceOf[ValueState[T]]
+      def getListState[T](n: String, e: Encoder[T], t: TTLConfig): ListState[T] = ???
+      def getListState[T](n: String, t: TTLConfig)(implicit e: Encoder[T]): ListState[T] = ???
+      def getMapState[K, V](n: String, k: Encoder[K], v: Encoder[V], t: TTLConfig): MapState[K, V] = ???
+      def getMapState[K, V](n: String, t: TTLConfig)(
+          implicit k: Encoder[K], v: Encoder[V]): MapState[K, V] = ???
+      def getQueryInfo(): QueryInfo = ???
+      def registerTimer(ms: Long): Unit = ???
+      def deleteTimer(ms: Long): Unit = ???
+      def listTimers(): Iterator[Long] = ???
+      def deleteIfExists(n: String): Unit = ???
+    }
+    val timers = new TimerValues {
+      def getCurrentProcessingTimeInMs(): Long = 0L
+      def getCurrentWatermarkInMs(): Long = 0L
+    }
+    val p = new StreamOps.RsiProcessor(0L)
+    p.setHandle(handle)
+    p.init(OutputMode.Append(), TimeMode.None())
+    val out = p.handleInputRows("click",
+      Iterator(ev(21, 0, value = 30.0)), timers).toList
+    val ring = (restored :+ 3000L).takeRight(15)
+    val d = ring.sliding(2).map(q => q(1) - q(0)).toSeq
+    val g = d.filter(_ > 0).sum; val l = -d.filter(_ < 0).sum
+    assert(out == List(StreamOps.RsiOut("click", 21L, (10000L * g) / (g + l))),
+           s"got $out")
+    assert(held.buf == ring, s"the saved ring must be the newest 15 samples: ${held.buf}")
+  }
+
   test("restart: semantic-index keeper vectors survive stop + resume from checkpoint") {
     import spark.implicits._
     withRocksDB {

@@ -8,7 +8,10 @@ set -e
 SF="${1:-/root/testdata/sf0.01}"
 OUT="${2:-/tmp/verify_out}"
 ONLY="${3:-}"
-CP="/root/repo/target/scala-2.13/classes:/opt/spark/jars/*"
+# the checkout this script lives in, so a second checkout verifies its
+# own classes; Spark's jars come from $SPARK_HOME
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
+CP="$ROOT/target/scala-2.13/classes:${SPARK_HOME:?set SPARK_HOME to the Spark install}/jars/*"
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic; do
@@ -28,4 +31,4 @@ fi
 SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" java $OPENS -Xmx8g \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "$CP" graft.Verify "$SF" "$OUT" ${ONLY:+"$ONLY"}
-python3 /root/repo/tools/check.py "$SF" "$OUT" ${ONLY:+"$ONLY"}
+python3 "$ROOT/tools/check.py" "$SF" "$OUT" ${ONLY:+"$ONLY"}
