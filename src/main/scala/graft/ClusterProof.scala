@@ -60,7 +60,7 @@ object ClusterProof {
     "q_source_dsv2",          // DSv2 MicroBatch/Batch source
     "q_source_dsv2_agg",
     "q_source_dsv2_limit",
-    "q_dedup_cluster",        // pointer-jumping CC over the shared pair graph
+    "q_dedup_cluster",        // union-find contraction CC over the shared pair graph
     "q_graph_cc_star",        // independent CC algorithm, same graph
     "q_graph_degree_dist",
     "q_dedup_profile",

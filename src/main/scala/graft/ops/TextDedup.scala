@@ -375,39 +375,26 @@ object TextDedup {
     * alone, so docs with an identical set (the fixture corpus averages
     * ~10 exact/shuffled dups per set; real crawl corpora behave the
     * same) need any similarity computed only once — this builder is
-    * the shared CANONICALIZE phase: per doc, the distinct w-gram hash
-    * set `ft` (sorted array<long>) and a 64-bit set id over (lang, ft).
-    *
-    * Round 14 (§1.2 per-task work + §2.3 shuffle fewer bytes): the
-    * feature array was built per doc with a per-element `transform()`
-    * lambda — INTERPRETED (the round-13 fingerprint hazard, measured 5×
-    * there) — and carried gram STRINGS through two exchanges and the
-    * reps groupBy. Features are now extracted as GRAM ROWS (codegen
-    * `explode(sequence)` + `slice` + `xxhash64`, the docGrams8 shape)
-    * and hashed to 8-byte longs AT EXTRACTION, so the per-doc set
-    * rebuild (`collect_set`), the set sort, the setid hash, and every
-    * downstream exchange operate on longs, never gram strings. The
-    * repartition(p, doc_id) parallelizes the one-file fixture scan
-    * (deterministic hash key per the §2.5 retry rule) AND makes the
-    * per-doc collect_set exchange-free (hashpartitioning(doc_id)
-    * satisfies the groupBy's clustering). A 64-bit collision could
-    * perturb one set's cardinality or one Jaccard value with
-    * probability ~|vocab|²/2⁶⁴ ≈ 1e-8 — the same envelope round 12
-    * accepted when it hashed the posting keys; the oracle gate
-    * re-proves the fixture outputs bit-exact.
+    * the shared CANONICALIZE phase: per doc, the distinct feature set
+    * `ft` (array<string>, `array_distinct` of `features`), its size
+    * `n_ft`, and a 64-bit set id = xxhash64 over (lang, sorted ft)
+    * ([[gramSetDocs]]). Every document keeps its row: for a doc with
+    * fewer than w tokens the caller's `features` yields an empty set
+    * (`n_ft` = 0), which can never pair under τ > 0.
+    * Features stay strings here; they are hashed to longs after the
+    * posting explode.
     *
     * lang folds into the set identity AND stays a posting join key:
     * the corpus' common tokens ("the", "a", ...) appear in nearly
     * every set, and an unblocked posting group over them pairs ALL
     * representatives — lang-blocking cuts those groups 5x (25x fewer
-    * joined rows). Docs with fewer than w tokens have an EMPTY feature
-    * set (the pre-rewrite `otherwise(array())` guard): they can never
-    * pair under τ > 0, so dropping their rows at extraction is
-    * result-identical.
+    * joined rows).
     *
-    * reps carries the per-set n_chars interval: a set pair whose member
-    * char ranges sit > 25 apart cannot produce any doc pair passing
-    * |dChars| <= 25 — exact interval-distance pruning at the rep level. */
+    * members = (setid, doc_id, lang, n_chars), one row per doc; reps =
+    * one row per distinct set ([[gramSetReps]]) carrying the set's
+    * n_chars interval: a set pair whose member char ranges sit > 25
+    * apart cannot produce any doc pair passing |dChars| <= 25 — exact
+    * interval-distance pruning at the rep level. */
   private def gramSetFrames(s: SparkSession, docs: DataFrame,
                             features: Column): (DataFrame, DataFrame) = {
     val d = gramSetDocs(s, docs, features)
@@ -701,7 +688,7 @@ object TextDedup {
     * lookalikes score ≤ 0.1 while true duplicates score 1.0, so shingle
     * Jaccard separates them cleanly. Same (lang, length-band) blocking
     * and bucket-and-replicate join as q_dedup_jaccard, over w=2 gram
-    * sets ([[gramSetFrames]] — codegen extraction, hashed features). */
+    * sets ([[gramSetFrames]]). */
   def qDedupNgram(s: SparkSession, sf: String): DataFrame = {
     val tk = split(col("text"), " ")
     // guard the 1-token doc: sequence(0, -1) would count DOWN in Spark
@@ -804,157 +791,28 @@ object TextDedup {
     * component, not the pairs (A≈B, B≈C ⟹ {A,B,C} is one cluster even
     * if A,C never paired).
     *
-    * Implementation: iterative min-label propagation to fixpoint —
-    * each round every node takes the min of its own and its neighbors'
-    * labels (one equi-join + partial-agg min per round; both sides
-    * hash-partitioned on the same key so AQE turns the loop joins into
-    * co-partitioned SMJ/SHJ). Rounds needed = graph eccentricity of
-    * each component's min node; near-dup components are clique-like, so
-    * 2-3 rounds close the fixture (and crawl corpora behave the same).
-    * The per-round `count` is a convergence CHECK, not a data collect —
-    * the labels never leave the cluster. At 100 TB the identical loop
-    * body runs with the alternating large-star/small-star optimization
-    * (Kiveris et al., "Connected Components in MapReduce"), which
-    * bounds rounds by O(log n) on adversarial chain graphs; the fixture
-    * shape never builds chains so plain propagation is the honest
-    * choice. Output: (doc_id, cluster_id, cluster_size) for every doc
-    * that has at least one near-dup. */
+    * Implementation: partition-local union-find contraction
+    * ([[Util.componentLabels]]): each round routes every pair to both
+    * endpoints' hash partitions, unions each partition's pairs locally
+    * (min id as root) and merges a node's roots with one groupBy; the
+    * round's own checkpoint job observes whether the result is already
+    * a star forest, so there is no separate convergence job and no
+    * session conf is touched. The fixture pair graphs close in 3 rounds.
+    * Past `graft.cc.pointerJumpMaxEdges` both-direction edges the op
+    * switches to the large/small-star fixpoint ([[starLabels]]), the
+    * path proven at sf100; both produce the component min, and the
+    * forced-path PropertySpec pins them row-identical on the fixture.
+    * Output: (doc_id, cluster_id, cluster_size) for every doc that has
+    * at least one near-dup. */
   def qDedupCluster(s: SparkSession, sf: String): DataFrame = {
     val pairs = nearDupPairGraph(s, sf)
       .select(col("a_id"), col("b_id"))
-    // loop-frame partition count sized from the measured edge count
-    // (the qGraphCcStar rule: ~250k edges per partition, clamped
-    // 8..4096) — round-8 fix of the last static repartition literal in
-    // the tree; at fixture scale this stays 8 (measured noise), at
-    // 100× it widens with the data instead of pinning
     val nPairs = pairs.count()
-    // SCALE GATE (round 9, closing the round-8 sf100 cliff): past
-    // `graft.cc.pointerJumpMaxEdges` both-direction edges (default
-    // 64M), the pointer-jump shape's standing frames — the 2|pairs|
-    // edge checkpoint plus a label side-car per round — exceed a
-    // bounded 16 GiB executor (measured: sf100's 232M-edge graph OOMs
-    // even with serialized blocks), so the op switches to the
-    // large/small-star fixpoint ([[starLabels]]), which runs sf100 in
-    // the same envelope and is BIT-EQUAL by the CrossCheck proof + the
-    // forced-path PropertySpec. Same gated-branch discipline as
-    // `a_sim_ann_ivf`'s flat-vs-IMI switch: the scale path is
-    // conf-forceable onto the fixture so it is tested, not assumed.
     val starGate = s.conf.getOption("graft.cc.pointerJumpMaxEdges")
       .map(_.toLong).getOrElse(64000000L)
-    if (2L * nPairs > starGate) {
-      val labels = starLabels(pairs)
-      val sizes = labels.groupBy(col("lab")).agg(count(lit(1)).as("cluster_size"))
-      return labels.join(sizes, "lab")
-        .select(col("id").as("doc_id"), col("lab").as("cluster_id"),
-                col("cluster_size"))
-        .orderBy("doc_id")
-    }
-    val parts = math.max(8, math.min(4096, (2L * nPairs / 250000L).toInt))
-    // localCheckpoint (NOT persist) on every loop-carried DataFrame:
-    // persist caches partitions but the LOGICAL plan still nests the
-    // full history — `labels` appears twice per round, so the analyzed
-    // tree doubles every iteration and Catalyst OOMs near round ~15.
-    // Local checkpointing truncates lineage to the materialized blocks,
-    // keeping every round's plan constant-size. SERIALIZED blocks
-    // (Util.serCheckpoint): the round-8 sf100 rung showed the
-    // deserialized edge frame (~86M row objects) alone heap-OOMs a
-    // 16 GiB JVM — as compact bytes the same frame is ~1.4 GB and
-    // spills past that, so storage memory scales with data bytes, not
-    // object count.
-    val edges = Util.serCheckpoint(pairs
-      .unionByName(pairs.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
-      .repartition(parts, col("b_id")), 2L * nPairs)
-    // the loop holds exactly ONE checkpointed label frame; its
-    // predecessor's files are dropped the moment the successor is
-    // materialized (Util.dropCheckpoint is scoped to that frame — the
-    // round-8 session-global persistent-RDD diff could unpersist a
-    // CONCURRENT query's blocks, round-9 ADVICE)
-    var labelsCkpt = Util.serCheckpoint(edges.select(col("a_id").as("id")).distinct()
-      .select(col("id"), col("id").as("lab"))
-      .repartition(parts, col("id")), 2L * nPairs)
-    var labels = labelsCkpt
-    // Every loop-carried frame below is ≤ |V| rows of two longs; gate
-    // the broadcast hint on that size ONCE (|V| is loop-invariant —
-    // labels only relabel, never grow). count() reads the checkpointed
-    // blocks, not a recompute.
-    val nNodes = labels.count()
-    def bc(df: DataFrame): DataFrame = Util.gatedBroadcast(s, df, nNodes)
-    // AQE re-plans each round's query at every localCheckpoint
-    // materialization — pure overhead on these tiny fixed-shape loop
-    // frames, so it's disabled for the loop (restored after). Measured
-    // effect is modest (~7.2 vs ~7.4 s clean): scheduling of the
-    // per-round jobs, not any single planner pass, dominates.
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqePrev = s.conf.getOption(aqeKey)
-    s.conf.set(aqeKey, "false")
-    // With AQE off, the loop's IMPLICIT shuffles (nbrMin groupBy, the
-    // label joins) fall back to spark.sql.shuffle.partitions — a
-    // core-count constant that hands each reducer |E|/cores rows at
-    // 100×: the sf100 rung heap-OOM'd exactly there (round 8). Pin the
-    // session default to the same data-sized `parts` for the loop's
-    // duration so every loop shuffle scales together; restored below.
-    val spKey = "spark.sql.shuffle.partitions"
-    val spPrev = s.conf.getOption(spKey)
-    s.conf.set(spKey, parts.toString)
-    // try/finally (round-8 ADVICE): ClusterProof/StageProbe catch
-    // per-key failures and keep running MORE keys on the same session —
-    // a mid-loop OOM must not leak loop-sized shuffle partitions and
-    // AQE=off into every subsequent query.
-    try {
-      var converged = false
-      var rounds = 0
-      // Wall time here is per-round PLANNING cost × rounds, not data:
-      // re-measured this session — loop frames at 8 vs 32 partitions are
-      // within noise (11.2 vs 11.4 s), and a double pointer-jump per
-      // round DOUBLES the time (24 s): the second jump's un-checkpointed
-      // input appears twice in the plan, so Catalyst re-plans (and the
-      // executor re-computes) the whole first jump. One jump + one
-      // localCheckpoint per round is the minimum-plan shape.
-      while (!converged && rounds < 50) { // runaway guard; pointer jumping closes in O(log diameter)
-        // step 1 — neighbor min: each node takes the min label in its
-        // closed neighborhood (one hop per round on its own — near-dup
-        // chains across the length band made that ~20 rounds at sf0.1)
-        val nbrMin = edges
-          .join(bc(labels.select(col("id").as("b_id"), col("lab"))), "b_id")
-          .groupBy(col("a_id")).agg(min(col("lab")).as("nlab"))
-          .select(col("a_id").as("id"), col("nlab"))
-        val cand = labels.join(bc(nbrMin), Seq("id"), "left")
-          .select(col("id"), col("lab").as("old"),
-                  least(col("lab"), coalesce(col("nlab"), col("lab"))).as("lab1"))
-        // step 2 — pointer jump (hash-to-min): adopt your label's label.
-        // Labels only decrease and always name a node of the same
-        // component, so the jump preserves the fixpoint (= component
-        // min) while squaring the propagation distance per round:
-        // convergence in O(log diameter) rounds instead of O(diameter).
-        val next = Util.serCheckpoint(cand
-          .join(bc(cand.select(col("id").as("lab1"), col("lab1").as("lab2"))),
-                Seq("lab1"), "left")
-          .select(col("id"), col("old"),
-                  least(col("lab1"), coalesce(col("lab2"), col("lab1"))).as("lab"))
-          .repartition(parts, col("id")), 2L * nPairs) // ONE materializing action per round; the change count below reads its blocks
-        val nChanged = next.where(col("lab") < col("old")).count()
-        // previous round's label files are dead once `next` is
-        // materialized (next is file-backed, never re-reads them);
-        // dropping them keeps loop storage at O(edges + 1 label frame)
-        Util.dropCheckpoint(labelsCkpt)
-        labelsCkpt = next
-        labels = next.select(col("id"), col("lab"))
-        converged = nChanged == 0
-        rounds += 1
-      }
-    } finally {
-      aqePrev match {
-        case Some(v) => s.conf.set(aqeKey, v)
-        case None => s.conf.unset(aqeKey)
-      }
-      spPrev match {
-        case Some(v) => s.conf.set(spKey, v)
-        case None => s.conf.unset(spKey)
-      }
-    }
-    // the edge frame served only the loop; the returned plan reads the
-    // final label files alone
-    Util.dropCheckpoint(edges)
+    val labels =
+      if (2L * nPairs > starGate) starLabels(pairs)
+      else Util.componentLabels(pairs, nPairs)
     val sizes = labels.groupBy(col("lab")).agg(count(lit(1)).as("cluster_size"))
     labels.join(sizes, "lab")
       .select(col("id").as("doc_id"), col("lab").as("cluster_id"),
@@ -1243,10 +1101,8 @@ object TextDedup {
     * (both must produce the component-min labeling of the τ=0.6
     * near-dup graph).
     *
-    * Why it matters at 100 TB: pointer-jump label propagation
-    * ([[qDedupCluster]]) needs O(graph diameter)-ish rounds and keeps
-    * a separate O(|V|) label frame joined against the full edge set
-    * each round; large/small-star rewrites the EDGE SET itself toward
+    * Why it matters at 100 TB: large/small-star rewrites the EDGE SET
+    * itself toward
     * a star per component in O(log²n) rounds on adversarial chains
     * (O(log n) in practice), each round two hash-partitioned
     * groupBy+join passes over edges — no label side-car, no broadcast
@@ -1286,10 +1142,8 @@ object TextDedup {
     * algorithms are bit-equal by the round-8 CrossCheck proof and the
     * round-9 forced-path spec). Proven at sf100 (round 8: full 5M-doc
     * pair graph + fixpoint, 1,023 s, zero OOM in the 16 GiB rung
-    * protocol) — the decisive structural property vs pointer-jumping
-    * is that NO both-directions edge materialization or label side-car
-    * frame ever exists: each round maps the oriented edge set to at
-    * most one output edge per input edge. */
+    * protocol): each round maps the oriented edge set to at most one
+    * output edge per input edge. Past 25 rounds it throws. */
   private def starLabels(pairs: DataFrame): DataFrame = {
     val s = pairs.sparkSession
     val nP = pairs.count() // cached/derived pair frame — sizes the checkpoint gate
@@ -1367,7 +1221,10 @@ object TextDedup {
       }
       var converged = false
       var rounds = 0
-      while (!converged && rounds < 25) { // O(log² n) bound; fixture closes in 2-3
+      while (!converged) { // O(log² n) rounds; the fixture closes in 2-3
+        if (rounds >= 25)
+          throw new IllegalStateException(
+            s"starLabels did not converge in $rounds rounds ($nP pairs, $nEdges edges)")
         val ls = largeStar(edges)
         val next = smallStar(ls)
         val (nNext, hNext) = sig(next) // file read, no shuffle
@@ -1912,7 +1769,7 @@ object TextDedup {
     * test that zeroes the budget never poisons later calls. */
   private val pairPackCache = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String), org.apache.spark.broadcast.Broadcast[Array[Long]]]
-  private def canonicalPairPack(s: SparkSession, sf: String, nPairs: Long)
+  private[graft] def canonicalPairPack(s: SparkSession, sf: String, nPairs: Long)
       : Option[org.apache.spark.broadcast.Broadcast[Array[Long]]] = {
     val cached = Util.purged(pairPackCache).get((s, sf))
     if (cached != null) return Some(cached)

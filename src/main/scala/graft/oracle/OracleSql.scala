@@ -2285,7 +2285,7 @@ object OracleSql {
     ORDER BY doc_id""")
 
   // q_graph_cc_star computes the identical component-min labeling by a
-  // different distributed algorithm (large/small-star vs pointer-jump)
+  // different distributed algorithm (large/small-star vs union-find contraction)
   // — one truth, two implementations, literally one oracle. (Defined
   // after qDedupCluster: object vals initialize in declaration order.)
   val qGraphCcStar: String = qDedupCluster

@@ -1125,7 +1125,12 @@ class PropertySpec extends SparkSpec {
   test("linkpred/2hop wide path: map-side pair-pack adjacency filter is row-identical to the anti-join") {
     // round 14: the pack filter IS the default (gate 0); the anti-join
     // branch (the pack-ineligible fallback) is forced by raising the
-    // gate past the fixture edge count, and both paths must agree
+    // gate past the fixture edge count, and both paths must agree.
+    // Eligibility first, so a fixture that outgrew the pack gates
+    // fails apart from a default path that stopped using the pack.
+    val nPairs = TextDedup.nearDupPairs(spark, sf).count()
+    assert(TextDedup.canonicalPairPack(spark, sf, nPairs).isDefined,
+           "the fixture pair graph is outside the pair-pack gates")
     spark.conf.set("graft.graph.wideEdges", Long.MaxValue.toString)
     val (antiLp, anti2h) = try {
       (TextDedup.qGraphLinkpred(spark, sf).collect().map(_.toString).sorted.toSeq,
@@ -1205,19 +1210,84 @@ class PropertySpec extends SparkSpec {
     } finally spark.conf.unset("graft.bpe.maxVocab")
   }
 
-  test("q_dedup_cluster scale path (forced star fixpoint) is row-identical to pointer-jump") {
+  test("q_dedup_cluster scale path (forced star fixpoint) is row-identical to union-find contraction") {
     // The past-threshold branch must be TESTED on the fixture, not
     // assumed (the a_sim_ann_ivf forced-IMI discipline): force the
     // star gate to 0 so the fixture takes the sf100 path, and compare
-    // against the default pointer-jump result row-for-row.
+    // against the default union-find contraction result row-for-row.
     val key = "graft.cc.pointerJumpMaxEdges"
     val default = TextDedup.qDedupCluster(spark, sf).collect().toSeq
     spark.conf.set(key, "0")
     try {
       val starred = TextDedup.qDedupCluster(spark, sf).collect().toSeq
       assert(starred == default,
-             "star fixpoint and pointer-jump disagree on the same pair graph")
+             "star fixpoint and union-find contraction disagree on the same pair graph")
     } finally spark.conf.unset(key)
+  }
+
+  /** Driver-side union-find: id → component min. */
+  private def referenceLabels(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.HashMap[Long, Long]()
+    def find(x0: Long): Long = {
+      var x = parent.getOrElseUpdate(x0, x0)
+      while (parent(x) != x) x = parent(x)
+      x
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    parent.keys.map(k => k -> find(k)).toMap
+  }
+
+  private def labelsOf(pairs: Seq[(Long, Long)], parts: Int, maxRounds: Int = 50)
+      : Map[Long, Long] = {
+    import spark.implicits._
+    val rows = Util.componentLabels(pairs.toDF("a_id", "b_id"), pairs.size.toLong,
+                                    parts, maxRounds).collect()
+    val m = rows.map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(m.size == rows.length, "a node has more than one label row")
+    m
+  }
+
+  /** 2,000-node path, alternating orientation: the worst case for label
+    * propagation (diameter 1,999). */
+  private val path2000: Seq[(Long, Long)] =
+    (1L until 2000L).map(i => if (i % 2 == 0) (i, i + 1) else (i + 1, i))
+
+  test("componentLabels == driver-side union-find (path, star, cliques + path, pairs, duplicates, extreme ids; 1/8/64 partitions)") {
+    val star = (1L to 250L).map(i => (i, 1000L)) ++ (1001L to 1250L).map(i => (1000L, i))
+    def clique(base: Long, k: Int) =
+      for (i <- 0 until k; j <- i + 1 until k) yield (base + i, base + j)
+    val barbell = clique(0L, 20) ++ (19L until 319L).map(i => (i, i + 1)) ++ clique(319L, 20)
+    val pairs300 = (0L until 300L).map(i => (2 * i + 7, 2 * i + 8))
+    val dups = (1L to 40L).flatMap(i => Seq((i, i + 1), (i + 1, i), (i, i + 1))) ++
+               Seq.fill(5)((500L, 600L))
+    val top = Long.MaxValue
+    val extreme = (0L until 50L).map(i => (top - i - 1, top - i)) ++
+                  Seq((top - 200L, top), (Long.MinValue, Long.MinValue + 1), (-1L, top - 300L))
+    val graphs = Seq("path" -> path2000, "star" -> star, "cliques+path" -> barbell,
+                     "isolated pairs" -> pairs300, "duplicates" -> dups,
+                     "extreme ids" -> extreme)
+    for ((name, g) <- graphs; parts <- Seq(1, 8, 64))
+      assert(labelsOf(g, parts) == referenceLabels(g), s"$name at $parts partitions")
+    // the same loop when each round checkpoints reliably (files) — the
+    // round's convergence count must survive that path too
+    spark.conf.set("graft.checkpoint.reliableMinRows", "0")
+    try assert(labelsOf(barbell, 8) == referenceLabels(barbell), "reliable checkpoints")
+    finally spark.conf.unset("graft.checkpoint.reliableMinRows")
+  }
+
+  test("componentLabels throws when the round bound trips instead of returning unconverged labels") {
+    val e = intercept[IllegalStateException](labelsOf(path2000, 8, maxRounds = 1))
+    assert(e.getMessage.contains("1 rounds") && e.getMessage.contains("1999 edges"),
+           e.getMessage)
+  }
+
+  test("q_dedup_cluster leaves the session conf untouched") {
+    val before = spark.conf.getAll
+    TextDedup.qDedupCluster(spark, sf).collect()
+    assert(spark.conf.getAll == before)
   }
 
   test("editdist pigeonhole gate: substitutions complete, ±3-char shifts covered, 1-char-indel residue pinned") {

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 /** Cross-algorithm consistency check (diagnostic, src/test):
-  * `q_dedup_cluster` (pointer-jump label propagation) and
+  * `q_dedup_cluster` (partition-local union-find contraction) and
   * `q_graph_cc_star` (large-star/small-star) implement the same
   * component-min labeling contract with disjoint algorithms — at any
   * scale their outputs must be row-identical. Used for the round-5 sf1
