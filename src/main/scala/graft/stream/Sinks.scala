@@ -3,6 +3,7 @@ package graft.stream
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.Row
+import graft.io.{NioLocalFileSystem, NioLocalFs}
 
 /** Micro-batch sink boundary (SURVEY.md §2.1 row 6 / §7.4 "ClickHouse
   * sink"): the engine's streaming queries end in `foreachBatch` against
@@ -24,10 +25,14 @@ trait BatchSink extends Serializable {
 
 /** Append each micro-batch as parquet files under `outDir` — the
   * sandbox-testable implementation (covered by StreamingSpec's
-  * foreachBatch round-trip). */
+  * foreachBatch round-trip). The write binds `file:` paths to
+  * [[graft.io.NioLocalFileSystem]] through its own options
+  * ([[Sinks.localWriteOptions]]), so only this write's Hadoop conf sees
+  * the binding; other paths ignore it. A session that names its own
+  * `fs.file.impl` keeps it. */
 final class ParquetAppendSink(outDir: String) extends BatchSink {
   override def write(batch: DataFrame, batchId: Long): Unit =
-    batch.write.mode("append").parquet(outDir)
+    batch.write.mode("append").options(Sinks.localWriteOptions(batch)).parquet(outDir)
 }
 
 /** Idempotent-by-batchId parquet sink — each micro-batch owns the
@@ -36,10 +41,13 @@ final class ParquetAppendSink(outDir: String) extends BatchSink {
   * commit) replaces its own previous output instead of appending a
   * duplicate. This is the checkpointed-batchId exactly-once recipe the
   * [[BatchSink]] contract describes; readers see the union via plain
-  * partition discovery on `outDir`. */
+  * partition discovery on `outDir`. Like [[ParquetAppendSink]], the
+  * write binds `file:` to [[graft.io.NioLocalFileSystem]] for itself
+  * only. */
 final class IdempotentParquetSink(outDir: String) extends BatchSink {
   override def write(batch: DataFrame, batchId: Long): Unit =
-    batch.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+    batch.write.mode("overwrite").options(Sinks.localWriteOptions(batch))
+      .parquet(s"$outDir/batch=$batchId")
 }
 
 /** JDBC binding of the same seam — Spark's built-in JDBC source,
@@ -102,15 +110,52 @@ final class JdbcIdempotentSink(url: String, table: String,
 }
 
 object Sinks {
+  /** Session confs that [[sinkTo]] sets when they are unset. */
+  private[graft] val sessionDefaults: Seq[(String, String)] = Seq(
+    "fs.AbstractFileSystem.file.impl" -> classOf[NioLocalFs].getName,
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
+
+  /** Options of one parquet write of `batch` that bind `file:` to
+    * [[graft.io.NioLocalFileSystem]], unless its session names its own
+    * `fs.file.impl`. Without the cache flag, the JVM-wide `FileSystem`
+    * cache would return the `file:` instance built when the session
+    * started. */
+  private[stream] def localWriteOptions(batch: DataFrame): Map[String, String] =
+    if (userSet(batch.sparkSession.conf.getAll, "fs.file.impl")) Map.empty
+    else Map("fs.file.impl" -> classOf[NioLocalFileSystem].getName, "fs.file.impl.disable.cache" -> "true")
+
+  /** A Hadoop key is the user's when the session sets it directly or
+    * through Spark's `spark.hadoop.` prefix. */
+  private def userSet(set: Map[String, String], k: String): Boolean =
+    set.contains(k) || set.contains(s"spark.hadoop.$k")
+
   /** Bind a streaming DataFrame to a [[BatchSink]] with checkpointed
-    * progress — the single entry point all sink variants share. */
+    * progress — the single entry point all sink variants share.
+    *
+    * Session effect: each key of [[sessionDefaults]] that the session
+    * leaves unset is set on `df.sparkSession`. `fs.AbstractFileSystem.file.impl`
+    * binds `file:` `FileContext`s to [[graft.io.NioLocalFs]]. The offset
+    * log, the commit log and the RocksDB state-store files are all
+    * written through a `FileContext` built from the session's Hadoop
+    * conf, and Hadoop's stock local binding, without libhadoop, spawns a
+    * `chmod`, `ls` or `readlink` process for each file it creates or
+    * inspects. The files, permissions and checksums stay the same.
+    * `...rocksdb.changelogCheckpointing.enabled` shortens the other
+    * half of each commit: a state-store commit writes one changelog
+    * file per partition and leaves snapshots to the maintenance thread.
+    * Checkpoints restart across either setting. To keep Spark's defaults, set the keys yourself (on the
+    * session, or as `spark.hadoop.<key>`). */
   def sinkTo(df: DataFrame, sink: BatchSink,
-             checkpoint: String): DataStreamWriter[Row] =
+             checkpoint: String): DataStreamWriter[Row] = {
+    val conf = df.sparkSession.conf
+    val set = conf.getAll
+    sessionDefaults.foreach { case (k, v) => if (!userSet(set, k)) conf.set(k, v) }
     df.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         sink.write(batch, batchId)
       }
+  }
 
   /** BATCH entry of the SAME seam (round-13: the sink trait was wired
     * to foreachBatch only; one-shot jobs wrote parquet directly and a

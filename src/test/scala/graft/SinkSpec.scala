@@ -74,4 +74,64 @@ class SinkSpec extends SparkSpec {
     assert(back2.count() == sample.count(),
       "re-run one-shot JDBC write must replace, not append")
   }
+
+  private val ckptImplKey = "fs.AbstractFileSystem.file.impl"
+
+  /** Bytes written so far through graft.io's file system, JVM-wide. */
+  @annotation.nowarn("cat=deprecation")
+  private def nioBytesWritten: Long = org.apache.hadoop.fs.FileSystem
+    .getStatistics("file", classOf[graft.io.NioRawLocalFileSystem]).getBytesWritten
+
+  /** The `FileContext` class the session's streaming checkpoints at `dir` get. */
+  private def checkpointFs(s: org.apache.spark.sql.SparkSession, dir: String) =
+    org.apache.hadoop.fs.FileContext.getFileContext(new java.io.File(dir).toURI,
+      s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.newHadoopConf())
+      .getDefaultFileSystem
+
+  test("sinkTo's session effect: exactly its defaults are added, checkpoints bind NioLocalFs, sink output keeps its .crc") {
+    val s = spark.newSession() // the shared session already ran sinkTo
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_sink_effect").toString
+    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)](s)
+    val before = s.conf.getAll
+    val w = Sinks.sinkTo(in.toDF().toDF("n_nationkey", "n_name"),
+      new IdempotentParquetSink(s"$dir/out"), s"$dir/ckpt")
+    val after = s.conf.getAll
+    assert(after.keySet -- before.keySet == Sinks.sessionDefaults.map(_._1).toSet,
+      s"sinkTo added ${after.keySet -- before.keySet}")
+    assert(after == before ++ Sinks.sessionDefaults, "sinkTo changed a conf the session had set")
+    assert(checkpointFs(s, s"$dir/ckpt").isInstanceOf[graft.io.NioLocalFs])
+
+    val rows = (1L to 20L).map(i => (i, s"n$i"))
+    val written = nioBytesWritten
+    val q = w.start()
+    try { in.addData(rows: _*); q.processAllAvailable() } finally q.stop()
+    assert(nioBytesWritten > written, "the sink's parquet write runs on NioLocalFileSystem")
+    val files = java.nio.file.Files.list(java.nio.file.Paths.get(s"$dir/out/batch=0"))
+      .toArray.map(_.toString.split('/').last).toSet
+    val parts = files.filter(f => f.startsWith("part-") && f.endsWith(".parquet"))
+    assert(parts.nonEmpty && parts.forall(f => files.contains(s".$f.crc")) && files.contains("._SUCCESS.crc"),
+      s"every sink file keeps its .crc sibling: $files")
+    val back = s.read.parquet(s"$dir/out").select("n_nationkey", "n_name").as[(Long, String)]
+      .collect().sorted.toSeq
+    assert(back == rows)
+  }
+
+  test("a binding the user set beforehand stays: sinkTo leaves it, the parquet sinks write on it") {
+    val s = spark.newSession()
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_sink_optout").toString
+    s.conf.set(ckptImplKey, "org.apache.hadoop.fs.local.LocalFs")
+    s.conf.set("fs.file.impl", "org.apache.hadoop.fs.LocalFileSystem")
+    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)](s)
+    val before = s.conf.getAll
+    Sinks.sinkTo(in.toDF(), new ParquetAppendSink(s"$dir/out"), s"$dir/ckpt")
+    assert(s.conf.getAll == before ++ Sinks.sessionDefaults.filter(_._1 != ckptImplKey))
+    assert(checkpointFs(s, s"$dir/ckpt").isInstanceOf[org.apache.hadoop.fs.local.LocalFs])
+    val written = nioBytesWritten
+    Seq(new ParquetAppendSink(s"$dir/out"), new IdempotentParquetSink(s"$dir/idem"))
+      .foreach(Sinks.writeOnce(Seq((1L, "a")).toDF(), _))
+    assert(nioBytesWritten == written, "a session's own fs.file.impl keeps the sinks off NioLocalFileSystem")
+    assert(s.read.parquet(s"$dir/out").count() == 1)
+  }
 }

@@ -1643,4 +1643,55 @@ class StreamingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       } finally q.stop()
     } }
   }
+
+  // ---- checkpoint compatibility across the local file binding ----
+  //
+  // Sinks.sinkTo binds the session's `file:` FileContext to
+  // graft.io.NioLocalFs (and sets its other session defaults). A
+  // checkpoint written before that binding existed must restart under
+  // it, and one written under it must restart on an engine without it.
+
+  /** Runs `interarrival` over five fixed batches in legs: each leg is
+    * (batches, through `Sinks.sinkTo`?), stopped and restarted on one
+    * checkpoint. A plain leg runs with the session defaults unset, as an
+    * engine without them would. Returns the sink's rows, sorted. */
+  private def interarrivalLegs(legs: Seq[(Int, Boolean)]): Seq[(Long, String, Long, Long, Boolean)] = {
+    val s = spark.newSession()
+    import s.implicits._
+    s.conf.set(providerKey, "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val dir = java.nio.file.Files.createTempDirectory("graft_rst_binding").toString
+    val ckpt = s"$dir/ckpt"
+    val sink = new graft.stream.IdempotentParquetSink(s"$dir/out")
+    val in = MemoryStream[Event](s)
+    val batches = (0 until 5).map { b =>
+      (0 until 6).map(i => ev(b * 10L + i, b * 45L + i * 7L, user = i % 3, typ = Seq("click", "view")(i % 2)))
+    }
+    val df = StreamOps.interarrival(in.toDS()).toDF()
+    var next = 0
+    legs.foreach { case (n, viaSinkTo) =>
+      val w =
+        if (viaSinkTo) graft.stream.Sinks.sinkTo(df, sink, ckpt)
+        else {
+          graft.stream.Sinks.sessionDefaults.foreach { case (k, _) => s.conf.unset(k) }
+          df.writeStream.option("checkpointLocation", ckpt)
+            .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) => sink.write(b, id))
+        }
+      val q = w.outputMode(OutputMode.Append).start()
+      try batches.slice(next, next + n).foreach { b => in.addData(b: _*); q.processAllAvailable() }
+      finally q.stop()
+      next += n
+    }
+    assert(next == batches.size)
+    s.read.parquet(s"$dir/out").drop("batch")
+      .as[(Long, String, Long, Long, Boolean)].collect().sorted.toSeq
+  }
+
+  test("restart: a checkpoint survives the move to sinkTo's binding and the move back") {
+    withRocksDB {
+      val whole = interarrivalLegs(Seq(5 -> true))
+      assert(whole.size == 24, s"five batches of six events over six streams: $whole")
+      assert(interarrivalLegs(Seq(3 -> false, 2 -> true)) == whole, "default binding, then sinkTo")
+      assert(interarrivalLegs(Seq(3 -> true, 2 -> false)) == whole, "sinkTo, then default binding")
+    }
+  }
 }
