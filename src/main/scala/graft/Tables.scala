@@ -2,49 +2,78 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Fixture-table load recipes (SURVEY.md §1.2).
   *
-  * The only non-trivial load is `events`: its `ts` column is parquet
-  * TIMESTAMP(NANOS), which Spark 4.x refuses outright
-  * ([PARQUET_TYPE_ILLEGAL]). We read it as a raw long
-  * (`spark.sql.legacy.parquet.nanosAsLong=true`) and truncate ns→µs with
-  * INTEGER division — `ts div 1000` — matching DuckDB's internal µs
-  * truncation exactly. (A double-based `col/1000` would lose precision:
-  * 2024 epochs are ~1.7e18 ns, beyond double's 2^53 integer range, and
-  * round-trips off by ±1µs for a noticeable fraction of rows.)
+  * Each fixture file's schema is inferred once per (session, path).
+  * Parquet inference runs a Spark job (footer reads), so every later
+  * read of the same file in the session passes the recorded schema to
+  * `spark.read.schema(..)` and plans with no job. The record also holds
+  * the file's row count once [[rowCount]] asks for it. Keyed by session
+  * because the inferred types follow session confs (`nanosAsLong`,
+  * `inferTimestampNTZ`), and so a fresh session never reuses a stopped
+  * session's state.
+  *
+  * `events.ts` always reads as TIMESTAMP, whatever the file stores:
+  *   - TIMESTAMP(NANOS), which Spark 4.x refuses outright
+  *     ([PARQUET_TYPE_ILLEGAL]), is read as a raw long
+  *     (`spark.sql.legacy.parquet.nanosAsLong=true`) and truncated ns→µs
+  *     with INTEGER division — `ts div 1000` — matching DuckDB's internal
+  *     µs truncation exactly. (A double-based `col/1000` would lose
+  *     precision: 2024 epochs are ~1.7e18 ns, beyond double's 2^53
+  *     integer range, and round-trip off by ±1µs for a noticeable
+  *     fraction of rows.)
+  *   - TIMESTAMP(MICROS) without UTC adjustment reads as TIMESTAMP_NTZ
+  *     when the session leaves `spark.sql.parquet.inferTimestampNTZ.enabled`
+  *     at its default of true. It is cast to TIMESTAMP; the session time
+  *     zone is UTC, so the micros are unchanged.
   */
 object Tables {
-  /** Runtime confs every session needs before the first `events` read. */
+  /** Runtime confs every session needs before the first `events` read.
+    *
+    * Session effect: it also registers [[graft.plans.SmallSortStrategy]]
+    * on the session's planner, so from then on every global sort over a
+    * small input in this session sorts in one partition (opt out with
+    * `spark.sql.adaptive.coalescePartitions.minPartitionSize=1b`). */
   def configure(spark: SparkSession): Unit = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    graft.plans.registerStrategy(spark, graft.plans.SmallSortStrategy)
+  }
+
+  /** One fixture file as a session knows it: the schema inferred at the
+    * first read, and the row count — the stand-in for catalog statistics
+    * (a real deployment reads these from the metastore, not by
+    * re-scanning) that the size-gated broadcast sites derive their
+    * estRows from. A parquet count() is metadata-cheap but still a job. */
+  private final class Fixture(spark: SparkSession, path: String) {
+    val schema: StructType = spark.read.parquet(path).schema
+    def read: DataFrame = spark.read.schema(schema).parquet(path)
+    lazy val rows: Long = read.count()
+  }
+
+  private val fixtures =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Fixture]
+
+  private def fixture(spark: SparkSession, sfDir: String, name: String): Fixture = {
+    configure(spark)
+    val path = s"$sfDir/$name.parquet"
+    fixtures.computeIfAbsent((spark, path), _ => new Fixture(spark, path))
   }
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    configure(spark)
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
-    // Driver fixture sets store ts as TIMESTAMP(NANOS) → read as raw
-    // ns longs (nanosAsLong) and µs-truncate; the locally generated
-    // sf1 set already stores TIMESTAMP(µs) (Spark can't write nanos),
-    // which reads as a timestamp directly — same values either way.
-    if (name == "events" &&
-        df.schema("ts").dataType == org.apache.spark.sql.types.LongType)
-      df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    else df
+    val df = fixture(spark, sfDir, name).read
+    if (name != "events") df
+    else df.schema("ts").dataType match {
+      case LongType => df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+      case TimestampNTZType => df.withColumn("ts", col("ts").cast(TimestampType))
+      case _ => df
+    }
   }
 
-  /** Session-scoped fixture row counts — the stand-in for catalog
-    * statistics (a real deployment reads these from the metastore, not
-    * by re-scanning). Used by the size-gated broadcast sites to derive
-    * their estRows: a parquet count() is metadata-cheap but still a
-    * job, and every gated operator re-paying it per invocation is pure
-    * overhead. Keyed by (session, sfDir, table) so a fresh session
-    * never reuses a stopped session's state. */
-  private val countCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), Long]
   def rowCount(s: SparkSession, sf: String, name: String): Long =
-    countCache.computeIfAbsent((s, sf, name), _ => table(s, sf, name).count())
+    fixture(s, sf, name).rows
 
   def lineitem(s: SparkSession, sf: String): DataFrame = table(s, sf, "lineitem")
   def orders(s: SparkSession, sf: String): DataFrame   = table(s, sf, "orders")

@@ -37,11 +37,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
      })
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // whole-operator strategies (graft.plans.AsOfJoin, RankByRange) —
-    // fleet-wide activation via config; the DataFrame helpers also
-    // register them lazily per session, so either path works
+    // planner strategies (graft.plans.AsOfJoin, RankByRange, SmallSort)
+    // — fleet-wide activation via config; the DataFrame helpers and
+    // Tables.configure also register them lazily per session, so either
+    // path works
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     ext.injectPlannerStrategy(_ => graft.plans.RankByRangeStrategy)
+    ext.injectPlannerStrategy(_ => graft.plans.SmallSortStrategy)
     ext.injectFunction(fn("graft_dot", classOf[DotProduct])(DotProduct.apply))
     ext.injectFunction(fn1("graft_bitmap_agg", classOf[BitmapBuildAgg])(
       e => BitmapBuildAgg(e).toAggregateExpression()))

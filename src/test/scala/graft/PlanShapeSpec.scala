@@ -614,9 +614,11 @@ class PlanShapeSpec extends SparkSpec {
     val p = plan(TextAnalysis.qTextChunk(spark, sf))
     assert(!p.contains("Join") && !p.contains("HashAggregate"),
            s"chunking must be pure per-row expression work:\n$p")
-    // exactly the one range-exchange the global orderBy demands
-    assert(p.split("Exchange").length - 1 == 1,
-           "chunking must not shuffle except for the presentation sort")
+    // no exchange but the presentation sort's range exchange, which a
+    // small input sorts without (SmallSortStrategy)
+    val exchanges = "Exchange \\w+".r.findAllIn(p).toSeq
+    assert(exchanges.forall(_ == "Exchange rangepartitioning") && exchanges.size <= 1,
+           s"chunking must not shuffle except for the presentation sort:\n$p")
   }
 
   test("q_sample_temperature: rate frame broadcasts — no data-sized shuffle join") {
@@ -798,4 +800,45 @@ class PlanShapeSpec extends SparkSpec {
       autoKeys.foreach(spark.conf.unset)
     }
   }
+
+  // ---- SmallSortStrategy: a global ORDER BY over an input AQE would
+  // read as one partition sorts in one partition, with no range
+  // exchange and so no range-sampling job.
+
+  test("q_win_moving_avg: the final ORDER BY sorts in one partition — no range exchange") {
+    val df = Windows.qWinMovingAvg(spark, sf)
+    df.collect() // finalize AQE before reading the plan
+    val p = df.queryExecution.executedPlan
+    assert(SmallSortPlans.rangeExchanges(p) == 0, s"range exchange left in:\n$p")
+    assert(SmallSortPlans.oneTaskSorts(p) == 1,
+           s"expected the global SortExec over CoalesceExec(1):\n$p")
+  }
+
+  test("SmallSortStrategy's gate reads the session conf: minPartitionSize=1b keeps the range exchange") {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1b")
+    val df = Windows.qWinMovingAvg(s, sf)
+    df.collect()
+    val p = df.queryExecution.executedPlan
+    assert(SmallSortPlans.rangeExchanges(p) == 1 && SmallSortPlans.oneTaskSorts(p) == 0,
+           s"the opt-out must plan Spark's range-partitioned sort:\n$p")
+  }
+}
+
+/** Plan probes for [[graft.plans.SmallSortStrategy]]; they descend
+  * into AQE query stages. */
+object SmallSortPlans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+  import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+  import org.apache.spark.sql.execution.{CoalesceExec, InputAdapter, SortExec, SparkPlan}
+  import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+
+  def rangeExchanges(p: SparkPlan): Int = collect(p) {
+    case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+  }.size
+
+  /** Global sorts whose child is one coalesced partition (behind the
+    * codegen input boundary once the stage is compiled). */
+  def oneTaskSorts(p: SparkPlan): Int = collect(p) {
+    case s @ SortExec(_, true, CoalesceExec(1, _) | InputAdapter(CoalesceExec(1, _)), _) => s
+  }.size
 }

@@ -1341,4 +1341,83 @@ class PropertySpec extends SparkSpec {
     assert(!gateHolds(a80, ins1),
            "1-char-indel pair unexpectedly PASSED: the declared band has changed — update the scaladoc")
   }
+
+  // ---- SmallSortStrategy: the one-partition sort must give exactly
+  // the rows, in exactly the order, of Spark's range-partitioned sort.
+  // The reference session turns AQE's coalescing off, which closes the
+  // strategy's gate.
+
+  private def referenceSession(): org.apache.spark.sql.SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    s
+  }
+  private def finalPlan(df: org.apache.spark.sql.DataFrame) = {
+    df.collect()
+    df.queryExecution.executedPlan
+  }
+
+  test("SmallSortStrategy: one-partition ORDER BY matches the range-partitioned sort row for row") {
+    val ds = Seq(Double.NaN, -0.0, 0.0, Double.NegativeInfinity, Double.PositiveInfinity,
+                 1.5, -1.5).map(lit) :+ lit(null)
+    // non-BMP code points sort after U+FFFF in UTF-8 byte order
+    val ss = Seq("a", "\uD83D\uDE00", "\uFFFF", "\u00E9", "", "\uD800\uDC00z",
+                 "\uD83D\uDE00a").map(lit) :+ lit(null)
+    def pick(xs: Seq[org.apache.spark.sql.Column], i: org.apache.spark.sql.Column) =
+      element_at(array(xs: _*), (i % xs.size + 1).cast("int"))
+    // a range keeps an exact size estimate across 4 input partitions
+    def frame(s: org.apache.spark.sql.SparkSession) =
+      s.range(0, 997, 1, 4).select(col("id"), pick(ds, col("id")).as("d"),
+        pick(ss, col("id") * 7).as("s"),
+        when(col("id") % 11 =!= 0, col("id") % 5).as("k"))
+    val orders = Seq(
+      "d desc" -> Seq(col("d").desc, col("id")),
+      "d asc nulls last" -> Seq(col("d").asc_nulls_last, col("id")),
+      "s asc nulls first" -> Seq(col("s").asc_nulls_first, col("id")),
+      "s desc nulls last" -> Seq(col("s").desc_nulls_last, col("id").desc),
+      "k then s tie-break" -> Seq(col("k").desc_nulls_first, col("s"), col("id")))
+    val (small, ref) = (spark.newSession(), referenceSession())
+    for ((name, order) <- orders; empty <- Seq(false, true)) {
+      def q(s: org.apache.spark.sql.SparkSession) = {
+        val f = frame(s)
+        (if (empty) f.where(col("id") < 0) else f).orderBy(order: _*)
+      }
+      val (a, b) = (q(small), q(ref))
+      val pa = finalPlan(a)
+      assert(SmallSortPlans.oneTaskSorts(pa) == 1 && SmallSortPlans.rangeExchanges(pa) == 0,
+             s"$name: the small sort must run in one partition:\n$pa")
+      if (!empty) assert(SmallSortPlans.rangeExchanges(finalPlan(b)) == 1,
+             s"$name: the reference must range-partition")
+      // toString keeps -0.0 apart from 0.0, which Row equality does not
+      assert(a.collect().map(_.toString).toSeq == b.collect().map(_.toString).toSeq,
+             s"$name (empty=$empty): row order differs")
+    }
+  }
+
+  test("SmallSortStrategy: an exploding child under the gate by estimate stays row-identical") {
+    // 64 estimated rows explode to 256k (~8 MB of rows) behind a hash
+    // shuffle. The plan is chosen on the estimate; after the shuffle
+    // AQE re-plans with the real size, the sort no longer qualifies, and
+    // the re-plan's extra range exchange makes AQE keep the current plan.
+    def q(s: org.apache.spark.sql.SparkSession) =
+      s.range(0, 64).select(col("id").as("g"), explode(sequence(lit(0L), lit(3999L))).as("v"))
+        .repartition(4, col("v"))
+        .select(col("g"), col("v"), (col("g") * 31 + col("v") % 97).as("x"))
+        .orderBy(col("x").desc, col("g"), col("v"))
+    val (a, b) = (q(spark.newSession()), q(referenceSession()))
+    assert(a.queryExecution.optimizedPlan.stats.sizeInBytes < BigInt(1L << 20))
+    val pa = finalPlan(a)
+    assert(SmallSortPlans.oneTaskSorts(pa) == 1 && SmallSortPlans.rangeExchanges(pa) == 0, s"$pa")
+    val shuffled = SmallSortPlans.collect(pa) {
+      case st: org.apache.spark.sql.execution.adaptive.ShuffleQueryStageExec =>
+        st.getRuntimeStatistics.sizeInBytes
+    }
+    assert(shuffled.sum > BigInt(1L << 20), s"runtime input only ${shuffled.sum} B")
+    def digest(df: org.apache.spark.sql.DataFrame): (Long, Long) =
+      df.rdd.zipWithIndex().map { case (r, i) =>
+        (1L, (r.getLong(0) * 1000003L + r.getLong(1)) * (i + 1))
+      }.reduce((x, y) => (x._1 + y._1, x._2 + y._2))
+    val (da, db) = (digest(a), digest(b))
+    assert(da == db && da._1 == 64L * 4000L, s"$da vs $db")
+  }
 }

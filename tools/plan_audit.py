@@ -7,6 +7,9 @@ For every <key>.txt (explain-formatted) in the given directory, extract:
   - Window nodes and whether any has an EMPTY partition spec (the
     "No Partition Defined" single-task shape — must be zero)
   - scan count, and whether any scan carries PushedFilters
+  - range exchanges (each one pays a RangePartitioner sampling job)
+    and one-partition global sorts (a global Sort over Coalesce 1,
+    graft.plans.SmallSortStrategy's shape: no exchange, no sampling)
 
 Usage: plan_audit.py <plans_dir> [--csv out.csv]
 """
@@ -39,9 +42,24 @@ def audit(path):
                 depth -= 1
         if groups < 3:
             unpart += 1
+    # operator details blocks: "(N) Op ...\nInput ...\nArguments: ..."
+    args = {int(m.group(1)): (m.group(2).split()[0], m.group(3) or "")
+            for m in re.finditer(
+                r"^\((\d+)\) (.+)\n(?:(?!\(\d+\) |Arguments: ).*\n)*(?:Arguments: (.*))?",
+                txt, re.M)}
+    n_range = sum(1 for op, a in args.values()
+                  if op == "Exchange" and a.startswith("rangepartitioning"))
+    # tree lines in pre-order: a unary node's child is the next line
+    tree = [int(i) for i in re.findall(
+        r"^[\s:+\-]*[A-Za-z][^\n(]*? \((\d+)\)$", txt, re.M)]
+    one_task = sum(1 for a, b in zip(tree, tree[1:])
+                   if args.get(a, ("", ""))[0] == "Sort"
+                   and args[a][1].endswith(", true, 0")
+                   and args.get(b) == ("Coalesce", "1"))
     return dict(exchanges=n_exch, bcast=n_bexch, joins="+".join(joins),
                 scans=n_scan, pushed=pushed,
-                windows=n_win, unpartitioned_windows=unpart)
+                windows=n_win, unpartitioned_windows=unpart,
+                range_exchanges=n_range, one_task_sorts=one_task)
 
 def main():
     d = sys.argv[1]
@@ -57,7 +75,7 @@ def main():
         with open(out, "w", newline="") as fh:
             w = csv.DictWriter(fh, fieldnames=["key", "exchanges", "bcast",
                 "joins", "scans", "pushed", "windows",
-                "unpartitioned_windows"])
+                "unpartitioned_windows", "range_exchanges", "one_task_sorts"])
             w.writeheader(); w.writerows(rows)
         print(f"wrote {out} ({len(rows)} keys)")
     flagged = [r for r in rows if r["unpartitioned_windows"] > 0
@@ -67,6 +85,10 @@ def main():
     for r in flagged:
         print(f"  {r['key']}: joins={r['joins']} unpart_windows="
               f"{r['unpartitioned_windows']}")
+    ranged = [r["key"] for r in rows if r["range_exchanges"] > 0]
+    print(f"{sum(r['one_task_sorts'] > 0 for r in rows)} plans sort globally in "
+          f"one partition; {len(ranged)} still range-partition (a sampling "
+          f"job each): {' '.join(ranged)}")
     top = sorted(rows, key=lambda r: -r["exchanges"])[:15]
     print("most exchanges:")
     for r in top:
