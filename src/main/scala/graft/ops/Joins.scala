@@ -138,21 +138,24 @@ object Joins {
     * the same user closest in time in EITHER direction (backward wins
     * ties) — the TSDB "nearest sample" semantic, vs `q_join_asof`'s
     * strictly-backward LOCF. Same shape: ONE (user_id) window shuffle,
-    * two frame passes (last-preceding / first-following error, both
-    * IGNORE NULLS), no self-join; the |Δt| comparison runs in exact
+    * two running-frame passes (last error before, in ascending and in
+    * descending order, IGNORE NULLS), no self-join; the |Δt| comparison runs in exact
     * integer microseconds. prev/next id+ts come from separate window
     * columns but always the same row — they are non-null exactly on
     * error rows. */
   def qJoinAsofNearest(s: SparkSession, sf: String): DataFrame = {
-    val order = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    val back = order.rowsBetween(Window.unboundedPreceding, -1)
-    val fwd = order.rowsBetween(1, Window.unboundedFollowing)
+    // The next error is the last one seen walking the user's events
+    // backwards: a running frame, linear in the user's event count, where
+    // a forward frame to unboundedFollowing is quadratic.
+    val byUser = Window.partitionBy("user_id")
+    val back = byUser.orderBy(col("ts"), col("event_id")).rowsBetween(Window.unboundedPreceding, -1)
+    val fwd = byUser.orderBy(col("ts").desc, col("event_id").desc).rowsBetween(Window.unboundedPreceding, -1)
     def errCol(c: Column) = when(col("event_type") === "error", c)
     val withNbrs = Tables.events(s, sf)
       .withColumn("p_ts", last(errCol(col("ts")), ignoreNulls = true).over(back))
       .withColumn("p_id", last(errCol(col("event_id")), ignoreNulls = true).over(back))
-      .withColumn("n_ts", first(errCol(col("ts")), ignoreNulls = true).over(fwd))
-      .withColumn("n_id", first(errCol(col("event_id")), ignoreNulls = true).over(fwd))
+      .withColumn("n_ts", last(errCol(col("ts")), ignoreNulls = true).over(fwd))
+      .withColumn("n_id", last(errCol(col("event_id")), ignoreNulls = true).over(fwd))
       .where(col("event_type") === "click")
     val dPrev = unix_micros(col("ts")) - unix_micros(col("p_ts"))
     val dNext = unix_micros(col("n_ts")) - unix_micros(col("ts"))

@@ -231,7 +231,8 @@ object TimeSeries {
     *
     * Shape: one hash agg, a broadcast bounds×users spine, and TWO
     * passes of one (user)-partitioned window (prev/next non-null via
-    * IGNORE NULLS last/first) — no self-join, no per-gap search. The
+    * IGNORE NULLS last over running frames, ascending and descending)
+    * — no self-join, no per-gap search. The
     * per-user partition is exactly how this distributes at scale;
     * interp math runs on identical IEEE inputs on both engines. */
   def qTsInterpolate(s: SparkSession, sf: String): DataFrame = {
@@ -244,14 +245,18 @@ object TimeSeries {
       .crossJoin(broadcast(bounds))
       .select(col("user_id"),
               explode(sequence(col("lo"), col("hi"), expr("INTERVAL 1 HOUR"))).as("bucket"))
-    val w = Window.partitionBy("user_id").orderBy(col("bucket"))
-    val wPrev = w.rowsBetween(Window.unboundedPreceding, 0)
-    val wNext = w.rowsBetween(0, Window.unboundedFollowing)
+    // Both neighbours come from running frames, one per direction: the
+    // next non-null is the last one seen walking the buckets backwards.
+    // A forward frame to unboundedFollowing re-aggregates to the end of
+    // the partition from every row, which is quadratic per user.
+    val byUser = Window.partitionBy("user_id")
+    val wPrev = byUser.orderBy(col("bucket")).rowsBetween(Window.unboundedPreceding, 0)
+    val wNext = byUser.orderBy(col("bucket").desc).rowsBetween(Window.unboundedPreceding, 0)
     axis.join(hourly, Seq("user_id", "bucket"), "left")
       .withColumn("pv", last(col("v"), ignoreNulls = true).over(wPrev))
       .withColumn("pb", last(when(col("v").isNotNull, col("bucket")), ignoreNulls = true).over(wPrev))
-      .withColumn("nv", first(col("v"), ignoreNulls = true).over(wNext))
-      .withColumn("nb", first(when(col("v").isNotNull, col("bucket")), ignoreNulls = true).over(wNext))
+      .withColumn("nv", last(col("v"), ignoreNulls = true).over(wNext))
+      .withColumn("nb", last(when(col("v").isNotNull, col("bucket")), ignoreNulls = true).over(wNext))
       .withColumn("interp",
         when(col("v").isNotNull, col("v"))
           .when(col("pv").isNull, col("nv"))

@@ -1367,17 +1367,22 @@ object StreamOps {
     * AQE broadcast-converts small change batches against the big base
     * (same plan as q_upsert_snapshot). */
   def cdcUpsert(changes: DataFrame, snapshotDir: String,
-                checkpoint: String): DataStreamWriter[Row] =
+                checkpoint: String): DataStreamWriter[Row] = {
+    val writer = new Sinks.ParquetWriter
     changes.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyCdcBatch(batch, batchId, snapshotDir)
+        applyCdcBatch(batch, batchId, snapshotDir, writer)
       }
+  }
 
   /** The batch-form merge `cdcUpsert` runs per micro-batch — public so
     * a batch backfill can apply the identical merge rule. */
-  def applyCdcBatch(batch: DataFrame, batchId: Long,
-                    snapshotDir: String): Unit = {
+  def applyCdcBatch(batch: DataFrame, batchId: Long, snapshotDir: String): Unit =
+    applyCdcBatch(batch, batchId, snapshotDir, new Sinks.ParquetWriter)
+
+  private def applyCdcBatch(batch: DataFrame, batchId: Long, snapshotDir: String,
+                            writer: Sinks.ParquetWriter): Unit = {
     val dir = new java.io.File(snapshotDir)
     val old = new java.io.File(snapshotDir + "_old")
     def rm(f: java.io.File): Unit = {
@@ -1418,7 +1423,7 @@ object StreamOps {
     // away; then the three-step swap above's counterpart — at every
     // point a complete snapshot exists as either `dir` or `_old`.
     val tmp = new java.io.File(snapshotDir + s"_tmp$batchId")
-    merged.write.mode("overwrite").parquet(tmp.getPath)
+    writer.write(merged, tmp.getAbsoluteFile.getParent, tmp.getName, replace = true)
     if (dir.exists())
       require(dir.renameTo(old), s"snapshot swap failed: $dir -> $old")
     require(tmp.renameTo(dir), s"snapshot swap failed: $tmp -> $dir")

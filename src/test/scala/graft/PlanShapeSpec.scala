@@ -311,7 +311,10 @@ class PlanShapeSpec extends SparkSpec {
     * key was individually audited (round-5 plan audit) and carries the
     * justification at its crossJoin site. Any future query that drifts
     * into a nested-loop or cartesian plan fails HERE, not in a
-    * 100×-scale outage. */
+    * 100×-scale outage. The same pass fails any window frame that runs
+    * from a row (not the partition start) to UNBOUNDED FOLLOWING: Spark
+    * re-aggregates such a frame from every row, quadratic per partition;
+    * the descending running frame gives the same answer in one pass. */
   test("plan-health sweep: no cartesian/nested-loop outside declared twins + constant-side crossJoins") {
     val quadraticTwins = Set("q_sim_knn_join", "q_dedup_embed")
     val constSideCrossJoin = Set(
@@ -348,18 +351,33 @@ class PlanShapeSpec extends SparkSpec {
       "q_ts_hampel", "q_ts_kendall_tau", "q_win_rank_change",
       // the DECLARED cross-join op (constant-size dim × dim)
       "q_join_cross")
+    import org.apache.spark.sql.catalyst.expressions.{SpecifiedWindowFrame, UnboundedFollowing,
+      UnboundedPreceding}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    // A frame from a row to the end of its partition is re-aggregated
+    // from every row: quadratic in the partition's size.
+    def quadraticFrames(plan: org.apache.spark.sql.execution.SparkPlan): Seq[String] = {
+      val initial = plan match { case a: AdaptiveSparkPlanExec => a.inputPlan; case p => p }
+      initial.collectWithSubqueries { case w: WindowExec => w.windowExpression }.flatten.flatMap {
+        _.collect { case f @ SpecifiedWindowFrame(_, lower, UnboundedFollowing)
+                      if lower != UnboundedPreceding => f.sql }
+      }.distinct
+    }
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, _) if quadraticTwins(name) => None
+      case (name, _) if quadraticTwins(name) => Nil
       case (name, fn) =>
-        val p = fn(spark, sf).queryExecution.executedPlan.toString
+        val plan = fn(spark, sf).queryExecution.executedPlan
+        val p = plan.toString
+        val frames = quadraticFrames(plan).map(f => s"$name: window frame $f")
         if (p.contains("CartesianProduct"))
-          Some(s"$name: CartesianProduct")
+          s"$name: CartesianProduct" +: frames
         else if (p.contains("BroadcastNestedLoopJoin") && !constSideCrossJoin(name))
-          Some(s"$name: BroadcastNestedLoopJoin")
-        else None
+          s"$name: BroadcastNestedLoopJoin" +: frames
+        else frames
     }
     assert(offenders.isEmpty,
-           s"nested-loop/cartesian plans leaked into:\n${offenders.mkString("\n")}")
+           s"nested-loop/cartesian plans or quadratic window frames leaked into:\n${offenders.mkString("\n")}")
   }
 
   test("q_dedup_cluster + q_graph_pagerank are correct on the shuffle fallback path") {

@@ -1,6 +1,12 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.graftspec.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.stream.{IdempotentParquetSink, JdbcAppendSink, JdbcIdempotentSink,
                      ParquetAppendSink, Sinks}
 
@@ -133,5 +139,115 @@ class SinkSpec extends SparkSpec {
       .foreach(Sinks.writeOnce(Seq((1L, "a")).toDF(), _))
     assert(nioBytesWritten == written, "a session's own fs.file.impl keeps the sinks off NioLocalFileSystem")
     assert(s.read.parquet(s"$dir/out").count() == 1)
+  }
+
+  private def tmpDir(prefix: String) = java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Every file and directory name under `dir`. */
+  private def tree(dir: String): Seq[String] = {
+    val it = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try it.toArray.map(_.toString.stripPrefix(dir)).toSeq finally it.close()
+  }
+
+  /** `a` and `b` read back with one schema and the same rows, compared
+    * as strings, which keep -0.0 apart from 0.0 and NaN equal to NaN. */
+  private def sameParquet(a: String, b: String): Unit = {
+    val (ra, rb) = (spark.read.parquet(a), spark.read.parquet(b))
+    assert(ra.schema == rb.schema)
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(rows(ra) == rows(rb))
+  }
+
+  test("parquet sink round trip equals the DataFrameWriter twin: nulls, NaN, ±0.0, non-BMP, decimals, timestamps") {
+    val schema = StructType(Seq(
+      StructField("id", LongType), StructField("d", DoubleType), StructField("s", StringType),
+      StructField("dec9", DecimalType(9, 2)), StructField("dec38", DecimalType(38, 18)),
+      StructField("ts", TimestampType)))
+    def dec(v: String) = new java.math.BigDecimal(v)
+    val rows = Seq(
+      Row(1L, Double.NaN, "\uD83D\uDE00 grin", dec("1234567.89"), dec("12345678901234567890.123456789012345678"),
+        java.sql.Timestamp.valueOf("1969-12-31 23:59:59.999999")),
+      Row(2L, -0.0, "e\u0301", null, dec("-0.000000000000000001"), null),
+      Row(3L, 0.0, null, dec("-0.01"), null, java.sql.Timestamp.valueOf("2024-02-29 12:00:00.000001")),
+      Row(4L, null, "", dec("0.00"), dec("0"), java.sql.Timestamp.valueOf("1900-01-01 00:00:00")),
+      Row(5L, Double.NegativeInfinity, "\uD800\uDC00z", null, null, null))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+    val dir = tmpDir("graft_sink_roundtrip")
+    df.write.parquet(s"$dir/twin")
+    Sinks.writeOnce(df, new IdempotentParquetSink(s"$dir/idem"))
+    Sinks.writeOnce(df, new ParquetAppendSink(s"$dir/append"))
+    sameParquet(s"$dir/idem/batch=-1", s"$dir/twin")
+    sameParquet(s"$dir/append", s"$dir/twin")
+    assert(spark.read.parquet(s"$dir/idem").count() == rows.size)
+  }
+
+  test("parquet sink: an empty batch reads back with its schema, as the DataFrameWriter twin does") {
+    val dir = tmpDir("graft_sink_empty")
+    val schema = StructType(Seq(StructField("k", LongType), StructField("v", StringType)))
+    val empties = Seq(
+      "no partitions" -> spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema),
+      "empty partitions" -> spark.createDataFrame(
+        spark.sparkContext.parallelize(Seq(Row(1L, "a")), 3).filter(_ => false), schema),
+      "empty relation" -> sample.where(lit(false)))
+    empties.zipWithIndex.foreach { case ((what, df), i) =>
+      df.write.parquet(s"$dir/twin$i")
+      val sink = new IdempotentParquetSink(s"$dir/out$i")
+      sink.write(df, 7L)
+      val (back, twin) = (spark.read.parquet(s"$dir/out$i/batch=7"), spark.read.parquet(s"$dir/twin$i"))
+      assert(back.schema == twin.schema && back.count() == 0 && twin.count() == 0, what)
+    }
+  }
+
+  test("parquet sink: one instance keeps each batch's own schema across a schema change") {
+    import spark.implicits._
+    val dir = tmpDir("graft_sink_schema")
+    val sink = new IdempotentParquetSink(s"$dir/out")
+    sink.write(Seq((1L, "a")).toDF("k", "v"), 0L)
+    sink.write(Seq((2.5, true)).toDF("x", "y"), 1L)
+    sink.write(Seq((3L, "c")).toDF("k", "v"), 2L)
+    assert(spark.read.parquet(s"$dir/out/batch=0").as[(Long, String)].collect().toSeq == Seq((1L, "a")))
+    assert(spark.read.parquet(s"$dir/out/batch=1").as[(Double, Boolean)].collect().toSeq == Seq((2.5, true)))
+    assert(spark.read.parquet(s"$dir/out/batch=2").as[(Long, String)].collect().toSeq == Seq((3L, "c")))
+  }
+
+  test("parquet sink: a replayed batch replaces its directory; what a killed attempt left is removed, never read") {
+    import spark.implicits._
+    val dir = tmpDir("graft_sink_replay")
+    val out = s"$dir/out"
+    val sink = new IdempotentParquetSink(out)
+    sink.write(Seq(1L, 2L).toDF("k"), 3L)
+    // a killed attempt of batch 3: its staging directory, one finished
+    // part file and one in-progress file, both not parquet at all
+    val stale = new java.io.File(s"$out/.tmp-batch=3")
+    assert(stale.mkdirs())
+    Seq("part-00000-stale.snappy.parquet", ".part-00001-stale.snappy.parquet.9.inprogress").foreach { f =>
+      java.nio.file.Files.write(new java.io.File(stale, f).toPath, "not parquet".getBytes)
+    }
+    assert(spark.read.parquet(out).select("k").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
+    sink.write(Seq(7L).toDF("k"), 3L)
+    assert(spark.read.parquet(out).select("k").as[Long].collect().toSeq == Seq(7L))
+    assert(!stale.exists(), "the killed attempt's staging directory is removed")
+    assert(!tree(out).exists(_.contains("stale")), s"nothing of the killed attempt is published: ${tree(out)}")
+  }
+
+  test("parquet sink: a batch write runs exactly one Spark job and leaves no _temporary") {
+    import spark.implicits._
+    val dir = tmpDir("graft_sink_onejob")
+    val df = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v").repartition(3)
+      .localCheckpoint() // the write's own job only, whatever the plan above it
+    val sc = spark.sparkContext
+    Seq(new IdempotentParquetSink(s"$dir/idem"), new ParquetAppendSink(s"$dir/append")).foreach { sink =>
+      val jobs = new AtomicInteger
+      val l = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      }
+      ListenerDrain(sc)
+      sc.addSparkListener(l)
+      try { Sinks.writeOnce(df, sink); ListenerDrain(sc) } finally sc.removeSparkListener(l)
+      assert(jobs.get == 1, s"${sink.getClass.getSimpleName} ran ${jobs.get} jobs")
+    }
+    val names = tree(dir)
+    assert(!names.exists(n => n.contains("_temporary") || n.contains(".tmp-")), s"staging left behind: $names")
+    assert(spark.read.parquet(s"$dir/idem").count() == 3 && spark.read.parquet(s"$dir/append").count() == 3)
   }
 }

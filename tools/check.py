@@ -15,8 +15,14 @@ VERDICT.md "What's wrong"):
     false greens
   - array-typed output columns are an immediate FAIL (the driver's pandas
     harness dies with "unhashable type: numpy.ndarray" on them)
+
+Oracle results are cached as pickles under /tmp/graft_oracle_cache, keyed
+by the sha256 of the SQL text, the DuckDB version and each fixture file's
+path, size and mtime: a changed SQL string or fixture misses, and a hit's pass line ends
+in "(cached)". A few oracle queries take minutes each in DuckDB at sf0.1.
+Delete the directory to force a replay.
 """
-import duckdb, json, sys, os, glob
+import duckdb, json, sys, os, glob, hashlib
 import numpy as np
 import pandas as pd
 
@@ -46,6 +52,34 @@ def canon(df):
         df = df.sort_values(by=list(df.columns), kind='mergesort')
     return df.reset_index(drop=True)
 
+CACHE = '/tmp/graft_oracle_cache'
+
+def fixture_stamp(sf):
+    """Path, size and mtime of every fixture file, one line each, after
+    the DuckDB version that replays the SQL."""
+    lines = [f'duckdb {duckdb.__version__}']
+    for t in TABLES:
+        p = f'{sf}/{t}.parquet'
+        for f in sorted(glob.glob(f'{p}/*.parquet')) if os.path.isdir(p) else [p]:
+            st = os.stat(f)
+            lines.append(f'{os.path.abspath(f)} {st.st_size} {st.st_mtime_ns}')
+    return '\n'.join(lines)
+
+def oracle_df(con, sql, stamp):
+    """The oracle's result for `sql` and whether it came from the cache."""
+    path = f"{CACHE}/{hashlib.sha256((sql + chr(0) + stamp).encode()).hexdigest()}.pkl"
+    if os.path.exists(path):
+        try:
+            return pd.read_pickle(path), True
+        except Exception:
+            pass  # unreadable entry: replay and overwrite it
+    df = con.execute(sql).df()
+    os.makedirs(CACHE, exist_ok=True)
+    tmp = f'{path}.{os.getpid()}.tmp'
+    df.to_pickle(tmp)
+    os.replace(tmp, path)
+    return df, False
+
 def main():
     sf = sys.argv[1] if len(sys.argv) > 1 else '/root/testdata/sf0.01'
     out = sys.argv[2] if len(sys.argv) > 2 else '/tmp/verify_out'
@@ -58,6 +92,7 @@ def main():
         src = f'{p}/*.parquet' if os.path.isdir(p) else p
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{src}'")
     oracle = json.load(open(f'{out}/oracle_sql.json'))
+    stamp = fixture_stamp(sf)
     n_pass = n_fail = 0
     if only:
         # a typo'd / unknown key must FAIL loudly, not vacuously pass:
@@ -77,7 +112,7 @@ def main():
             n_fail += 1
             continue
         try:
-            odf = con.execute(oracle[name]).df()
+            odf, cached = oracle_df(con, oracle[name], stamp)
         except Exception as e:
             print(f'FAIL {name}: oracle error: {e}')
             n_fail += 1
@@ -137,7 +172,7 @@ def main():
                 print(f'  row {r} col {c}: spark={a!r} oracle={b!r}')
             n_fail += 1
         else:
-            print(f'pass {name} ({len(sdf)} rows)')
+            print(f'pass {name} ({len(sdf)} rows){" (cached)" if cached else ""}')
             n_pass += 1
     # queries without oracle (a_*) — confirm output exists AND is
     # driver-hashable (no array columns)
