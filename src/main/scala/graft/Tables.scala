@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, SparkSession, classic}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
@@ -10,7 +13,8 @@ import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, Times
   * Parquet inference runs a Spark job (footer reads), so every later
   * read of the same file in the session passes the recorded schema to
   * `spark.read.schema(..)` and plans with no job. The record also holds
-  * the file's row count once [[rowCount]] asks for it. Keyed by session
+  * the file's row count once [[rowCount]] asks for it, read from the
+  * parquet footers on the driver with no job. Keyed by session
   * because the inferred types follow session confs (`nanosAsLong`,
   * `inferTimestampNTZ`), and so a fresh session never reuses a stopped
   * session's state.
@@ -46,11 +50,19 @@ object Tables {
     * first read, and the row count — the stand-in for catalog statistics
     * (a real deployment reads these from the metastore, not by
     * re-scanning) that the size-gated broadcast sites derive their
-    * estRows from. A parquet count() is metadata-cheap but still a job. */
+    * estRows from. The count is the sum of the row-group counts in the
+    * footers of the files Spark's listing would read: what `count()`
+    * returns, without the two jobs it runs. */
   private final class Fixture(spark: SparkSession, path: String) {
     val schema: StructType = spark.read.parquet(path).schema
     def read: DataFrame = spark.read.schema(schema).parquet(path)
-    lazy val rows: Long = read.count()
+    lazy val rows: Long = {
+      val conf = spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
+      read.inputFiles.iterator.map { f =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), conf))
+        try r.getRecordCount finally r.close()
+      }.sum
+    }
   }
 
   private val fixtures =

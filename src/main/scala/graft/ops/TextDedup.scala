@@ -131,7 +131,7 @@ object TextDedup {
     * as bucket-and-replicate (equi-join on (lang, bucket)), identical in
     * result to the oracle's theta predicate. */
   def qDedupJaccard(s: SparkSession, sf: String): DataFrame =
-    nearDupPairGraph(s, sf)
+    nearDupPairGraph(s, sf).orderBy("a_id", "b_id")
 
   /** Session-scoped materialization of THE τ=0.6 near-dup pair graph
     * (token-set Jaccard, same-lang, |Δchars| ≤ 25) that the entire
@@ -147,7 +147,11 @@ object TextDedup {
     * constant-size); later callers reuse the pinned blocks. Keyed by
     * (session, sfDir) so a fresh session never reads a stopped
     * session's block manager; the payload is the pair list itself —
-    * O(near-dup pairs) fixed-width rows, never the corpus. */
+    * O(near-dup pairs) fixed-width rows, never the corpus. The frame is
+    * unsorted: a presentation sort here would range-sample, and so
+    * re-run, the co-occurrence aggregate and the expansion joins before
+    * the checkpoint. `q_dedup_jaccard` sorts its own output; the graph
+    * family, `q_dedup_cluster` and `q_pipeline_curate` need no order. */
   private val pairGraphCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
   private def nearDupPairGraph(s: SparkSession, sf: String): DataFrame =
@@ -211,7 +215,7 @@ object TextDedup {
     * already had. Round 13: explode the gram POSITIONS and slice the
     * token array directly — zero exchange, zero sort, one
     * WholeStageCodegen span from scan to checkpoint write. The
-    * repartition(64, doc_id) replaces the window exchange's only useful
+    * repartition(p, doc_id) replaces the window exchange's only useful
     * side effect (the fixture table is one parquet file → one scan
     * task): it shuffles DOC rows (n_docs, pre-explosion) instead of
     * token rows, deterministic on doc_id per the §2.5 retry rule, and
@@ -223,8 +227,7 @@ object TextDedup {
     * other consumer projects it away before its distinct/agg. */
   def docGrams8Plan(s: SparkSession, sf: String): DataFrame =
     Tables.documents(s, sf)
-      .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt,
-                   col("doc_id"))
+      .repartition(shufflePartitions(s), col("doc_id"))
       .withColumn("b", Util.md5Bucket(col("doc_id")))
       .withColumn("tk", split(col("text"), " "))
       .where(size(col("tk")) >= 8)
@@ -421,7 +424,7 @@ object TextDedup {
     * xxhash64), exactly the round-12/13 shape. */
   private def gramSetDocs(s: SparkSession, docs: DataFrame,
                           features: Column): DataFrame = {
-    val p = s.conf.get("spark.sql.shuffle.partitions").toInt
+    val p = shufflePartitions(s)
     // repartition(p) first: the fixture table is ONE parquet file, so
     // extraction would otherwise run as a single task (~8 s measured).
     // The \u0001 delimiter: cannot occur in whitespace-split features,
@@ -444,6 +447,11 @@ object TextDedup {
       // node once.
       .repartition(p)
   }
+
+  /** The session's `spark.sql.shuffle.partitions`: the width of the
+    * near-dup pipeline's explicit exchanges. */
+  private def shufflePartitions(s: SparkSession): Int =
+    s.conf.get("spark.sql.shuffle.partitions").toInt
 
   /** One row per DISTINCT set over a canonical doc frame. */
   private def gramSetReps(d: DataFrame): DataFrame =
@@ -506,6 +514,9 @@ object TextDedup {
     * (un-deduped) posting join streams m² co-occurrence rows per gram
     * group through the aggregate — ~100× this version's phase-2 work.
     *
+    * The pairs come out in no particular order; callers that present
+    * them sort.
+    *
     * This is also the honest 100 TB composition: exact-dedup first
     * (`q_dedup_exact` is this pipeline's phase 1 with whole-text
     * features), near-dup only across distinct content, postings sharded
@@ -516,8 +527,9 @@ object TextDedup {
   private def bandedJaccardPairs(members: DataFrame, reps: DataFrame,
                                  tau: Double): DataFrame = {
     // ONE posting exchange shared by both join sides (renames sit ABOVE
-    // it → ReuseExchange evaluates the subtree once). The explicit
-    // REPARTITION_BY_NUM also defeats AQE's input-size-based
+    // it → ReuseExchange evaluates the subtree once), as wide as the
+    // session's spark.sql.shuffle.partitions, like gramSetDocs' exchanges.
+    // The explicit REPARTITION_BY_NUM also defeats AQE's input-size-based
     // coalescing, which sees only the small pre-explosion shuffle and
     // would collapse the join stage to ~1 task (measured: 14.7 s in one
     // task, 31 idle cores) — it cannot know the join output is m² per
@@ -531,7 +543,7 @@ object TextDedup {
                             col("c_lo"), col("c_hi"), explode(col("ft")).as("g"))
       .select(col("setid"), col("lang"), col("n_ft"), col("c_lo"), col("c_hi"),
               xxhash64(col("g")).as("gram"))
-      .repartition(64, col("lang"), col("gram"))
+      .repartition(shufflePartitions(reps.sparkSession), col("lang"), col("gram"))
     val aP = posts.select(col("lang"), col("gram"), col("setid").as("sa"),
                           col("n_ft").as("na"),
                           col("c_lo").as("a_lo"), col("c_hi").as("a_hi"))
@@ -573,7 +585,6 @@ object TextDedup {
       .select(least(col("ida"), col("idb")).as("a_id"),
               greatest(col("ida"), col("idb")).as("b_id"),
               col("jaccard"))
-      .orderBy("a_id", "b_id")
   }
 
   /** MinHash-LSH near-dup at scale (approx twin of q_dedup_jaccard; no
@@ -638,13 +649,14 @@ object TextDedup {
         .map(i => col(s"s$i"))): _*)
     }: _*)
     // ONE banded exchange shared by both join sides (renames above it →
-    // ReuseExchange), explicitly REPARTITION_BY_NUM so AQE's input-size
-    // coalescing can't collapse the band join to ~1 task (it sees only
-    // the small pre-join shuffle, not the in-bucket pair blow-up).
+    // ReuseExchange), at the session's shuffle width and explicitly
+    // REPARTITION_BY_NUM so AQE's input-size coalescing can't collapse
+    // the band join to ~1 task (it sees only the small pre-join shuffle,
+    // not the in-bucket pair blow-up).
     val exploded = sigRows.select(col("setid"), col("lang"),
                                   col("c_lo"), col("c_hi"),
                                   explode(bands).as("key"))
-      .repartition(64, col("lang"), col("key"))
+      .repartition(shufflePartitions(s), col("lang"), col("key"))
     val left = exploded.select(col("lang"), col("key"),
       col("setid").as("sa"), col("c_lo").as("a_lo"), col("c_hi").as("a_hi"))
     val right = exploded.select(col("lang"), col("key"),
@@ -698,7 +710,7 @@ object TextDedup {
         i => concat_ws(" ", slice(tk, i + 1, lit(2))))))
       .otherwise(array().cast("array<string>"))
     val (members, reps) = gramSetFrames(s, Tables.documents(s, sf), grams)
-    bandedJaccardPairs(members, reps, 0.5)
+    bandedJaccardPairs(members, reps, 0.5).orderBy("a_id", "b_id")
   }
 
   /** SimHash near-dup at scale (no oracle — xxhash64 is engine-specific).
@@ -749,7 +761,7 @@ object TextDedup {
     val exploded = d.select(col("setid"), col("lang"), col("c_lo"),
                             col("c_hi"), col("sig"),
                             posexplode(chunks).as(Seq("band", "chunk")))
-      .repartition(64, col("lang"), col("band"), col("chunk"))
+      .repartition(shufflePartitions(s), col("lang"), col("band"), col("chunk"))
     val left = exploded.select(col("lang"), col("band"), col("chunk"),
       col("setid").as("sa"), col("c_lo").as("a_lo"), col("c_hi").as("a_hi"),
       col("sig").as("a_sig"))
@@ -797,7 +809,8 @@ object TextDedup {
     * (min id as root) and merges a node's roots with one groupBy; the
     * round's own checkpoint job observes whether the result is already
     * a star forest, so there is no separate convergence job and no
-    * session conf is touched. The fixture pair graphs close in 3 rounds.
+    * session conf is touched. The fixture pair graphs fit one partition
+    * and close in 1 round.
     * Past `graft.cc.pointerJumpMaxEdges` both-direction edges the op
     * switches to the large/small-star fixpoint ([[starLabels]]), the
     * path proven at sf100; both produce the component min, and the

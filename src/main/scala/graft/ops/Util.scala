@@ -270,12 +270,14 @@ object Util {
     * carries itself and its parent). That count is an observed metric
     * of the round's own checkpoint job, so the loop runs no separate
     * convergence job; a round is 2 shuffles and 1 action, and contracts
-    * many hops at once (3 rounds on the sf0.01 and sf0.1 pair graphs at
-    * 8 partitions). `nPairs` is the pair count; partitions: ~250k
-    * both-direction edges each, clamped to 8..4096. */
+    * many hops at once. `nPairs` is the pair count; partitions: ~250k
+    * both-direction edges each, clamped to 1..4096. A graph of up to
+    * ~250k both-direction edges (the sf0.01 and sf0.1 pair graphs) so
+    * runs in one partition, whose union-find solves it exactly: round 1
+    * already emits a star forest, and the loop stops after it. */
   def componentLabels(pairs: DataFrame, nPairs: Long): DataFrame =
     componentLabels(pairs, nPairs,
-                    math.max(8L, math.min(4096L, 2L * nPairs / 250000L)).toInt, 50)
+                    math.max(1L, math.min(4096L, 2L * nPairs / 250000L)).toInt, 50)
 
   /** [[componentLabels]] with the partition count and round bound given;
     * past `maxRounds` it throws rather than return labels that are not
@@ -521,12 +523,15 @@ object Util {
     * deadly once the frame is data-sized: per-user / per-doc frames are
     * billions of rows in the LLM-pipeline genre this engine claims.
     *
-    * Shape — the native [[graft.plans.RankByRangeExec]]: one sampled
-    * range exchange on `keys` (sampled boundaries keep skewed, tie-heavy
-    * keys balanced: a value-arithmetic bucket would put every x=1 user
-    * in one bucket), per-partition counts/sums folded into exclusive
-    * offsets, rank = offset + local position. Lazy: no checkpoint, no
-    * driver-built DataFrame.
+    * Shape — the native [[graft.plans.RankByRangeExec]]: an input that
+    * AQE would read as one partition (the gate of
+    * [[graft.plans.SmallSortStrategy]]) is ranked in one partition, in
+    * one pass. A larger one takes one sampled range exchange on `keys`
+    * (sampled boundaries keep skewed, tie-heavy keys balanced: a
+    * value-arithmetic bucket would put every x=1 user in one bucket),
+    * per-partition counts/sums folded into exclusive offsets, rank =
+    * offset + local position. Lazy: no checkpoint, no driver-built
+    * DataFrame.
     *
     * `sums` pairs an integral input column with its LONG output column;
     * a running sum is NULL until the first non-null input, as in SQL.

@@ -6,8 +6,9 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, Expression, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Sort, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{Distribution, OrderedDistribution, Partitioning}
-import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
+import org.apache.spark.sql.execution.{CoalesceExec, SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
 
 /** Native global rank — exact 1-based `row_number()` plus inclusive
@@ -16,16 +17,26 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, Sh
   * holding the whole frame.
   *
   * Shape: the exec demands `OrderedDistribution(order)` and the same
-  * child ordering, so EnsureRequirements plans ONE range exchange plus
-  * a partition-local sort (partition index order == key order). Then:
-  *   1. one job over the sorted shuffle output returns, per partition,
-  *      the row count and each sum column's Σ and non-null count —
-  *      at most #partitions small arrays, folded on the driver into
-  *      exclusive offsets;
-  *   2. one `mapPartitionsWithIndex` over the same RDD emits
-  *      rank = offset + local position and the running sums.
-  * The frame stays lazy (no checkpoint, no driver-built DataFrame); a
-  * lost executor re-runs the shuffle under the same fixed partitioner.
+  * child ordering. Two plans satisfy that:
+  *   - Small input (the child's estimated `sizeInBytes` within
+  *     [[SmallSortStrategy.gate]], the size AQE would read as one
+  *     partition): [[RankByRangeStrategy]] plans the exec over
+  *     `CoalesceExec(1, child)`, and EnsureRequirements adds only the
+  *     partition-local sort. There is no range exchange, no sampling
+  *     job and no offsets job: one task ranks the whole input in one
+  *     pass. Same gate, same opt-out (`coalescePartitions.minPartitionSize`
+  *     = `1b`) and never with AQE off, as `SmallSortStrategy`.
+  *   - Otherwise EnsureRequirements plans ONE range exchange plus a
+  *     partition-local sort (partition index order == key order). Then
+  *     one job over the sorted shuffle output returns, per partition,
+  *     the row count and each sum column's Σ and non-null count — at
+  *     most #partitions small arrays, folded on the driver into
+  *     exclusive offsets.
+  * In both, one `mapPartitionsWithIndex` emits rank = offset + local
+  * position and the running sums; with one input partition the offsets
+  * are zero and the offsets job is skipped. The frame stays lazy (no
+  * checkpoint, no driver-built DataFrame); a lost executor re-runs the
+  * shuffle under the same fixed partitioner.
   *
   * Sums follow SQL window rules: a running sum is NULL until the first
   * non-null input; inputs must be integral (checked when the plan is
@@ -43,11 +54,14 @@ case class RankByRangePlan(child: LogicalPlan, order: Seq[SortOrder],
 }
 
 /** Planner rule: injected via GraftExtensions (or registered on the
-  * session lazily by [[RankByRange.apply]]). */
+  * session lazily by [[RankByRange.apply]]). An input within
+  * [[SmallSortStrategy.gate]] is ranked over one partition. */
 object RankByRangeStrategy extends org.apache.spark.sql.execution.SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case RankByRangePlan(child, order, rank, ins, outs) =>
-      RankByRangeExec(planLater(child), order, rank, ins, outs) :: Nil
+      val in = planLater(child)
+      val small = child.stats.sizeInBytes <= SmallSortStrategy.gate(SQLConf.get)
+      RankByRangeExec(if (small) CoalesceExec(1, in) else in, order, rank, ins, outs) :: Nil
     case _ => Nil
   }
 }
@@ -77,8 +91,10 @@ case class RankByRangeExec(child: SparkPlan, order: Seq[SortOrder],
     import RankByRange.read
     val rows = child.execute()
 
-    // job 1: per partition (rows, Σ col_i…, non-null count of col_i…)
-    val perPart = sparkContext.runJob(rows, (it: Iterator[InternalRow]) => {
+    // per partition (rows, Σ col_i…, non-null count of col_i…); one
+    // partition needs none of it, its offsets are zero
+    val perPart = if (rows.getNumPartitions == 1) Array.empty[Array[Long]]
+    else sparkContext.runJob(rows, (it: Iterator[InternalRow]) => {
       val acc = new Array[Long](1 + 2 * n)
       it.foreach { r =>
         acc(0) += 1

@@ -693,11 +693,13 @@ class PlanShapeSpec extends SparkSpec {
   private def unpartitioned(df: org.apache.spark.sql.DataFrame): Int =
     windowNodes(df).count(_.partitionSpec.isEmpty)
 
-  /** The plan ranks through the native RankByRangeExec, and each such
-    * node reads a RangePartitioning exchange (under the partition-local
-    * sort the planner adds). Reads the adaptive plan before execution:
-    * the initial plan, exchanges inserted. */
-  private def ranksOverRangeExchange(df: org.apache.spark.sql.DataFrame): Boolean = {
+  /** How each native RankByRangeExec of the plan reads its input, under
+    * the partition-local sort the planner adds: "one" over
+    * CoalesceExec(1), "range" over a RangePartitioning exchange, "other"
+    * otherwise. Reads the adaptive plan before execution: the initial
+    * plan, exchanges inserted. */
+  private def rankInputs(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    import org.apache.spark.sql.execution.{CoalesceExec, SortExec}
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
     val root = df.queryExecution.executedPlan match {
@@ -705,10 +707,45 @@ class PlanShapeSpec extends SparkSpec {
         a.executedPlan
       case p => p
     }
-    val ranks = root.collect { case r: graft.plans.RankByRangeExec => r }
-    ranks.nonEmpty && ranks.forall(_.child.collectFirst {
-      case e: ShuffleExchangeExec => e.outputPartitioning
-    }.exists(_.isInstanceOf[RangePartitioning]))
+    root.collect { case r: graft.plans.RankByRangeExec => r.child match {
+      case SortExec(_, false, CoalesceExec(1, _), _) => "one"
+      case SortExec(_, false, e: ShuffleExchangeExec, _)
+          if e.outputPartitioning.isInstanceOf[RangePartitioning] => "range"
+      case _ => "other"
+    } }.sorted
+  }
+
+  /** The input shape the one-partition rule asks of each rank: "one"
+    * where the rank's input estimate is within SmallSortStrategy's gate,
+    * "range" above it. */
+  private def gatedRankInputs(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    val conf = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf
+    val gate = graft.plans.SmallSortStrategy.gate(conf)
+    df.queryExecution.optimizedPlan.collect {
+      case r: graft.plans.RankByRangePlan =>
+        if (r.child.stats.sizeInBytes <= gate) "one" else "range"
+    }.sorted
+  }
+
+  /** The whale-family and round-14 rank keys, built in session `s`. */
+  private def rankKeys(s: org.apache.spark.sql.SparkSession)
+      : Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+    "q_agg_gini" -> (() => Aggregates.qAggGini(s, sf)),
+    "q_agg_pareto_share" -> (() => Aggregates.qAggParetoShare(s, sf)),
+    "q_agg_ltv_deciles" -> (() => Aggregates.qAggLtvDeciles(s, sf)),
+    "q_ts_rfm" -> (() => TimeSeries.qTsRfm(s, sf)),
+    "q_ab_ks" -> (() => Aggregates.qAbKs(s, sf)),
+    "q_ab_mannwhitney" -> (() => Aggregates.qAbMannwhitney(s, sf)),
+    "q_agg_percentile_weighted" -> (() => Aggregates.qAggPercentileWeighted(s, sf)),
+    "q_sample_stratified" -> (() => TextAnalysis.qSampleStratified(s, sf)))
+
+  /** Each rank of `name` reads one coalesced partition when its input is
+    * within the gate, and a range exchange above it. */
+  private def assertGatedRanks(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
+    val got = rankInputs(df)
+    assert(got.nonEmpty && got == gatedRankInputs(df),
+           s"$name: rank inputs $got, the gate asks for ${gatedRankInputs(df)}")
   }
 
   test("q_text_zipf: top-1000 is a TakeOrderedAndProject heap cut — zero windows anywhere") {
@@ -725,28 +762,30 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("whale family (gini/pareto/ltv/rfm): ranks ride rankedByRange — no unpartitioned window") {
-    for ((name, df) <- Seq(
-        "q_agg_gini" -> Aggregates.qAggGini(spark, sf),
-        "q_agg_pareto_share" -> Aggregates.qAggParetoShare(spark, sf),
-        "q_agg_ltv_deciles" -> Aggregates.qAggLtvDeciles(spark, sf),
-        "q_ts_rfm" -> TimeSeries.qTsRfm(spark, sf))) {
+    for ((name, build) <- rankKeys(spark).take(4)) {
+      val df = build()
       assert(unpartitioned(df) == 0,
              s"$name: the per-user frame must never sort in one window task")
-      assert(ranksOverRangeExchange(df),
-             s"$name: expected RankByRangeExec over a RangePartitioning exchange")
+      assertGatedRanks(name, df)
     }
   }
 
   test("round-14 window retirements (ks/mannwhitney/stratified/percentile_weighted): no unpartitioned window") {
-    for ((name, df) <- Seq(
-        "q_ab_ks" -> Aggregates.qAbKs(spark, sf),
-        "q_ab_mannwhitney" -> Aggregates.qAbMannwhitney(spark, sf),
-        "q_agg_percentile_weighted" -> Aggregates.qAggPercentileWeighted(spark, sf),
-        "q_sample_stratified" -> TextAnalysis.qSampleStratified(spark, sf))) {
+    for ((name, build) <- rankKeys(spark).drop(4)) {
+      val df = build()
       assert(unpartitioned(df) == 0,
              s"$name: the value grid / stratum frame must never sort in one window task")
-      assert(ranksOverRangeExchange(df),
-             s"$name: expected RankByRangeExec over a RangePartitioning exchange")
+      assertGatedRanks(name, df)
+    }
+  }
+
+  test("rankedByRange keys range-partition every rank when minPartitionSize=1b opts out of the one-partition rule") {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1b")
+    for ((name, build) <- rankKeys(s)) {
+      val got = rankInputs(build())
+      assert(got.nonEmpty && got.forall(_ == "range"),
+             s"$name: expected every RankByRangeExec over a RangePartitioning exchange, got $got")
     }
   }
 

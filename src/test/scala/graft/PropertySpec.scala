@@ -514,10 +514,29 @@ class PropertySpec extends SparkSpec {
   }
 
   test("rankedByRange == global row_number + running sums (AQE, desc key, nulls, int+long sums, hot key, empty partitions)") {
+    // every case on both plans: the default posture ranks the small
+    // input in one partition; minPartitionSize=1b opts out of that, and
+    // with coalescing off the range exchange keeps its 64 partitions
+    val range = rangeSession(64)
+    range.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1b")
+    rankedByRangeCases(spark.newSession(), onePartition = true)
+    rankedByRangeCases(range, onePartition = false)
+  }
+
+  private def rankedByRangeCases(s2: org.apache.spark.sql.SparkSession,
+                                 onePartition: Boolean): Unit = {
     import org.apache.spark.sql.expressions.Window
-    val s2 = rangeSession(64)
     import s2.implicits._
-    // 40 rows over 64 range partitions. k = 7 is the hot key (every
+    val path = if (onePartition) "one partition" else "range exchange"
+    def assertPath(df: org.apache.spark.sql.DataFrame): Unit = {
+      df.collect() // finalize AQE before reading the plan
+      val p = df.queryExecution.executedPlan
+      val ranges = SmallSortPlans.rangeExchanges(p)
+      assert(p.toString.contains("RankByRange"), "the native operator must plan")
+      assert(if (onePartition) ranges == 0 && p.toString.contains("Coalesce 1") else ranges == 1,
+             s"$path: expected that plan, got\n$p")
+    }
+    // 40 rows (over 64 range partitions on the range path). k = 7 is the hot key (every
     // even id), broken by the id tiebreak; k is null on two ids; the
     // int sum input vi is null on a quarter of the rows, on the null-k
     // rows and on id 2 (first in the desc order), the long input vl on
@@ -535,8 +554,7 @@ class PropertySpec extends SparkSpec {
     val cols = Seq("id", "r", "ci", "cl").map(col)
     for (keys <- Seq(Seq(col("k").desc, col("id")), Seq(col("k"), col("id").desc))) {
       val got = Util.rankedByRange(df, keys, "r", sums = Seq("vi" -> "ci", "vl" -> "cl"))
-      assert(got.queryExecution.executedPlan.toString.contains("RankByRange"),
-             "the native operator must plan")
+      assertPath(got)
       assert(got.schema("ci").dataType == org.apache.spark.sql.types.LongType &&
              got.schema("cl").dataType == org.apache.spark.sql.types.LongType)
       val w = Window.orderBy(keys: _*)
@@ -546,7 +564,7 @@ class PropertySpec extends SparkSpec {
         .withColumn("cl", sum(col("vl")).over(cum))
       val g = got.select(cols: _*).collect().toSet
       val want = ref.select(cols: _*).collect().toSet
-      assert(g == want, s"keys $keys: ${g.diff(want)} vs ${want.diff(g)}")
+      assert(g == want, s"$path, keys $keys: ${g.diff(want)} vs ${want.diff(g)}")
       assert(want.exists(_.isNullAt(2)) && want.exists(_.isNullAt(3)),
              "the fixture must exercise null-until-first-input running sums")
     }
@@ -557,14 +575,16 @@ class PropertySpec extends SparkSpec {
     val tied = (1L to 12L).map(id => (id, 5, 3, Option.empty[Long]))
       .toDF("id", "k", "vi", "vl").repartition(3)
     val tg = Util.rankedByRange(tied, Seq(col("k")), "r", sums = Seq("vi" -> "ci", "vl" -> "cl"))
-    assert(tg.rdd.mapPartitions(it => Iterator(it.size)).collect().contains(0),
-           "the tied frame must leave a range partition empty")
+    assertPath(tg)
+    val sizes = tg.rdd.mapPartitions(it => Iterator(it.size)).collect()
+    if (onePartition) assert(sizes.toSeq == Seq(12), s"one partition expected, got ${sizes.toSeq}")
+    else assert(sizes.contains(0), "the tied frame must leave a range partition empty")
     val tw = Window.orderBy(col("k"))
     val tref = tied.withColumn("r", row_number().over(tw).cast("long"))
       .withColumn("ci", sum(col("vi")).over(tw.rowsBetween(Window.unboundedPreceding, 0)))
       .withColumn("cl", sum(col("vl")).over(tw.rowsBetween(Window.unboundedPreceding, 0)))
     val tc = Seq("r", "ci", "cl").map(col)
-    assert(tg.select(tc: _*).collect().toSet == tref.select(tc: _*).collect().toSet)
+    assert(tg.select(tc: _*).collect().toSet == tref.select(tc: _*).collect().toSet, path)
     // an input with no rows: every partition is empty
     assert(Util.rankedByRange(df.where(lit(false)), Seq(col("id")), "r",
       sums = Seq("vi" -> "ci")).count() == 0)
@@ -1282,6 +1302,130 @@ class PropertySpec extends SparkSpec {
     val e = intercept[IllegalStateException](labelsOf(path2000, 8, maxRounds = 1))
     assert(e.getMessage.contains("1 rounds") && e.getMessage.contains("1999 edges"),
            e.getMessage)
+  }
+
+  /** Jobs started by `body` whose result stage is named by a checkpoint
+    * call in Util (`localCheckpoint at Util.scala:…`, or
+    * `checkpoint at …` for a reliable one): one per loop round. */
+  private def checkpointJobs(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val name = e.stageInfos.maxBy(_.stageId).name
+        if (name.matches("(localCheckpoint|checkpoint) at Util\\.scala.*")) n.incrementAndGet()
+      }
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.graftspec.ListenerDrain(sc)
+    sc.addSparkListener(l)
+    try { body; org.apache.spark.graftspec.ListenerDrain(sc) } finally sc.removeSparkListener(l)
+    n.get
+  }
+
+  test("componentLabels sizes a 2,000-node path to one partition and closes it in one round") {
+    import spark.implicits._
+    var got = Map.empty[Long, Long]
+    val rounds = checkpointJobs {
+      got = Util.componentLabels(path2000.toDF("a_id", "b_id"), path2000.size.toLong)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
+    assert(got == referenceLabels(path2000))
+    assert(rounds == 1, s"expected one round, counted $rounds checkpoint jobs")
+    val eight = checkpointJobs { labelsOf(path2000, 8) }
+    assert(eight > 1, s"the counter must see the rounds of 8 partitions, counted $eight")
+  }
+
+  test("q_dedup_jaccard and q_dedup_ngram sort their pairs; the shared pair graph is built with no sort") {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // a checkpoint reads the frame it persisted first: descend into the
+    // cached plan as well as into AQE's query stages
+    def nodes(p: SparkPlan): Seq[SparkPlan] = SmallSortPlans.collect(p) { case n => n }.flatMap {
+      case m: InMemoryTableScanExec => m +: nodes(m.relation.cachedPlan)
+      case n => Seq(n)
+    }
+    val s = spark.newSession()
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val l = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName.toLowerCase.contains("checkpoint")) plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    s.listenerManager.register(l)
+    try { TextDedup.nearDupPairs(s, sf); org.apache.spark.graftspec.ListenerDrain(s.sparkContext) }
+    finally s.listenerManager.unregister(l)
+    assert(!plans.isEmpty, "the pair graph's checkpoints must report their plans")
+    plans.forEach { p =>
+      val sorts = nodes(p).collect {
+        case x: SortExec if x.global => x
+        case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+      }
+      assert(sorts.isEmpty, s"a checkpoint of the pair-graph build sorts globally: $sorts")
+    }
+    for ((name, df) <- Seq("q_dedup_jaccard" -> TextDedup.qDedupJaccard(s, sf),
+                           "q_dedup_ngram" -> TextDedup.qDedupNgram(s, sf))) {
+      val ids = df.select("a_id", "b_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      assert(ids.nonEmpty && ids == ids.sorted, s"$name must come out ordered by (a_id, b_id)")
+    }
+  }
+
+  test("q_join_asof_nearest is linear in one user's events: 10^4 equals a driver-side reference, 10^5 takes under 20x its wall") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-asof")
+    // one user; ts strictly increasing with event_id; about 1% errors
+    def write(n: Int): String = {
+      val sub = s"$dir/n$n"
+      spark.range(n).select(col("id").as("event_id"), lit(7L).as("user_id"),
+          timestamp_micros(lit(1704067200000000L) + col("id") * 1000L +
+                           pmod(xxhash64(col("id"), lit(1)), lit(997L))).as("ts"),
+          when(pmod(xxhash64(col("id")), lit(100L)) === 0, "error")
+            .otherwise("click").as("event_type"))
+        .coalesce(1).write.parquet(s"$sub/events.parquet")
+      sub
+    }
+    def run(sub: String): (Double, org.apache.spark.sql.DataFrame) = {
+      val df = Joins.qJoinAsofNearest(spark.newSession(), sub)
+      val t0 = System.nanoTime()
+      df.write.format("noop").mode("overwrite").save()
+      ((System.nanoTime() - t0) / 1e9, df)
+    }
+    try {
+      val (small, large) = (write(10000), write(100000))
+      // driver-side nearest error: the previous error wins ties
+      val ev = spark.read.parquet(s"$small/events.parquet").orderBy("event_id").collect()
+        .map(r => (r.getLong(0), org.apache.spark.sql.catalyst.util.DateTimeUtils
+          .fromJavaTimestamp(r.getTimestamp(2)), r.getString(3)))
+      val errs = ev.filter(_._3 == "error")
+      assert(errs.length > 50 && errs.length < 150, s"${errs.length} errors in 10^4 events")
+      var prev = Option.empty[(Long, Long)]
+      var next = 0
+      val want = ev.flatMap { case (id, ts, tpe) =>
+        while (next < errs.length && errs(next)._1 <= id) next += 1
+        val out = if (tpe != "click") None else {
+          val n = if (next < errs.length) Some((errs(next)._1, errs(next)._2)) else None
+          (prev, n) match {
+            case (Some((pid, pts)), Some((_, nts))) if ts - pts <= nts - ts => Some((id, 7L, pid, ts - pts))
+            case (Some((pid, pts)), None) => Some((id, 7L, pid, ts - pts))
+            case (_, Some((nid, nts))) => Some((id, 7L, nid, nts - ts))
+            case _ => None
+          }
+        }
+        if (tpe == "error") prev = Some((id, ts))
+        out
+      }.toSeq
+      val (_, df) = run(small)
+      val got = df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+      assert(got == want, s"${got.size} rows against ${want.size} in the reference")
+      val tSmall = Seq(run(small)._1, run(small)._1).min
+      val tLarge = run(large)._1
+      info(f"noop walls: 10^4 events $tSmall%.2f s, 10^5 events $tLarge%.2f s")
+      assert(tLarge < 20 * tSmall, f"10^5 events took $tLarge%.2f s, 10^4 took $tSmall%.2f s")
+    } finally
+      java.nio.file.Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => java.nio.file.Files.delete(p))
   }
 
   test("q_dedup_cluster leaves the session conf untouched") {

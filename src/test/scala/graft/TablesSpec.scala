@@ -13,13 +13,13 @@ import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
   * NTZ inference. */
 class TablesSpec extends SparkSpec {
 
-  /** Schema-inference jobs (result stage `parquet at Tables.scala:…`)
-    * that `body` starts. */
-  private def schemaJobs(body: => Unit): Int = {
+  /** Jobs that `body` starts whose result stage name starts with
+    * `prefix` — schema-inference jobs are `parquet at Tables.scala:…`. */
+  private def jobsNamed(prefix: String)(body: => Unit): Int = {
     val n = new AtomicInteger
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.stageInfos.maxBy(_.stageId).name.startsWith("parquet at Tables.scala")) n.incrementAndGet()
+        if (e.stageInfos.maxBy(_.stageId).name.startsWith(prefix)) n.incrementAndGet()
     }
     val sc = spark.sparkContext
     ListenerDrain(sc)
@@ -27,6 +27,8 @@ class TablesSpec extends SparkSpec {
     try { body; ListenerDrain(sc) } finally sc.removeSparkListener(l)
     n.get
   }
+
+  private def schemaJobs(body: => Unit): Int = jobsNamed("parquet at Tables.scala")(body)
 
   private def deleteTree(dir: java.nio.file.Path): Unit =
     Files.walk(dir).sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p))
@@ -42,6 +44,26 @@ class TablesSpec extends SparkSpec {
     val s2 = spark.newSession()
     val second = schemaJobs { Tables.events(s2, sf).count() }
     assert(second == 1, s"a new session ran $second schema jobs")
+  }
+
+  test("rowCount sums the parquet footers with no job: equal to count() on every sf0.001 fixture and a multi-file directory") {
+    val dir = Files.createTempDirectory("graft-rows")
+    try {
+      spark.range(0, 1234, 1, 5).toDF("id").write.parquet(s"$dir/multi.parquet")
+      val files = Files.list(java.nio.file.Paths.get(s"$dir/multi.parquet")).toArray
+        .count(_.toString.endsWith(".parquet"))
+      assert(files == 5, s"the directory must hold several part files, holds $files")
+      val fixtures = Seq("lineitem", "orders", "customer", "supplier", "part", "nation",
+                         "region", "events", "documents", "embeddings").map(sf -> _)
+      for ((sfDir, name) <- fixtures :+ (dir.toString -> "multi")) {
+        val s = spark.newSession()
+        val df = Tables.table(s, sfDir, name) // the schema job runs here
+        var rows = -1L
+        val jobs = jobsNamed("") { rows = Tables.rowCount(s, sfDir, name) }
+        assert(jobs == 0, s"$name: rowCount ran $jobs jobs")
+        assert(rows == df.count(), s"$sfDir/$name: footers say $rows rows")
+      }
+    } finally deleteTree(dir)
   }
 
   test("events.ts keeps the parent's µs values at sf0.001 (pinned against DuckDB)") {

@@ -10,6 +10,9 @@ For every <key>.txt (explain-formatted) in the given directory, extract:
   - range exchanges (each one pays a RangePartitioner sampling job)
     and one-partition global sorts (a global Sort over Coalesce 1,
     graft.plans.SmallSortStrategy's shape: no exchange, no sampling)
+  - RankByRange nodes by input: one_partition_ranks over Coalesce 1
+    (the one-partition rule of graft.plans.RankByRangeStrategy) and
+    range_ranks over a range exchange (input above the rule's gate)
 
 Usage: plan_audit.py <plans_dir> [--csv out.csv]
 """
@@ -56,10 +59,18 @@ def audit(path):
                    if args.get(a, ("", ""))[0] == "Sort"
                    and args[a][1].endswith(", true, 0")
                    and args.get(b) == ("Coalesce", "1"))
+    # a rank reads its input through the partition-local Sort the
+    # planner adds: RankByRange -> Sort -> (Coalesce 1 | range Exchange)
+    rank_inputs = [args.get(c, ("", "")) for a, c in zip(tree, tree[2:])
+                   if args.get(a, ("", ""))[0] == "RankByRange"]
+    one_rank = sum(1 for c in rank_inputs if c == ("Coalesce", "1"))
+    range_rank = sum(1 for op, a in rank_inputs
+                     if op == "Exchange" and a.startswith("rangepartitioning"))
     return dict(exchanges=n_exch, bcast=n_bexch, joins="+".join(joins),
                 scans=n_scan, pushed=pushed,
                 windows=n_win, unpartitioned_windows=unpart,
-                range_exchanges=n_range, one_task_sorts=one_task)
+                range_exchanges=n_range, one_task_sorts=one_task,
+                one_partition_ranks=one_rank, range_ranks=range_rank)
 
 def main():
     d = sys.argv[1]
@@ -75,7 +86,8 @@ def main():
         with open(out, "w", newline="") as fh:
             w = csv.DictWriter(fh, fieldnames=["key", "exchanges", "bcast",
                 "joins", "scans", "pushed", "windows",
-                "unpartitioned_windows", "range_exchanges", "one_task_sorts"])
+                "unpartitioned_windows", "range_exchanges", "one_task_sorts",
+                "one_partition_ranks", "range_ranks"])
             w.writeheader(); w.writerows(rows)
         print(f"wrote {out} ({len(rows)} keys)")
     flagged = [r for r in rows if r["unpartitioned_windows"] > 0
@@ -89,6 +101,11 @@ def main():
     print(f"{sum(r['one_task_sorts'] > 0 for r in rows)} plans sort globally in "
           f"one partition; {len(ranged)} still range-partition (a sampling "
           f"job each): {' '.join(ranged)}")
+    ranks = [r for r in rows if r["one_partition_ranks"] + r["range_ranks"] > 0]
+    range_ranked = [r["key"] for r in ranks if r["range_ranks"] > 0]
+    print(f"{len(ranks)} plans rank (RankByRange): "
+          f"{sum(r['range_ranks'] == 0 for r in ranks)} in one partition only; "
+          f"{len(range_ranked)} still range-partition a rank: {' '.join(range_ranked)}")
     top = sorted(rows, key=lambda r: -r["exchanges"])[:15]
     print("most exchanges:")
     for r in top:
