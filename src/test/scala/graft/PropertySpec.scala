@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ops._
+import graft.tools.ReferenceComponents.referenceLabels
 
 /** §5.2(3) invariants over the operators (fixture-data properties —
   * stronger than value snapshots because they must hold at any scale). */
@@ -1148,7 +1149,7 @@ class PropertySpec extends SparkSpec {
     // gate past the fixture edge count, and both paths must agree.
     // Eligibility first, so a fixture that outgrew the pack gates
     // fails apart from a default path that stopped using the pack.
-    val nPairs = TextDedup.nearDupPairs(spark, sf).count()
+    val nPairs = TextDedup.nearDupPairGraph(spark, sf).count()
     assert(TextDedup.canonicalPairPack(spark, sf, nPairs).isDefined,
            "the fixture pair graph is outside the pair-pack gates")
     spark.conf.set("graft.graph.wideEdges", Long.MaxValue.toString)
@@ -1230,36 +1231,6 @@ class PropertySpec extends SparkSpec {
     } finally spark.conf.unset("graft.bpe.maxVocab")
   }
 
-  test("q_dedup_cluster scale path (forced star fixpoint) is row-identical to union-find contraction") {
-    // The past-threshold branch must be TESTED on the fixture, not
-    // assumed (the a_sim_ann_ivf forced-IMI discipline): force the
-    // star gate to 0 so the fixture takes the sf100 path, and compare
-    // against the default union-find contraction result row-for-row.
-    val key = "graft.cc.pointerJumpMaxEdges"
-    val default = TextDedup.qDedupCluster(spark, sf).collect().toSeq
-    spark.conf.set(key, "0")
-    try {
-      val starred = TextDedup.qDedupCluster(spark, sf).collect().toSeq
-      assert(starred == default,
-             "star fixpoint and union-find contraction disagree on the same pair graph")
-    } finally spark.conf.unset(key)
-  }
-
-  /** Driver-side union-find: id → component min. */
-  private def referenceLabels(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
-    val parent = scala.collection.mutable.HashMap[Long, Long]()
-    def find(x0: Long): Long = {
-      var x = parent.getOrElseUpdate(x0, x0)
-      while (parent(x) != x) x = parent(x)
-      x
-    }
-    pairs.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
-    }
-    parent.keys.map(k => k -> find(k)).toMap
-  }
-
   private def labelsOf(pairs: Seq[(Long, Long)], parts: Int, maxRounds: Int = 50)
       : Map[Long, Long] = {
     import spark.implicits._
@@ -1286,9 +1257,16 @@ class PropertySpec extends SparkSpec {
     val top = Long.MaxValue
     val extreme = (0L until 50L).map(i => (top - i - 1, top - i)) ++
                   Seq((top - 200L, top), (Long.MinValue, Long.MinValue + 1), (-1L, top - 300L))
+    // heap-numbered complete binary tree of 511 nodes
+    val binTree = (1L until 511L).map(i => ((i - 1) / 2, i))
+    // a 503-node path with ids permuted by i -> (211 i + 17) mod 503: the
+    // component min sits mid-path, the adversarial order for min-label
+    // contraction
+    val permutedPath = (0L until 502L).map(i => ((211 * i + 17) % 503, (211 * (i + 1) + 17) % 503))
     val graphs = Seq("path" -> path2000, "star" -> star, "cliques+path" -> barbell,
                      "isolated pairs" -> pairs300, "duplicates" -> dups,
-                     "extreme ids" -> extreme)
+                     "extreme ids" -> extreme, "binary tree" -> binTree,
+                     "permuted path" -> permutedPath)
     for ((name, g) <- graphs; parts <- Seq(1, 8, 64))
       assert(labelsOf(g, parts) == referenceLabels(g), s"$name at $parts partitions")
     // the same loop when each round checkpoints reliably (files) — the
@@ -1356,7 +1334,7 @@ class PropertySpec extends SparkSpec {
       override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     s.listenerManager.register(l)
-    try { TextDedup.nearDupPairs(s, sf); org.apache.spark.graftspec.ListenerDrain(s.sparkContext) }
+    try { TextDedup.nearDupPairGraph(s, sf); org.apache.spark.graftspec.ListenerDrain(s.sparkContext) }
     finally s.listenerManager.unregister(l)
     assert(!plans.isEmpty, "the pair graph's checkpoints must report their plans")
     plans.forEach { p =>
@@ -1432,6 +1410,59 @@ class PropertySpec extends SparkSpec {
     val before = spark.conf.getAll
     TextDedup.qDedupCluster(spark, sf).collect()
     assert(spark.conf.getAll == before)
+  }
+
+  test("q_graph_cc_star and q_dedup_cluster run every query of their build under the caller's session conf") {
+    // Spark snapshots a session's modified confs when each query starts
+    // executing (SparkListenerSQLExecutionStart.modifiedConfigs), so a
+    // conf set for a loop and restored in a finally shows up here even
+    // though the session looks untouched once the build returns.
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val s = spark.newSession()
+    val snaps = new java.util.concurrent.ConcurrentLinkedQueue[(String, Map[String, String])]
+    val l = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => snaps.add(x.description -> x.modifiedConfigs)
+        case _ => ()
+      }
+    }
+    val sc = s.sparkContext
+    org.apache.spark.graftspec.ListenerDrain(sc)
+    sc.addSparkListener(l)
+    val before = s.conf.getAll
+    try {
+      s.range(1).collect()
+      for (key <- Seq("q_graph_cc_star", "q_dedup_cluster"))
+        SparkEntry.queries(key)(s, sf).collect()
+      org.apache.spark.graftspec.ListenerDrain(sc)
+    } finally sc.removeSparkListener(l)
+    assert(s.conf.getAll == before)
+    val all = snaps.toArray(Array.empty[(String, Map[String, String])]).toSeq
+    assert(all.size > 3, s"expected the builds' queries, saw ${all.size}")
+    val changed = all.filter(_._2 != all.head._2)
+    assert(changed.isEmpty, s"${changed.size} of ${all.size} queries ran under another conf: " +
+      changed.take(3).map { case (d, c) => s"$d: ${(c.toSet diff all.head._2.toSet).mkString(", ")}" }.mkString("; "))
+  }
+
+  test("the pair graph's row count is observed on its build: a q_dedup_cluster build runs no count job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val s = spark.newSession()
+    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        names.add(e.stageInfos.maxBy(_.stageId).name)
+    }
+    val sc = s.sparkContext
+    org.apache.spark.graftspec.ListenerDrain(sc)
+    sc.addSparkListener(l)
+    try { TextDedup.qDedupCluster(s, sf).collect(); org.apache.spark.graftspec.ListenerDrain(sc) }
+    finally sc.removeSparkListener(l)
+    assert(names.stream().anyMatch(_.startsWith("checkpoint at Util.scala")),
+           s"the pair graph's reliable checkpoint job is missing: $names")
+    assert(!names.stream().anyMatch(_.startsWith("count at TextDedup.scala")),
+           s"a count job ran on the pair graph: $names")
+    assert(TextDedup.nearDupPairCount(s, sf) == TextDedup.nearDupPairGraph(s, sf).count())
   }
 
   test("editdist pigeonhole gate: substitutions complete, ±3-char shifts covered, 1-char-indel residue pinned") {

@@ -2,14 +2,16 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** Cross-algorithm consistency check (diagnostic, src/test):
-  * `q_dedup_cluster` (partition-local union-find contraction) and
-  * `q_graph_cc_star` (large-star/small-star) implement the same
-  * component-min labeling contract with disjoint algorithms — at any
-  * scale their outputs must be row-identical. Used for the round-5 sf1
-  * scale-proof, where the DuckDB oracle's quadratic pair CTE is too
-  * slow to replay but two independent distributed algorithms agreeing
-  * exactly is equivalent evidence.
+/** Cross-algorithm consistency check (diagnostic, src/test): each
+  * graded op is compared with an independent second algorithm, so a
+  * scale where the DuckDB oracle's quadratic pair CTE is too slow to
+  * replay still gets exact evidence.
+  *
+  * Connected components: `q_dedup_cluster` (partition-local union-find
+  * contraction, which `q_graph_cc_star` also runs) against a driver-side
+  * union-find over the collected τ=0.6 pair graph
+  * ([[ReferenceComponents]], the reference PropertySpec uses too), with
+  * cluster sizes counted on the driver.
   *
   * Round 10 adds the `q_seq_pattern` second algorithm (verdict ask #4):
   * a per-user sorted `mapGroups` fold with an explicit `indexOf`
@@ -84,16 +86,23 @@ object CrossCheck {
 
     if (section == "seq") { println("[crosscheck] ALL MATCH"); spark.stop(); return }
 
-    // 1) connected components: pointer-jump vs large-star/small-star
-    diff("cc(cluster~cc_star)",
+    // 1) connected components: union-find contraction vs a driver-side
+    // union-find over the collected pair graph
+    import spark.implicits._
+    val ref = ReferenceComponents.referenceLabels(
+      graft.ops.TextDedup.nearDupPairGraph(spark, sfDir).select("a_id", "b_id").collect()
+        .map(r => (r.getLong(0), r.getLong(1))))
+    val sizes = ref.values.groupBy(identity).map { case (lab, ids) => lab -> ids.size.toLong }
+    diff("cc(cluster~driver-union-find)",
       graft.ops.TextDedup.qDedupCluster(spark, sfDir),
-      graft.ops.TextDedup.qGraphCcStar(spark, sfDir))
+      ref.toSeq.map { case (id, lab) => (id, lab, sizes(lab)) }
+        .toDF("doc_id", "cluster_id", "cluster_size"))
 
     // Independent second algorithms for the triangle family (round-8
     // verdict ask #5): per-edge SORTED-ADJACENCY INTERSECTION (the
     // edge-iterator algorithm) — no wedge join, no orientation — vs the
     // product path's degree-oriented forward enumeration.
-    val pairs = graft.ops.TextDedup.nearDupPairs(spark, sfDir)
+    val pairs = graft.ops.TextDedup.nearDupPairGraph(spark, sfDir)
       .select(col("a_id"), col("b_id")).localCheckpoint()
     val edges = pairs
       .unionAll(pairs.select(col("b_id").as("a_id"), col("a_id").as("b_id")))

@@ -7,7 +7,8 @@
 # Subset rationale:
 #  - q_graph_degree_dist / q_dedup_profile: pair-graph derivation +
 #    readouts (the shared frame gets built here, pre-kill)
-#  - q_graph_cc_star: CC to fixpoint at ~43M edges — the at-scale CC
+#  - q_graph_cc_star: CC to fixpoint at ~43M edges; the key runs
+#    Util.componentLabels (union-find contraction), as q_dedup_cluster does
 #  - q_text_containment: shared 8-gram postings frame, derived
 #    POST-kill (stresses derivation on a degraded cluster)
 #  - q_text_fingerprint, q_ts_anomaly: cross-family strict coverage
