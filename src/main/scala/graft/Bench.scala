@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main — one JSON line on stdout (driver contract).
   *
@@ -16,42 +15,9 @@ object Bench {
     // only — the driver invokes Bench with no args)
     val only: Option[Set[String]] =
       if (args.nonEmpty) Some(args(0).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // start shuffles WIDE and let AQE coalesce down to the advisory
-      // target: with shuffle.partitions pinned to the core count, a
-      // 100×-scale input hands each task a partition too big for its
-      // 1/32 share of execution memory (the sf10 ladder OOM'd the
-      // triangle agg exactly this way); 256 initial partitions give
-      // AQE room in both directions — small stages coalesce to the
-      // same few tasks as before, big stages keep per-task state
-      // inside its memory share. This is the multi-executor posture:
-      // a real cluster never runs one-partition-per-core shuffles.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "256")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // tz-naive fixture timestamps read as LTZ (UTC session), matching
-      // the DuckDB oracle's epoch values
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.ui.enabled", "false")
-      .config("spark.checkpoint.compress", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Ladder-protocol hook (local iteration only — the driver sets no
-    // env): SPARK_GRAFT_EXTRA_CONF="k=v;k=v" applies graft.* session
-    // confs before any query builds, so forced-path rungs (IMI, star
-    // fixpoint, packed verify) can be TIMED under the same min-of-2
-    // warm protocol as the defaults instead of only spec-asserted.
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      spark.conf.set(k, v)
-      System.err.println(s"[bench] extra conf: $k=$v")
-    })
+    val cpus = Posture.cpus("32")
+    val spark = Posture.session(s"local[$cpus]", Posture.bench(cpus))
+    Posture.applyExtraConf(spark, "bench")
     // Untimed warmup (BASELINE.md protocol is a warm session): JIT +
     // codegen + parquet-footer caches initialize here, not inside the
     // first timed query.

@@ -32,7 +32,7 @@ import graft.stream.StreamOps
   * Key subset = every key touching graft custom Catalyst functions
   * (bitmap/bloom/quantile-sketch TypedImperativeAggregates, the
   * codegen'd vector expressions), the custom AsOfJoin LogicalPlan +
-  * Strategy, the DSv2 source, and the shared localCheckpoint
+  * Strategy, the DSv2 source, and the [[SharedFrames]]
   * materializations (pair graph / bigram / 8-gram frames, PQ model).
   *
   * `a_*` sketch keys run under both masters but are gated on
@@ -168,69 +168,9 @@ object ClusterProof {
     (n, sum.toString(16))
   }
 
-  def buildSession(master: String, shufflePartitions: Int = 8): SparkSession = {
-    val s = SparkSession.builder()
-      .master(master)
-      .appName(s"graft-cluster-proof")
-      // heavy/full modes run sf1-sized inputs: 8 reduce partitions hands
-      // a 4 GiB executor ~5M-row hash-agg states (BytesToBytesMap OOM,
-      // observed round 10 once AQE-coalesced artifacts narrowed the map
-      // side too); the protocol sizes shuffles to the data like the
-      // engine's own loops do
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      // local-cluster's memoryPerWorker only sizes the WORKER's offer —
-      // executor heaps come from spark.executor.memory (default 1g,
-      // silently starving the heavy rungs); GRAFT_EXECUTOR_MEM pins it
-      .config("spark.executor.memory",
-        sys.env.getOrElse("GRAFT_EXECUTOR_MEM", "2048m"))
-      // executor-loss resilience, the posture a real cluster runs with:
-      // a SIGKILLed executor can linger through its shutdown long enough
-      // to reject several rescheduled task attempts
-      // (RejectedExecutionException), and the default 4 maxFailures all
-      // land on the dying JVM before it leaves the pool — observed at
-      // the sf10 kill rung. Exclusion pulls the sick executor out of
-      // scheduling after 2 failed attempts; the raised budget absorbs
-      // the window in between.
-      .config("spark.task.maxFailures", "8")
-      .config("spark.excludeOnFailure.enabled", "true")
-      .config("spark.excludeOnFailure.task.maxTaskAttemptsPerExecutor", "2")
-      .config("spark.excludeOnFailure.stage.maxFailedTasksPerExecutor", "2")
-      // the round-7 sf10 posture (Bench.scala:32): shuffles START wide
-      // enough that each task's partition fits its execution-memory
-      // share at 100× data, and AQE coalesces the small stages back
-      // down — without it q_graph_triangles' sf10 hash-agg states
-      // overflow the 32-way width this proof otherwise pins
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "256")
-      // the sf100 rung protocol's storage/execution split: heavy keys'
-      // hash-agg states need the execution share; block-cached frames
-      // spill to executor-local disk instead of squeezing it
-      .config("spark.memory.storageFraction", "0.2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .config("spark.checkpoint.compress", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      // executors are separate JVMs on this host: give them the repo's
-      // compiled classes (same-host shared fs — the spark.jars ship
-      // path is exercised anyway for task closures) and the module
-      // opens Spark 4's launcher doesn't add itself
-      .config("spark.executor.extraClassPath",
-        sys.env.getOrElse("GRAFT_CLASSES", "/root/repo/target/scala-2.13/classes"))
-      .config("spark.executor.extraJavaOptions",
-        "--add-opens=java.base/java.nio=ALL-UNNAMED " +
-        "--add-opens=java.base/sun.nio.ch=ALL-UNNAMED " +
-        "--add-opens=java.base/java.util=ALL-UNNAMED " +
-        "--add-opens=java.base/java.lang=ALL-UNNAMED " +
-        "--add-opens=java.base/java.lang.invoke=ALL-UNNAMED")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  def buildSession(master: String, shufflePartitions: Int = 8): SparkSession =
+    Posture.session(master, ("spark.app.name" -> "graft-cluster-proof") +:
+      Posture.cluster(shufflePartitions))
 
   def runPhase(master: String, sfDir: String, keys: Seq[String],
                shufflePartitions: Int = 8): (Map[String, (Long, String)], Int) = {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.OutputMode
@@ -47,19 +47,9 @@ object StreamBench {
     val nKeys = args.lift(1).map(_.toInt).getOrElse(1000)
     if (args.lift(2).contains("cluster-kill")) { clusterKill(n, nKeys); return }
     val chunks = 10
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-stream-bench")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .config("spark.checkpoint.compress", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Posture.session(s"local[${Posture.cpus("8")}]", Seq(
+      "spark.app.name" -> "graft-stream-bench",
+      "spark.sql.shuffle.partitions" -> "8") ++ Posture.stream)
     import spark.implicits._
 
     val events = mkEvents(n, nKeys)
@@ -183,30 +173,9 @@ object StreamBench {
     *
     * Usage: graft.StreamBench <nRows> <nKeys> cluster-kill */
   private def clusterKill(n: Int, nKeys: Int): Unit = {
-    val spark = SparkSession.builder()
-      .master("local-cluster[2,1,2048]")
-      .appName("graft-stream-kill")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .config("spark.checkpoint.compress", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      // executors need the repo classes (Event, StreamOps codegen refs)
-      // + the module opens Spark's launcher doesn't add itself (the
-      // ClusterProof config; run with SPARK_HOME=/opt/spark)
-      .config("spark.executor.extraClassPath",
-        sys.env.getOrElse("GRAFT_CLASSES", "/root/repo/target/scala-2.13/classes"))
-      .config("spark.executor.extraJavaOptions",
-        "--add-opens=java.base/java.nio=ALL-UNNAMED " +
-        "--add-opens=java.base/sun.nio.ch=ALL-UNNAMED " +
-        "--add-opens=java.base/java.util=ALL-UNNAMED " +
-        "--add-opens=java.base/java.lang=ALL-UNNAMED " +
-        "--add-opens=java.base/java.lang.invoke=ALL-UNNAMED")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Posture.session("local-cluster[2,1,2048]", Seq(
+      "spark.app.name" -> "graft-stream-kill",
+      "spark.sql.shuffle.partitions" -> "8") ++ Posture.stream ++ Posture.localCluster)
     import spark.implicits._
     val events = mkEvents(n, nKeys)
     val ckpt = java.nio.file.Files

@@ -9,15 +9,15 @@ import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, Times
 
 /** Fixture-table load recipes (SURVEY.md §1.2).
   *
-  * Each fixture file's schema is inferred once per (session, path).
+  * Each fixture file's schema is inferred once per (session, path), in
+  * a [[SharedFrames]] entry.
   * Parquet inference runs a Spark job (footer reads), so every later
   * read of the same file in the session passes the recorded schema to
   * `spark.read.schema(..)` and plans with no job. The record also holds
   * the file's row count once [[rowCount]] asks for it, read from the
   * parquet footers on the driver with no job. Keyed by session
   * because the inferred types follow session confs (`nanosAsLong`,
-  * `inferTimestampNTZ`), and so a fresh session never reuses a stopped
-  * session's state.
+  * `inferTimestampNTZ`).
   *
   * `events.ts` always reads as TIMESTAMP, whatever the file stores:
   *   - TIMESTAMP(NANOS), which Spark 4.x refuses outright
@@ -65,13 +65,10 @@ object Tables {
     }
   }
 
-  private val fixtures =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Fixture]
-
   private def fixture(spark: SparkSession, sfDir: String, name: String): Fixture = {
     configure(spark)
-    val path = s"$sfDir/$name.parquet"
-    fixtures.computeIfAbsent((spark, path), _ => new Fixture(spark, path))
+    SharedFrames.getOrBuild(s"fixture.$name", spark, sfDir)(
+      new Fixture(spark, s"$sfDir/$name.parquet"))
   }
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {

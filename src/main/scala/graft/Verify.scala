@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,36 +9,15 @@ object Verify {
     // optional third arg: comma-separated query names (fast local iteration)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Posture.cpus("4")
     // shuffle partitions default to the core count (the graded-scale
     // posture) but are overridable for big-fixture sweeps: at sf100,
     // 16 partitions over 600M rows is 37M rows per reducer — the same
     // sizing rule the loop operators apply internally
     val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // tz-naive fixture timestamps read as LTZ (UTC session), matching
-      // the DuckDB oracle's epoch values
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.ui.enabled", "false")
-      .config("spark.checkpoint.compress", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Ladder-protocol hook, mirrored from Bench (local iteration only —
-    // the driver sets no env): SPARK_GRAFT_EXTRA_CONF="k=v;k=v" applies
-    // graft.* session confs so forced-path rungs dump REAL outputs for
-    // drop-parity counts, not just spec assertions.
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      spark.conf.set(k, v)
-      System.err.println(s"[verify] extra conf: $k=$v")
-    })
+    val spark = Posture.session(s"local[$cpus]",
+      Seq("spark.sql.shuffle.partitions" -> shuffleParts))
+    Posture.applyExtraConf(spark, "verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{SharedFrames, Tables}
 import Util._
 
 /** Extended text-analysis ops for LLM training-data pipelines
@@ -29,15 +29,13 @@ object TextAnalysis {
     * each paying its own corpus explode + (doc, token) hash agg. A
     * 100 TB pipeline tokenizes and counts ONCE and fans every
     * LM/ranking/rarity readout off the materialization; the exploded
-    * token stream never replays per query. localCheckpoint pins the
-    * fixed-width rows (ids + one token + a count) and truncates
-    * lineage so downstream plans stay flat. `source` rides along
-    * (functionally dependent on doc_id — the group key is effectively
-    * (doc_id, token)) so q_text_rarity needs no extra doc join. */
-  private val tokenCountCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
+    * token stream never replays per query. A [[graft.SharedFrames]]
+    * entry of fixed-width rows (ids + one token + a count). `source`
+    * rides along (functionally dependent on doc_id — the group key is
+    * effectively (doc_id, token)) so q_text_rarity needs no extra doc
+    * join. */
   private[graft] def docTokenCounts(s: SparkSession, sf: String): DataFrame =
-    Util.purged(tokenCountCache).computeIfAbsent((s, sf), _ =>
+    SharedFrames.getOrBuild("docTokenCounts", s, sf)(
       Tables.documents(s, sf).repartition(32)
         .select(col("doc_id"), col("source"), explode(toks).as("token"))
         .where(col("token") =!= "")
@@ -647,16 +645,11 @@ object TextAnalysis {
     * [[TextDedup]] pair-graph discipline applied to shingle statistics:
     * `q_text_bigram_lm` and `q_text_pmi` both need the corpus bigram
     * counts, and a real pipeline materializes the n-gram stats ONCE and
-    * lets every consumer read them. Derived on first touch per
-    * (session, sfDir), pinned by localCheckpoint (cluster-resident
-    * blocks, no lineage re-derivation), then every consumer's plan
-    * starts from the checkpointed scan. The frame is
-    * (8 B id, short string, 8 B count) — orders smaller than the
-    * exploded token stream that produces it. */
-  private val bigramCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
+    * lets every consumer read them: a [[graft.SharedFrames]] entry. The
+    * frame is (8 B id, short string, 8 B count) — orders smaller than
+    * the exploded token stream that produces it. */
   private def docBigramCounts(s: SparkSession, sf: String): DataFrame =
-    Util.purged(bigramCache).computeIfAbsent((s, sf), _ => {
+    SharedFrames.getOrBuild("docBigramCounts", s, sf) {
       val tk = split(lower(col("text")), " ")
       // 1-token guard: sequence(0, -1) counts DOWN in Spark while the
       // oracle's range(0) is empty (the qDedupNgram guard)
@@ -668,7 +661,7 @@ object TextAnalysis {
         .select(col("doc_id"), explode(bigrams).as("bg"))
         .groupBy(col("doc_id"), col("bg")).agg(count(lit(1)).as("c"))
         .serCheckpoint()
-    })
+    }
 
   def qTextBigramLm(s: SparkSession, sf: String): DataFrame = {
     val dbc = docBigramCounts(s, sf)
@@ -841,10 +834,8 @@ object TextAnalysis {
     * tokenizer is trained once on a bounded sample (here: the top
     * `maxVocab` tokens by count, a deterministic cut) and shipped as
     * an artifact; it is NEVER re-derived per query, hence the
-    * (session, sfDir) cache. The vocabulary itself comes from the
+    * [[graft.SharedFrames]] entry. The vocabulary itself comes from the
     * shared [[docTokenCounts]] materialization. */
-  private val bpeCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Seq[(String, String)]]
   private[graft] def bpeMerges(s: SparkSession, sf: String,
                              nMerges: Int = 100): Seq[(String, String)] = {
     // `graft.bpe.maxVocab` (round-10 verdict #4): the trainer's driver
@@ -857,12 +848,12 @@ object TextAnalysis {
     // published practice (tokenizers train on a frequency-truncated
     // sample). ENCODING still covers the full vocabulary — an
     // out-of-sample token simply decomposes under the trained table.
-    // The cap rides the cache key so a forced-path test (or a genuine
-    // retune) in the same session trains its own table instead of
-    // reading the stale one.
+    // The cap rides the entry's name so a forced-path test (or a
+    // genuine retune) in the same session trains its own table instead
+    // of reading the stale one.
     val maxVocab = s.conf.getOption("graft.bpe.maxVocab")
       .map(_.toInt).getOrElse(100000)
-    Util.purged(bpeCache).computeIfAbsent((s, s"$sf#$maxVocab"), _ => {
+    SharedFrames.getOrBuild(s"bpeMerges#$maxVocab", s, sf) {
       val vocab = docTokenCounts(s, sf)
         .groupBy(col("token")).agg(sum(col("c")).as("n"))
         .orderBy(desc("n"), asc("token")).limit(maxVocab)
@@ -903,7 +894,7 @@ object TextAnalysis {
         }
       }
       merges.result()
-    })
+    }
   }
 
   /** Greedy BPE encode of one token under a merge-rank map: always

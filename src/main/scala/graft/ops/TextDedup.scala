@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{SharedFrames, Tables}
 import Util._
 
 /** SURVEY.md §2.11 — text dedup / analysis for LLM-pipeline corpora.
@@ -141,30 +141,26 @@ object TextDedup {
     * derives the pair graph ONCE, checkpoints it, and every downstream
     * diagnostic (clusters, degree distribution, centrality, link
     * prediction, triangles, ...) reads the materialization; this cache
-    * is that architecture in session-scoped form. First caller pays the
-    * banded derivation and `localCheckpoint` pins the result (also
-    * truncating lineage so the iterative callers' loop plans stay
-    * constant-size); later callers reuse the pinned blocks. Keyed by
-    * (session, sfDir) so a fresh session never reads a stopped
-    * session's block manager; the payload is the pair list itself —
-    * O(near-dup pairs) fixed-width rows, never the corpus. The frame is
+    * is that architecture as a [[graft.SharedFrames]] entry: the first
+    * caller pays the banded derivation and a reliable checkpoint pins
+    * it (so the iterative callers' loop plans stay constant-size). The
+    * payload is the pair list itself — O(near-dup pairs) fixed-width
+    * rows, never the corpus. The frame is
     * unsorted: a presentation sort here would range-sample, and so
     * re-run, the co-occurrence aggregate and the expansion joins before
     * the checkpoint. `q_dedup_jaccard` sorts its own output; the graph
     * family, `q_dedup_cluster` and `q_pipeline_curate` need no order.
     * The row count sits beside the frame: it is observed on the
     * checkpoint job that builds it, so no consumer runs a count job. */
-  private val pairGraphCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (DataFrame, Long)]
   private def pairGraph(s: SparkSession, sf: String): (DataFrame, Long) =
-    Util.purged(pairGraphCache).computeIfAbsent((s, sf), _ => {
+    SharedFrames.getOrBuild("pairGraph", s, sf) {
       val (members, reps) = tokenSetFrames(s, sf)
       val rows = Observation()
       val g = bandedJaccardPairs(members, reps, 0.6)
         .observe(rows, count(lit(1)).as("n"))
         .serCheckpoint()
       (g, rows.get("n").asInstanceOf[Long])
-    })
+    }
   private[graft] def nearDupPairGraph(s: SparkSession, sf: String): DataFrame = pairGraph(s, sf)._1
   private[graft] def nearDupPairCount(s: SparkSession, sf: String): Long = pairGraph(s, sf)._2
 
@@ -202,11 +198,10 @@ object TextDedup {
     * frame, now the contamination shingles): `q_text_contamination`
     * and `a_dedup_bloom_contam` are the exact and screening halves of
     * ONE decontamination pass and read identical shingles; a real
-    * pipeline shingles the corpus once. localCheckpoint pins the
-    * fixed-width (id, 1 char, 32-char hash) rows. */
-  private val gram8Cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
-  /** The gram frame's BUILD plan, pre-checkpoint (public for PlanDump:
+    * pipeline shingles the corpus once. A [[graft.SharedFrames]] entry
+    * of fixed-width (id, 1 char, 32-char hash) rows.
+    *
+    * The gram frame's BUILD plan, pre-checkpoint (public for PlanDump:
     * the checkpoint executes eagerly, so consumers' explains only show
     * a scan of the pinned RDD — this is the plan that actually runs).
     *
@@ -239,9 +234,8 @@ object TextDedup {
       .select(col("doc_id"), col("b"), col("pos"),
               md5(concat_ws(" ",
                 slice(col("tk"), col("pos") + 1, lit(8)))).as("gram"))
-  private[ops] def docGrams8(s: SparkSession, sf: String): DataFrame =
-    Util.purged(gram8Cache).computeIfAbsent((s, sf), _ =>
-      docGrams8Plan(s, sf).serCheckpoint())
+  private[graft] def docGrams8(s: SparkSession, sf: String): DataFrame =
+    SharedFrames.getOrBuild("docGrams8", s, sf)(docGrams8Plan(s, sf).serCheckpoint())
 
   /** Session-scoped DISTINCT (doc_id, gram) postings over [[docGrams8]]
     * — the fourth shared materialization (round 13): `q_text_dup_spans`
@@ -250,10 +244,8 @@ object TextDedup {
     * posexplode→window shingle pass + distinct + checkpoint. One corpus
     * shingling, one distinct, one checkpoint; ~32 grams/doc gate proxy
     * (the same estRows both ops declared). */
-  private val gramPostingsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
-  private[ops] def docGramsDistinct(s: SparkSession, sf: String): DataFrame =
-    Util.purged(gramPostingsCache).computeIfAbsent((s, sf), _ =>
+  private[graft] def docGramsDistinct(s: SparkSession, sf: String): DataFrame =
+    SharedFrames.getOrBuild("docGramsDistinct", s, sf)(
       docGrams8(s, sf).select(col("doc_id"), col("gram")).distinct()
         .serCheckpoint(32L * Tables.rowCount(s, sf, "documents")))
 
@@ -469,13 +461,10 @@ object TextDedup {
     * all canonicalize documents by distinct-token set, and a real
     * pipeline canonicalizes once. First caller pays the build; members
     * (the doc→set map) and reps (one row per distinct set, with the
-    * hashed feature array) are both checkpointed. Same run-scoped cache
-    * discipline as the other shared frames — rebuilt from parquet every
-    * invocation, nothing persists across runs. */
-  private val setFramesCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (DataFrame, DataFrame)]
+    * hashed feature array) are both checkpointed, in one
+    * [[graft.SharedFrames]] entry. */
   private[ops] def tokenSetFrames(s: SparkSession, sf: String): (DataFrame, DataFrame) =
-    Util.purged(setFramesCache).computeIfAbsent((s, sf), _ => {
+    SharedFrames.getOrBuild("tokenSetFrames", s, sf) {
       val nDocs = Tables.rowCount(s, sf, "documents")
       // checkpoint the extraction ONCE; members is a projection of the
       // pinned blocks, reps one cheap agg over them (its own checkpoint
@@ -484,7 +473,7 @@ object TextDedup {
       val d = gramSetDocs(s, Tables.documents(s, sf), tokens).serCheckpoint(nDocs)
       (d.select(col("setid"), col("doc_id"), col("lang"), col("n_chars")),
        gramSetReps(d).serCheckpoint(nDocs))
-    })
+    }
 
   /** Shared exact-Jaccard pair join over canonical set frames
     * ([[gramSetFrames]]): pair the distinct sets, then expand.
@@ -866,7 +855,7 @@ object TextDedup {
     val pairs = nearDupPairGraph(s, sf)
       .select(col("a_id"), col("b_id"))
     val nP = nearDupPairCount(s, sf)
-    val parts = math.max(8L, math.min(4096L, 2L * nP / 250000L + 1L)).toInt
+    val parts = loopPartitions(nP)
     // pre-partition on u ONCE (round 14): the checkpoint pins the
     // layout and the round's broadcast joins preserve the streamed
     // side's partitioning, so the per-round degree groupBy(u) is
@@ -1126,7 +1115,7 @@ object TextDedup {
     val pairs = nearDupPairGraph(s, sf)
       .select(col("a_id"), col("b_id"))
     val nP = nearDupPairCount(s, sf)
-    val parts = math.max(8L, math.min(4096L, 2L * nP / 250000L + 1L)).toInt
+    val parts = loopPartitions(nP)
     // edges pre-partitioned on the JOIN key (v) once, before the loop:
     // the checkpoint pins the layout, so the per-round offers join
     // re-shuffles only the frontier side past the broadcast gate
@@ -1581,24 +1570,6 @@ object TextDedup {
     * orientation bounds wedges by per-node out-degree² (the standard
     * degree-orientation trick, exact here since ids are the order).
     * Per-node participation counts are ALL-INTEGER. */
-  /** Session-scoped triangle-triple frame: every triangle (x,y,z) of
-    * the τ=0.6 near-dup graph, each exactly once, enumerated with the
-    * degree-ordered "forward" orientation (Suri & Vassilvitskii,
-    * "Counting Triangles and the Curse of the Last Reducer", WWW'11;
-    * also Schank/Wagner's forward algorithm). Every edge is directed
-    * from its lower-(degree, id)-ranked endpoint to the higher; wedges
-    * form ONLY at a triangle's lowest-ranked vertex over its
-    * out-neighbors, and close via the (v,w) arc. Σ outdeg² = O(|E|^1.5)
-    * REGARDLESS of the degree distribution — a degree-10⁶ hub ranks
-    * highest, so its edges point INTO it and it forms no wedges: the
-    * id-ordered wedge join this replaces did deg(hub)² work on one
-    * reducer; this shape is hub-immune by construction, with no salting
-    * and exact counts. Shared by [[qGraphTriangles]] (global per-node
-    * counts) and [[qGraphClustercoef]] (t(u) in the cc formula) — one
-    * enumeration, two readouts. */
-  private val triangleCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
-
   /** Session-cached canonical (a<b) pair pack of the near-dup graph —
     * the sorted `(a_id<<32 | b_id)` long[] behind
     * [[graft.functions.PairContains]], shared by the WIDE paths of
@@ -1614,49 +1585,58 @@ object TextDedup {
     * the early filter deletes from the agg's hash tables and exchange.
     * Gates mirror the triangle pack: `graft.graph.packBudget` bytes,
     * non-negative ids < 2³¹, exact-cardinality fill check; any failure
-    * → None and the callers keep the historical anti-join plan. Cached
-    * per (session, sfDir) — only positive results, so a forced-path
-    * test that zeroes the budget never poisons later calls. */
-  private val pairPackCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), org.apache.spark.broadcast.Broadcast[Array[Long]]]
+    * → None and the callers keep the historical anti-join plan. The
+    * budget gate runs on every call, so a forced-path test that zeroes
+    * it takes the anti-join; past it, the data-derived answer is a
+    * [[graft.SharedFrames]] entry. */
   private[graft] def canonicalPairPack(s: SparkSession, sf: String, nPairs: Long)
       : Option[org.apache.spark.broadcast.Broadcast[Array[Long]]] = {
-    val cached = Util.purged(pairPackCache).get((s, sf))
-    if (cached != null) return Some(cached)
     val packBudget = s.conf.getOption("graft.graph.packBudget")
       .map(_.toLong).getOrElse(1536L << 20)
-    if (nPairs <= 0 || nPairs * 8L > packBudget || nPairs > Int.MaxValue.toLong)
-      return None
-    val pairs = nearDupPairGraph(s, sf).select(col("a_id"), col("b_id"))
-    // BOTH bounds gate the pack (the round-9 rule): a negative id would
-    // sign-extend through (a<<32)|b and silently corrupt the encoding
-    val bounds = pairs.agg(
-      least(min(col("a_id")), min(col("b_id"))).as("mn"),
-      greatest(max(col("a_id")), max(col("b_id"))).as("mx")).head
-    if (bounds.isNullAt(0) || bounds.getLong(0) < 0L ||
-        bounds.getLong(1) >= (1L << 31)) return None
-    import s.implicits._
-    // toLocalIterator, not collect — the r4 sf100 driver-OOM rule
-    val enc = new Array[Long](nPairs.toInt)
-    val it = pairs
-      .select((shiftleft(col("a_id"), 32).bitwiseOR(col("b_id"))).as("e"))
-      .as[Long].toLocalIterator()
-    var i = 0
-    while (it.hasNext && i < enc.length) { enc(i) = it.next(); i += 1 }
-    // exact-cardinality fill check: a short or long fill means the
-    // frame disagrees with nPairs — a trimmed pack would silently
-    // MISREPORT adjacency, so fall back to the anti-join instead
-    if (i == enc.length && !it.hasNext) {
-      java.util.Arrays.sort(enc)
-      val bc = s.sparkContext.broadcast(enc)
-      pairPackCache.put((s, sf), bc)
-      Some(bc)
-    } else None
+    if (nPairs <= 0 || nPairs * 8L > packBudget || nPairs > Int.MaxValue.toLong) None
+    else SharedFrames.getOrBuild("canonicalPairPack", s, sf) {
+      val pairs = nearDupPairGraph(s, sf).select(col("a_id"), col("b_id"))
+      // BOTH bounds gate the pack (the round-9 rule): a negative id would
+      // sign-extend through (a<<32)|b and silently corrupt the encoding
+      val bounds = pairs.agg(
+        least(min(col("a_id")), min(col("b_id"))).as("mn"),
+        greatest(max(col("a_id")), max(col("b_id"))).as("mx")).head
+      if (bounds.isNullAt(0) || bounds.getLong(0) < 0L ||
+          bounds.getLong(1) >= (1L << 31)) None
+      else {
+        import s.implicits._
+        // toLocalIterator, not collect — the r4 sf100 driver-OOM rule
+        val enc = new Array[Long](nPairs.toInt)
+        val it = pairs
+          .select((shiftleft(col("a_id"), 32).bitwiseOR(col("b_id"))).as("e"))
+          .as[Long].toLocalIterator()
+        var i = 0
+        while (it.hasNext && i < enc.length) { enc(i) = it.next(); i += 1 }
+        // exact-cardinality fill check: a short or long fill means the
+        // frame disagrees with nPairs — a trimmed pack would silently
+        // MISREPORT adjacency, so fall back to the anti-join instead
+        if (i == enc.length && !it.hasNext) {
+          java.util.Arrays.sort(enc)
+          Some(s.sparkContext.broadcast(enc))
+        } else None
+      }
+    }
   }
-  /** Σd² wedge bound per (session, sfDir) — measured once, read by
-    * every triangle consumer's gate. */
-  private val wedgeBoundCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Long]
+  /** Session-scoped triangle-triple frame: every triangle (x,y,z) of
+    * the τ=0.6 near-dup graph, each exactly once, enumerated with the
+    * degree-ordered "forward" orientation (Suri & Vassilvitskii,
+    * "Counting Triangles and the Curse of the Last Reducer", WWW'11;
+    * also Schank/Wagner's forward algorithm). Every edge is directed
+    * from its lower-(degree, id)-ranked endpoint to the higher; wedges
+    * form ONLY at a triangle's lowest-ranked vertex over its
+    * out-neighbors, and close via the (v,w) arc. Σ outdeg² = O(|E|^1.5)
+    * REGARDLESS of the degree distribution — a degree-10⁶ hub ranks
+    * highest, so its edges point INTO it and it forms no wedges: the
+    * id-ordered wedge join this replaces did deg(hub)² work on one
+    * reducer; this shape is hub-immune by construction, with no salting
+    * and exact counts. Shared by [[qGraphTriangles]] (global per-node
+    * counts) and [[qGraphClustercoef]] (t(u) in the cc formula) — one
+    * enumeration, two readouts, in one [[graft.SharedFrames]] entry. */
   private def orientedTriangleTriples(s: SparkSession, sf: String): DataFrame = {
     // pairs ride the session-cached nearDupPairGraph checkpoint — the
     // select needs no materialization of its own
@@ -1680,25 +1660,23 @@ object TextDedup {
     // flip the route; past 64M pairs the deg agg is skipped (bound :=
     // MaxValue — any sane maxWedgeBound is already exceeded).
     val nPairs = nearDupPairCount(s, sf)
-    val wedgeBoundB = Util.purged(wedgeBoundCache)
-      .computeIfAbsent((s, sf), _ => {
-        val wb: Long = if (nPairs > 64000000L) Long.MaxValue else {
-          val deg = pairs.select(col("a_id").as("v"))
-            .unionAll(pairs.select(col("b_id").as("v")))
-            .groupBy("v").agg(count(lit(1)).as("d"))
-          // DECIMAL(38,0): a hub-heavy graph's Σd² can overflow BIGINT,
-          // and a wrapped-negative bound would flip the gate the WRONG
-          // way (negative > maxWedges is false → materialize the frame
-          // the gate exists to avoid). Null (empty graph) ⇒ bound 0.
-          val w = deg.agg(sum(expr("CAST(d AS DECIMAL(38,0)) * d"))
-            .cast(org.apache.spark.sql.types.DataTypes.createDecimalType(38, 0)))
-            .head.getDecimal(0)
-          if (w == null) 0L
-          else if (w.compareTo(java.math.BigDecimal.valueOf(Long.MaxValue)) > 0) Long.MaxValue
-          else w.longValue()
-        }
-        java.lang.Long.valueOf(wb)
-      })
+    val wedgeBoundB: Long = SharedFrames.getOrBuild("wedgeBound", s, sf) {
+      if (nPairs > 64000000L) Long.MaxValue else {
+        val deg = pairs.select(col("a_id").as("v"))
+          .unionAll(pairs.select(col("b_id").as("v")))
+          .groupBy("v").agg(count(lit(1)).as("d"))
+        // DECIMAL(38,0): a hub-heavy graph's Σd² can overflow BIGINT,
+        // and a wrapped-negative bound would flip the gate the WRONG
+        // way (negative > maxWedges is false → materialize the frame
+        // the gate exists to avoid). Null (empty graph) ⇒ bound 0.
+        val w = deg.agg(sum(expr("CAST(d AS DECIMAL(38,0)) * d"))
+          .cast(org.apache.spark.sql.types.DataTypes.createDecimalType(38, 0)))
+          .head.getDecimal(0)
+        if (w == null) 0L
+        else if (w.compareTo(java.math.BigDecimal.valueOf(Long.MaxValue)) > 0) Long.MaxValue
+        else w.longValue()
+      }
+    }
     val wide = nPairs > s.conf.getOption("graft.graph.wideEdges")
       .map(_.toLong).getOrElse(4000000L)
     // triple VOLUME is clique-driven, not pair-driven (a k-clique
@@ -1712,13 +1690,11 @@ object TextDedup {
     // consumer's aggregate without ever materializing, exactly the
     // wide-path posture (the cache trades one repeat enumeration for
     // never holding an O(#triangles) frame).
-    val wedgeBound = if (wide) Long.MaxValue else wedgeBoundB.longValue
+    val wedgeBound = if (wide) Long.MaxValue else wedgeBoundB
     val maxWedges = s.conf.getOption("graft.graph.maxWedgeBound")
       .map(_.toLong).getOrElse(100000000L)
     if (wide || wedgeBound > maxWedges) orientTriangles(s, pairs)
-    else Util.purged(triangleCache).computeIfAbsent((s, sf), _ =>
-      orientTriangles(s, pairs)
-        .serCheckpoint())
+    else SharedFrames.getOrBuild("triangles", s, sf)(orientTriangles(s, pairs).serCheckpoint())
   }
 
   /** The forward-orientation enumeration itself, over any canonical
@@ -1860,7 +1836,7 @@ object TextDedup {
     // joins preserve the streamed side's partitioning, so each round's
     // groupBy(v) message aggregation — the loop's only shuffle — is
     // exchange-free at fixture scale
-    val parts = math.max(8L, math.min(4096L, 2L * nP / 250000L + 1L)).toInt
+    val parts = loopPartitions(nP)
     val edges = pairs.select(col("a_id").as("u"), col("b_id").as("v"))
       .unionAll(pairs.select(col("b_id").as("u"), col("a_id").as("v")))
       .repartition(parts, col("v"))

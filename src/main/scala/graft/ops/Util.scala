@@ -270,14 +270,18 @@ object Util {
     * carries itself and its parent). That count is an observed metric
     * of the round's own checkpoint job, so the loop runs no separate
     * convergence job; a round is 2 shuffles and 1 action, and contracts
-    * many hops at once. `nPairs` is the pair count; partitions: ~250k
-    * both-direction edges each, clamped to 1..4096. A graph of up to
-    * ~250k both-direction edges (the sf0.01 and sf0.1 pair graphs) so
-    * runs in one partition, whose union-find solves it exactly: round 1
-    * already emits a star forest, and the loop stops after it. */
+    * many hops at once. `nPairs` is the pair count; partitions by
+    * [[loopPartitions]]. A graph of up to ~250k both-direction edges (the
+    * sf0.01 and sf0.1 pair graphs) so runs in one partition, whose
+    * union-find solves it exactly: round 1 already emits a star forest,
+    * and the loop stops after it. */
   def componentLabels(pairs: DataFrame, nPairs: Long): DataFrame =
-    componentLabels(pairs, nPairs,
-                    math.max(1L, math.min(4096L, 2L * nPairs / 250000L)).toInt, 50)
+    componentLabels(pairs, nPairs, loopPartitions(nPairs), 50)
+
+  /** Partitions of a graph loop over `nPairs` undirected pairs: ~250k
+    * both-direction edges each, clamped to 1..4096. */
+  def loopPartitions(nPairs: Long): Int =
+    math.max(1L, math.min(4096L, 2L * nPairs / 250000L)).toInt
 
   /** [[componentLabels]] with the partition count and round bound given;
     * past `maxRounds` it throws rather than return labels that are not
@@ -431,20 +435,6 @@ object Util {
     * suffix discipline as qScanDpp / the qSinkTimetravel fix. */
   def sinkDir(sub: String, sf: String): String =
     s"$scratchRoot/${sub}_" + sf.replaceAll("[^a-zA-Z0-9.]", "_")
-
-  /** Drop session-keyed cache entries whose SparkSession has stopped —
-    * the shared eviction rule for every (SparkSession, sfDir)-keyed
-    * derive-once cache (token counts, pair graph, PQ model, …).
-    * Without it a stopped session's DataFrames are retained for the
-    * process lifetime; ClusterProof deliberately runs two sessions per
-    * JVM and hit exactly that (round-7 ADVICE). Called at each cache
-    * accessor: eviction cost is O(entries), entries are O(sessions ×
-    * sfs) — single digits. */
-  def purged[V](m: java.util.concurrent.ConcurrentHashMap[(SparkSession, String), V])
-      : java.util.concurrent.ConcurrentHashMap[(SparkSession, String), V] = {
-    m.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    m
-  }
 
   /** Sweep scratch dirs named `<prefix>_p<pid>_*` whose owning JVM is
     * gone (no /proc/<pid> on this Linux-only box), plus legacy

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{SharedFrames, Tables}
 import graft.functions.VectorExpressions.dotProduct
 import Util._
 
@@ -53,12 +53,9 @@ object Vectors {
     * embeddings column IS float32, norms use the identical
     * float→double widened sum, so sims are bit-equal (pinned by the
     * forced-path PropertySpec). */
-  private val packedCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String),
-    org.apache.spark.broadcast.Broadcast[graft.functions.PackedVecs]]
   private def packedVecs(s: SparkSession, sf: String)
       : org.apache.spark.broadcast.Broadcast[graft.functions.PackedVecs] =
-    Util.purged(packedCache).computeIfAbsent((s, sf), _ => {
+    SharedFrames.getOrBuild("packedVecs", s, sf) {
       import s.implicits._
       // STREAMED fill (the M226 arc-pack discipline): sort on the
       // cluster, size the arrays from an exact count, then
@@ -100,7 +97,7 @@ object Vectors {
         s"packed store fill mismatch: filled $i of $n")
       s.sparkContext.broadcast(
         new graft.functions.PackedVecs(ids, flat, nrm, dim))
-    })
+    }
 
   /** cosine(a, b) — caller rounds for cross-engine output. */
   def cosine(a: Column, b: Column): Column =
@@ -164,12 +161,6 @@ object Vectors {
       .orderBy("a_id", "b_id")
   }
 
-  /** Session-scoped banded SRP signatures for [[aSimAnnLsh]] — the
-    * pq-model discipline: derive once per (session, sf), every later
-    * call reads the localCheckpoint. */
-  private val lshSigCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
-
   /** ANN near-dup via signed-random-projection LSH — the at-scale twin
     * of `q_dedup_embed` (no oracle: the hyperplane set is
     * implementation-specific).
@@ -202,8 +193,8 @@ object Vectors {
     *    default 0.95 at the sim-0.7 design point) so the band count can
     *    be traded explicitly.
     *  - banded signatures are a SESSION ARTIFACT (the pq-model/BPE
-    *    discipline): computed once per (session, sf) and
-    *    localCheckpoint'd — repeated calls (bench min-of-2, the ladder)
+    *    discipline): a checkpointed [[graft.SharedFrames]] entry —
+    *    repeated calls (bench min-of-2, the ladder)
     *    skip the n·planes·dim projection pass entirely.
     *  - candidate verification is a size-gated BROADCAST hash join
     *    (`graft.lsh.verifyBroadcastBytes`, default 128 MiB ≈ 250k
@@ -237,11 +228,12 @@ object Vectors {
     // sign bits packed into an int per band — ONE native expression
     // carrying the plane matrix as a codegen reference object (a
     // literal-array formulation made the plan tens of thousands of
-    // nodes and Catalyst time dwarfed execution). Session artifact:
-    // planes are seed-deterministic and (bits, L) are data-sized, so
-    // the signature frame is cacheable per (session, sf); a mid-session
-    // conf change to the lsh knobs intentionally does not invalidate it.
-    val sigs = Util.purged(lshSigCache).computeIfAbsent((s, sf), _ => {
+    // nodes and Catalyst time dwarfed execution). Session artifact
+    // (the pq-model discipline): planes are seed-deterministic and
+    // (bits, L) are data-sized, so the signature frame is a SharedFrames
+    // entry; a mid-session conf change to the lsh knobs intentionally
+    // does not invalidate it.
+    val sigs = SharedFrames.getOrBuild("lshSignatures", s, sf) {
       val rnd = new scala.util.Random(42)
       val planes: Array[Array[Double]] =
         Array.fill(nPlanes)(Array.fill(dim)(rnd.nextGaussian()))
@@ -249,7 +241,7 @@ object Vectors {
           graft.functions.VectorExpressions.srpSignature(col("dv"), planes, bitsPerBand))
         .select("vec_id", "bands")
         .serCheckpoint()
-    })
+    }
     // DATA-SIZED exchange widths (round-9 — the sf100 rung's kernel-OOM
     // catch): the candidate stream is ≈ L·n·occupancy/2 pairs (2.1B at
     // sf100's 2M vectors), and the fixture literal 64 put 33M rows +
@@ -1471,16 +1463,14 @@ object Vectors {
     * session-scoped TRAINING (the pair-graph discipline): a real
     * deployment trains the PQ model once and every consumer (index
     * build, serving, audits) loads the artifact; the cache is that
-    * artifact in session form, with the assignment frame
-    * localCheckpoint-pinned so both consumers read the same blocks. */
-  private val pqCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (Map[(Int, Int, Int), Double], DataFrame)]
+    * artifact as a [[graft.SharedFrames]] entry, with the assignment
+    * frame checkpointed so both consumers read the same rows. */
   private[graft] def pqModel(s: SparkSession, sf: String)
       : (Map[(Int, Int, Int), Double], DataFrame) =
-    Util.purged(pqCache).computeIfAbsent((s, sf), _ => {
+    SharedFrames.getOrBuild("pqModel", s, sf) {
       val (cb, assigned) = trainPq(s, sf)
       (cb, assigned.serCheckpoint())
-    })
+    }
 
   private def trainPq(s: SparkSession, sf: String)
       : (Map[(Int, Int, Int), Double], DataFrame) = {

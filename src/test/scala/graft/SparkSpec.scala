@@ -6,27 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for all suites (one JVM-wide session — Spark
   * sessions are expensive; suites must not stop() it). */
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // fixture timestamps are tz-naive (isAdjustedToUTC=false); read them
-      // as LTZ (UTC session) so unix_micros et al. see TIMESTAMP, matching
-      // the DuckDB oracle's epoch values
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.ui.enabled", "false")
-      .config("spark.checkpoint.compress", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = Posture.session("local[4]", Seq(
+    "spark.app.name" -> "graft-test",
+    "spark.sql.shuffle.partitions" -> "4",
+    "spark.sql.extensions" -> "graft.functions.GraftExtensions"))
 }
 
 trait SparkSpec extends AnyFunSuite {

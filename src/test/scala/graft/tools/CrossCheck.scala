@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Cross-algorithm consistency check (diagnostic, src/test): each
   * graded op is compared with an independent second algorithm, so a
@@ -25,19 +24,9 @@ object CrossCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/tmp/graft_sf1"
     val section = if (args.length > 1) args(1) else "all"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.checkpoint.compress", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Posture.session(s"local[${graft.Posture.cpus("16")}]", Seq(
+      "spark.sql.shuffle.partitions" -> "32",
+      "spark.sql.extensions" -> "graft.functions.GraftExtensions"))
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.functions._
 

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** sf1 fixture generator (round-5 scale-proof tooling; src/test so it
@@ -46,15 +46,8 @@ object GenSf1 {
     // optional 4th arg: regenerate only the listed tables
     val only: Option[Set[String]] =
       if (args.length > 3) Some(args(3).split(",").toSet) else None
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Posture.session(s"local[${graft.Posture.cpus("32")}]",
+      Seq("spark.sql.shuffle.partitions" -> "32"))
 
     def keySpan(df: DataFrame, c: String): Long =
       df.agg(max(col(c))).head().getLong(0) + 1L

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** ANN recall re-check at a given scale (diagnostic, src/test): the
@@ -16,19 +15,9 @@ object RecallCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/tmp/graft_sf10"
     val minRecall = if (args.length > 1) args(1).toDouble else 0.8
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.checkpoint.compress", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Posture.session(s"local[${graft.Posture.cpus("16")}]", Seq(
+      "spark.sql.shuffle.partitions" -> "32",
+      "spark.sql.extensions" -> "graft.functions.GraftExtensions"))
 
     // ground truth: brute-force cosine top-10 for vec 0 over the table
     // (one scan + a codegen'd dot product — the exact twin every ANN

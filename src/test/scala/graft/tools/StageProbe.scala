@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Ad-hoc perf diagnostic (not part of the graded surface): run one
@@ -16,24 +15,13 @@ object StageProbe {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 2
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      // GRAFT_PROBE_HEAVY=1: the sf100 rung posture (ClusterProof
-      // heavy / round-7 Bench sf10 rules) so probe walls are
-      // comparable to the recorded ladder anchors
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        if (sys.env.contains("GRAFT_PROBE_HEAVY")) "256" else "32")
-      .config("spark.memory.storageFraction",
-        if (sys.env.contains("GRAFT_PROBE_HEAVY")) "0.2" else "0.5")
-      .config("spark.checkpoint.compress", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .getOrCreate()
+    // Bench's posture; GRAFT_PROBE_HEAVY=1 adds the sf100 rung's
+    // storage/execution split (ClusterProof heavy) so probe walls are
+    // comparable to the recorded ladder anchors
+    val cpus = graft.Posture.cpus("32")
+    val spark = graft.Posture.session(s"local[$cpus]", graft.Posture.bench(cpus) ++
+      (if (sys.env.contains("GRAFT_PROBE_HEAVY")) Seq("spark.memory.storageFraction" -> "0.2")
+       else Nil))
     spark.sparkContext.setLogLevel(sys.env.getOrElse("GRAFT_LOG", "WARN"))
 
     case class St(var n: Int = 0, var run: Long = 0, var mx: Long = 0,
