@@ -1095,52 +1095,22 @@ object TextAnalysis {
     * sequence id, offset inside the first sequence, sequences straddled
     * — the index a packed-shard writer or attention-mask builder needs.
     *
-    * The global running sum is THREE-LEVEL, not one giant window
-    * (round-13 hardening of the round-12 two-level shape, whose
-    * |docs|/1024-row shard frame was itself a 10⁷-row single-task
-    * window + ungated broadcast at 10¹⁰ docs): docs shard by
-    * `doc_id div 1024` and shards super-shard by `shard div 1024`
-    * (order-aligned contiguous ranges, so prefix sums compose).
-    * Per-shard token totals window PER SUPER-SHARD (partition-local);
-    * the per-super frame — |docs|/2²⁰ rows, ~10⁴ at 10¹⁰ docs —
-    * carries the exclusive super offsets through the one remaining
-    * unpartitioned window, 2²⁰× smaller than the data. Both offset
-    * frames rejoin through [[Util.gatedBroadcast]] (loop-frame gate:
-    * past it the equi-join shuffles on the shard key instead of
-    * pinning a data-sized broadcast). All arithmetic is integer —
-    * engine-exact by construction. */
+    * The global running sum is one [[Util.rankedByRange]] over doc_id
+    * carrying Σ n_tokens as `cum` (an input AQE would read as one
+    * partition ranks in one pass; a larger one takes one range
+    * exchange and folds per-partition totals into offsets on the
+    * driver) — never an unpartitioned window. start_pos = cum −
+    * n_tokens, the exclusive prefix; a NULL n_tokens adds nothing, as
+    * in the SQL window sum. All arithmetic is integer — engine-exact
+    * by construction. */
   def qPipelinePack(s: SparkSession, sf: String): DataFrame = {
     val seqLen = 256L
-    val nDocs = Tables.rowCount(s, sf, "documents")
     val docs = Tables.documents(s, sf)
       .select(col("doc_id"),
         size(split(col("text"), " ")).cast("long").as("n_tokens"))
-      .withColumn("shard", expr("doc_id div 1024"))
-      .withColumn("sup", expr("(doc_id div 1024) div 1024"))
-    val shardTotals = docs.groupBy("sup", "shard")
-      .agg(sum(col("n_tokens")).as("shard_tokens"))
-    val supTotals = shardTotals.groupBy("sup")
-      .agg(sum(col("shard_tokens")).as("sup_tokens"))
-    val wSup = Window.orderBy("sup")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val supOff = supTotals
-      .withColumn("sup_off", coalesce(sum(col("sup_tokens")).over(wSup), lit(0L)))
-      .select("sup", "sup_off")
-    val wShIn = Window.partitionBy("sup").orderBy("shard")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = shardTotals
-      .withColumn("in_off",
-        coalesce(sum(col("shard_tokens")).over(wShIn), lit(0L)))
-      .join(Util.gatedBroadcast(s, supOff,
-        estRows = nDocs / (1024L * 1024L) + 1, bytesPerRow = 16), "sup")
-      .withColumn("shard_off", col("sup_off") + col("in_off"))
-      .select("shard", "shard_off")
-    val wIn = Window.partitionBy("shard").orderBy("doc_id")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    docs.join(Util.gatedBroadcast(s, offsets,
-        estRows = nDocs / 1024L + 1, bytesPerRow = 16), "shard")
+    Util.rankedByRange(docs, Seq(col("doc_id")), "__rk", Seq("n_tokens" -> "cum"))
       .withColumn("start_pos",
-        col("shard_off") + coalesce(sum(col("n_tokens")).over(wIn), lit(0L)))
+        coalesce(col("cum"), lit(0L)) - coalesce(col("n_tokens"), lit(0L)))
       .withColumn("end_pos", col("start_pos") + col("n_tokens") - 1L)
       .select(col("doc_id"), col("n_tokens"), col("start_pos"),
         expr(s"start_pos div $seqLen").as("seq_first"),

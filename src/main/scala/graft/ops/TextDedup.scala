@@ -898,7 +898,14 @@ object TextDedup {
     * equi-join (the `q_graph_triangles` shape, bounded by out-degree²),
     * degrees joined in, 1e4 fixed-point score via integer div; top-30
     * with full (score, u, w) tie order. */
-  def qGraphLinkpred(s: SparkSession, sf: String): DataFrame = {
+  def qGraphLinkpred(s: SparkSession, sf: String): DataFrame =
+    qGraphLinkpredWith(s, sf, canonicalPairPack(s, sf))
+
+  /** [[qGraphLinkpred]] over the given pair pack; None (a graph the
+    * pack refuses) takes the anti-join. */
+  private[graft] def qGraphLinkpredWith(
+      s: SparkSession, sf: String,
+      pack: Option[org.apache.spark.broadcast.Broadcast[Array[Long]]]): DataFrame = {
     // no per-query checkpoint: the shared pair graph is already a
     // block-cached reliable artifact; a select over it re-reads blocks
     val pairs = nearDupPairGraph(s, sf)
@@ -915,20 +922,16 @@ object TextDedup {
     val wedged = Util.hubSaltedWedges(s,
         edges.select(col("u").as("m"), col("v").as("e")), nAdj)
       .where(col("u") < col("w"))
-    // wide path (round 13): adjacency tested MAP-SIDE on the wedge
-    // stream via the canonical pair pack + bit pre-filter, BEFORE the
-    // count agg — row-identical to the historical anti-join (each
-    // wedge belongs to exactly one (u,w) group) but the clique-heavy
-    // adjacent share of wedge mass never reaches the agg hash tables
-    // or the candidate exchange. Round 14: the gate default drops to 0
-    // — same-box A/B showed the pack filter also wins at fixture scale
-    // once the wedge exchanges are width-pinned (1.91 vs 3.71 s), and
-    // the pack builder's own budget/id-range gates still route
-    // oversized graphs to the anti-join plan (PropertySpec pins both
-    // paths row-identical).
-    val wide = nAdj / 2 > s.conf.getOption("graft.graph.wideEdges")
-      .map(_.toLong).getOrElse(0L)
-    val cand = (if (wide) canonicalPairPack(s, sf, nAdj / 2) else None) match {
+    // adjacency tested MAP-SIDE on the wedge stream via the canonical
+    // pair pack + bit pre-filter, BEFORE the count agg — row-identical
+    // to the anti-join (each wedge belongs to exactly one (u,w) group)
+    // but the clique-heavy adjacent share of wedge mass never reaches
+    // the agg hash tables or the candidate exchange. A same-box A/B
+    // showed the pack filter winning at fixture scale too once the
+    // wedge exchanges are width-pinned (1.91 vs 3.71 s); the pack
+    // builder's own budget/id-range gates route oversized graphs to
+    // the anti-join (PropertySpec pins both paths row-identical).
+    val cand = pack match {
       case Some(bcEnc) =>
         wedged.where(!graft.functions.VectorExpressions.pairContains(
             col("u"), col("w"), bcEnc))
@@ -972,7 +975,14 @@ object TextDedup {
     * edges, self excluded, count per u; degree joined in so the row
     * reads (node, direct neighbors, strictly-2-hop nodes). Every
     * shuffle is keyed on node ids — no broadcast, no driver loop. */
-  def qGraph2hop(s: SparkSession, sf: String): DataFrame = {
+  def qGraph2hop(s: SparkSession, sf: String): DataFrame =
+    qGraph2hopWith(s, sf, canonicalPairPack(s, sf))
+
+  /** [[qGraph2hop]] over the given pair pack; None (a graph the pack
+    * refuses) takes the anti-join. */
+  private[graft] def qGraph2hopWith(
+      s: SparkSession, sf: String,
+      pack: Option[org.apache.spark.broadcast.Broadcast[Array[Long]]]): DataFrame = {
     val pairs = nearDupPairGraph(s, sf)
       .select(col("a_id"), col("b_id"))
     val edges = pairs
@@ -986,17 +996,13 @@ object TextDedup {
     val wedged = Util.hubSaltedWedges(s,
         edges.select(col("u").as("m"), col("v").as("e")), nAdj)
       .where(col("u") =!= col("w"))
-    // wide path (round 13): same early map-side adjacency filter as
-    // q_graph_linkpred — the candidate pairs here ride BOTH orders, so
-    // the canonical pack is probed on (least, greatest); dropping
-    // adjacent rows before the distinct is set-identical to the
-    // anti-join after it, and the clique-heavy adjacent wedge mass
-    // never reaches the distinct's exchange. Gate default 0 since
-    // round 14 (see q_graph_linkpred) — pack-ineligible graphs keep
-    // the anti-join plan.
-    val wide = nAdj / 2 > s.conf.getOption("graft.graph.wideEdges")
-      .map(_.toLong).getOrElse(0L)
-    val nonAdj = (if (wide) canonicalPairPack(s, sf, nAdj / 2) else None) match {
+    // the same early map-side adjacency filter as q_graph_linkpred —
+    // the candidate pairs here ride BOTH orders, so the canonical pack
+    // is probed on (least, greatest); dropping adjacent rows before the
+    // distinct is set-identical to the anti-join after it, and the
+    // clique-heavy adjacent wedge mass never reaches the distinct's
+    // exchange.
+    val nonAdj = pack match {
       case Some(bcEnc) =>
         wedged.where(!graft.functions.VectorExpressions.pairContains(
             least(col("u"), col("w")), greatest(col("u"), col("w")), bcEnc))
@@ -1315,10 +1321,10 @@ object TextDedup {
     cand
       .join(Util.gatedBroadcast(s,
               pfx.select(col("doc_id").as("a_id"), col("pfx").as("a_pfx")),
-              nDocs, 96, Some(128L << 20)), "a_id")
+              nDocs, 96, budgetBytes = 128L << 20), "a_id")
       .join(Util.gatedBroadcast(s,
               pfx.select(col("doc_id").as("b_id"), col("pfx").as("b_pfx")),
-              nDocs, 96, Some(128L << 20)), "b_id")
+              nDocs, 96, budgetBytes = 128L << 20), "b_id")
       // banded DP: the threshold overload is O(k·n) not O(n²) and
       // returns -1 above the bound — for surviving pairs (d ≤ 25) the
       // banded distance equals the exact one, so the oracle's plain
@@ -1558,70 +1564,58 @@ object TextDedup {
       .orderBy("doc_id")
   }
 
-  /** Triangle counting over the τ=0.6 near-dup pair graph — the graph
-    * metric that separates CLIQUE-like duplication (template families:
-    * every pair similar → triangles everywhere) from CHAIN-like drift
-    * (A≈B≈C but A≉C → zero triangles), which decides whether
-    * cluster-representative picking is safe. Wedge enumeration on the
-    * canonical a<b orientation: e(x,y) ⋈ e(y,z) gives each wedge once
-    * with x<y<z, a LEFT SEMI against the closing edge (x,z) keeps
-    * actual triangles — every triangle counted exactly once, no /3 or
-    * /6 correction. All joins are vertex-key equi-joins; the a<b
-    * orientation bounds wedges by per-node out-degree² (the standard
-    * degree-orientation trick, exact here since ids are the order).
-    * Per-node participation counts are ALL-INTEGER. */
-  /** Session-cached canonical (a<b) pair pack of the near-dup graph —
-    * the sorted `(a_id<<32 | b_id)` long[] behind
-    * [[graft.functions.PairContains]], shared by the WIDE paths of
-    * `q_graph_linkpred` and `q_graph_2hop` (round 13): their
-    * "non-adjacent only" rule was an anti-join the AGGREGATED wedge
-    * candidates had to shuffle into; with the pack (+ its executor-side
-    * bit pre-filter) adjacency is tested MAP-SIDE on the raw wedge
-    * stream BEFORE the count/distinct aggregation — each wedge row
-    * belongs to exactly one (u,w) group, so dropping adjacent groups
-    * before counting is row-identical to anti-joining after. Dup
-    * graphs are clique-heavy (template families), so a large share of
-    * wedge mass lands on ADJACENT endpoint pairs — exactly the rows
-    * the early filter deletes from the agg's hash tables and exchange.
-    * Gates mirror the triangle pack: `graft.graph.packBudget` bytes,
-    * non-negative ids < 2³¹, exact-cardinality fill check; any failure
-    * → None and the callers keep the historical anti-join plan. The
-    * budget gate runs on every call, so a forced-path test that zeroes
-    * it takes the anti-join; past it, the data-derived answer is a
-    * [[graft.SharedFrames]] entry. */
-  private[graft] def canonicalPairPack(s: SparkSession, sf: String, nPairs: Long)
-      : Option[org.apache.spark.broadcast.Broadcast[Array[Long]]] = {
-    val packBudget = s.conf.getOption("graft.graph.packBudget")
-      .map(_.toLong).getOrElse(1536L << 20)
-    if (nPairs <= 0 || nPairs * 8L > packBudget || nPairs > Int.MaxValue.toLong) None
-    else SharedFrames.getOrBuild("canonicalPairPack", s, sf) {
-      val pairs = nearDupPairGraph(s, sf).select(col("a_id"), col("b_id"))
-      // BOTH bounds gate the pack (the round-9 rule): a negative id would
-      // sign-extend through (a<<32)|b and silently corrupt the encoding
-      val bounds = pairs.agg(
-        least(min(col("a_id")), min(col("b_id"))).as("mn"),
-        greatest(max(col("a_id")), max(col("b_id"))).as("mx")).head
+  /** Packed bytes past which no pair pack is built. */
+  private val PairPackBudget = 1536L << 20
+
+  /** The `nPairs` rows of `pairs` as one sorted `(a<<32 | b)` long[],
+    * broadcast — the probe side of [[graft.functions.PairContains]].
+    * None, and the caller keeps its distributed join, when:
+    *  - the pack would pass [[PairPackBudget]];
+    *  - an id falls outside 0..2³¹−1 (a negative id would sign-extend
+    *    through the shift and corrupt the encoding);
+    *  - the frame does not hold exactly `nPairs` rows (a short or long
+    *    fill would misreport adjacency).
+    * The fill streams one partition at a time through `toLocalIterator`
+    * (a bulk collect of sf100's 116M rows decoded the whole result at
+    * once and OOM'd the driver). */
+  private def pairPack(s: SparkSession, pairs: DataFrame, a: String, b: String,
+                       nPairs: Long): Option[org.apache.spark.broadcast.Broadcast[Array[Long]]] =
+    if (nPairs <= 0 || nPairs * 8L > PairPackBudget) None
+    else {
+      val bounds = pairs.agg(least(min(col(a)), min(col(b))),
+                             greatest(max(col(a)), max(col(b)))).head
       if (bounds.isNullAt(0) || bounds.getLong(0) < 0L ||
           bounds.getLong(1) >= (1L << 31)) None
       else {
         import s.implicits._
-        // toLocalIterator, not collect — the r4 sf100 driver-OOM rule
         val enc = new Array[Long](nPairs.toInt)
-        val it = pairs
-          .select((shiftleft(col("a_id"), 32).bitwiseOR(col("b_id"))).as("e"))
+        val it = pairs.select(shiftleft(col(a), 32).bitwiseOR(col(b)))
           .as[Long].toLocalIterator()
         var i = 0
         while (it.hasNext && i < enc.length) { enc(i) = it.next(); i += 1 }
-        // exact-cardinality fill check: a short or long fill means the
-        // frame disagrees with nPairs — a trimmed pack would silently
-        // MISREPORT adjacency, so fall back to the anti-join instead
         if (i == enc.length && !it.hasNext) {
           java.util.Arrays.sort(enc)
           Some(s.sparkContext.broadcast(enc))
         } else None
       }
     }
-  }
+
+  /** Session-cached [[pairPack]] of the near-dup graph's canonical
+    * (a<b) pairs, shared by `q_graph_linkpred` and `q_graph_2hop`:
+    * their "non-adjacent only" rule was an anti-join the AGGREGATED
+    * wedge candidates had to shuffle into; with the pack (+ its
+    * executor-side bit pre-filter) adjacency is tested MAP-SIDE on the
+    * raw wedge stream BEFORE the count/distinct aggregation — each
+    * wedge row belongs to exactly one (u,w) group, so dropping adjacent
+    * groups before counting is row-identical to anti-joining after. Dup
+    * graphs are clique-heavy (template families), so a large share of
+    * wedge mass lands on ADJACENT endpoint pairs — exactly the rows the
+    * early filter deletes from the agg's hash tables and exchange. */
+  private[graft] def canonicalPairPack(s: SparkSession, sf: String)
+      : Option[org.apache.spark.broadcast.Broadcast[Array[Long]]] =
+    SharedFrames.getOrBuild("canonicalPairPack", s, sf)(
+      pairPack(s, nearDupPairGraph(s, sf), "a_id", "b_id", nearDupPairCount(s, sf)))
+
   /** Session-scoped triangle-triple frame: every triangle (x,y,z) of
     * the τ=0.6 near-dup graph, each exactly once, enumerated with the
     * degree-ordered "forward" orientation (Suri & Vassilvitskii,
@@ -1677,8 +1671,7 @@ object TextDedup {
         else w.longValue()
       }
     }
-    val wide = nPairs > s.conf.getOption("graft.graph.wideEdges")
-      .map(_.toLong).getOrElse(4000000L)
+    val wide = wideTriangles(s, nPairs)
     // triple VOLUME is clique-driven, not pair-driven (a k-clique
     // family emits k³ triples from k² pairs — triples ≈ pairs^1.5 on
     // dup graphs), so the pair-count gate alone under-reads it: sf1's
@@ -1697,22 +1690,27 @@ object TextDedup {
     else SharedFrames.getOrBuild("triangles", s, sf)(orientTriangles(s, pairs).serCheckpoint())
   }
 
+  /** Whether the triangle family takes its wide path: past
+    * `graft.graph.wideEdges` pairs (default 4M; PropertySpec sets 0 to
+    * force it onto the fixture). */
+  private def wideTriangles(s: SparkSession, nPairs: Long): Boolean =
+    nPairs > s.conf.getOption("graft.graph.wideEdges").map(_.toLong).getOrElse(4000000L)
+
   /** The forward-orientation enumeration itself, over any canonical
     * (a_id < b_id) undirected pair list — separated from the cache so
     * PropertySpec can drive it with a synthetic hub graph. */
   private[graft] def orientTriangles(s: SparkSession, pairs: DataFrame): DataFrame = {
     val nPairs = pairs.count()
-    // one-live-join override (the editdist rejoin rule): on the
-    // non-wide path the closing-edge semi join MUST build-broadcast the
-    // arc set — un-hinted, the wedge stream (Σ outdeg², the only
-    // super-linear frame here) would SORT into a merge join, the exact
-    // r2 ANN cliff (observed at sf1 once honest checkpoint stats
+    // one-live-join budget: on the non-wide path the closing-edge
+    // semi join MUST build-broadcast the arc set — un-hinted, the wedge
+    // stream (Σ outdeg², the only super-linear frame here) would SORT
+    // into a merge join, the exact r2 ANN cliff (observed at sf1 once honest checkpoint stats
     // stopped the accidental auto-broadcast). 256 MiB covers the whole
     // non-wide regime by construction: the wide gate caps this path at
     // 4M pairs ≈ 192 MiB of build side; past it the packed/semi-shuffle
     // wide rungs take over.
     def bc(df: DataFrame): DataFrame =
-      Util.gatedBroadcast(s, df, nPairs, thresholdBytes = Some(256L << 20))
+      Util.gatedBroadcast(s, df, nPairs, budgetBytes = 256L << 20)
     // Past the broadcast gate every join exchange here defaults to the
     // session shuffle width (core count) — at sf100's 116M-edge graph
     // that leaves the arc/triple checkpoints as 32 ~240 MB serialized
@@ -1720,10 +1718,8 @@ object TextDedup {
     // disk-evicted block as ONE buffer of that size per task (16
     // concurrent ⇒ heap OOM, the round-9 sf100 slot failure). Data-size
     // the arc and wedge exchanges instead; fixture..sf1 plans are
-    // untouched (gate > 4M edges; conf-overridable so PropertySpec can
-    // force the wide path onto the fixture).
-    val wide = nPairs > s.conf.getOption("graft.graph.wideEdges")
-      .map(_.toLong).getOrElse(4000000L)
+    // untouched (gate > 4M edges).
+    val wide = wideTriangles(s, nPairs)
     val wideParts = math.max(64, math.min(8192, (nPairs / 500000L).toInt))
     val edges = pairs
       .unionAll(pairs.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
@@ -1757,44 +1753,13 @@ object TextDedup {
     // into a semi join on one box's disks, and with arcs pre-hashed on
     // src the wedge join itself needs no exchange — so the closing
     // edge becomes a packed-broadcast MAP-SIDE filter instead: arcs
-    // encoded (src<<32|dst) into one sorted long[] (16 B/arc, ~1 GB at
-    // sf100), binary-searched per wedge by `graft_pair_contains`. The
-    // wedge stream then never shuffles at all. Ids ≥ 2³¹ (beyond the
-    // encoding) fall back to the distributed semi join — the shape a
-    // real cluster's aggregate disk runs anyway. Fixture..sf1 keep the
+    // encoded into one sorted long[] ([[pairPack]], ~1 GB at sf100),
+    // binary-searched per wedge by `graft_pair_contains`. The wedge
+    // stream then never shuffles at all. A graph the pack refuses
+    // falls back to the distributed semi join — the shape a real
+    // cluster's aggregate disk runs anyway. Fixture..sf1 keep the
     // historical broadcast semi join (plan-pinned).
-    val packBudget = s.conf.getOption("graft.graph.packBudget")
-      .map(_.toLong).getOrElse(1536L << 20)
-    val packedClose = if (wide && nPairs * 8L <= packBudget) {
-      // BOTH bounds gate the pack (round-9 ADVICE): a negative id would
-      // sign-extend through (src<<32)|dst and silently corrupt the
-      // encoding, so min ≥ 0 is as load-bearing as max < 2³¹
-      val bounds = arcs.agg(
-        least(min(col("src")), min(col("dst"))).as("mn"),
-        greatest(max(col("src")), max(col("dst"))).as("mx")).head
-      if (bounds.getLong(0) >= 0L && bounds.getLong(1) < (1L << 31)) {
-        import s.implicits._
-        // toLocalIterator, NOT collect (r4 sf100 slot: a bulk collect
-        // of 116M rows decodes the whole result set at once on a heap
-        // already pinning the graph's serialized checkpoints → driver
-        // OOM; streaming one partition at a time caps the transient at
-        // ~4 MB while the primitive target array fills in place)
-        val enc = new Array[Long](nPairs.toInt)
-        val it = arcs
-          .select((shiftleft(col("src"), 32).bitwiseOR(col("dst"))).as("e"))
-          .as[Long].toLocalIterator()
-        var i = 0
-        while (it.hasNext && i < enc.length) { enc(i) = it.next(); i += 1 }
-        // exact-cardinality gate (round-9 ADVICE): a short OR long fill
-        // means the arcs frame disagrees with nPairs (e.g. a
-        // non-distinct pair input) — a trimmed pack would silently MISS
-        // triangles, so fall back to the distributed semi join instead
-        if (i == enc.length && !it.hasNext) {
-          java.util.Arrays.sort(enc)
-          Some(s.sparkContext.broadcast(enc))
-        } else None
-      } else None
-    } else None
+    val packedClose = if (wide) pairPack(s, arcs, "src", "dst", nPairs) else None
     val closed = packedClose match {
       case Some(bcEnc) =>
         wedges.where(
@@ -1807,6 +1772,13 @@ object TextDedup {
     closed.select(col("src").as("x"), col("v").as("y"), col("w").as("z"))
   }
 
+  /** Triangle counting over the τ=0.6 near-dup pair graph — the graph
+    * metric that separates CLIQUE-like duplication (template families:
+    * every pair similar → triangles everywhere) from CHAIN-like drift
+    * (A≈B≈C but A≉C → zero triangles), which decides whether
+    * cluster-representative picking is safe. Per-node participation
+    * counts over [[orientedTriangleTriples]], which holds every
+    * triangle exactly once (no /3 or /6 correction); ALL-INTEGER. */
   def qGraphTriangles(s: SparkSession, sf: String): DataFrame =
     orientedTriangleTriples(s, sf)
       .select(explode(array(col("x"), col("y"), col("z"))).as("doc_id"))

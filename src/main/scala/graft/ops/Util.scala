@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Observation, SparkSession, classic}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -215,42 +215,32 @@ object Util {
       (shiftright(y, i).bitwiseAND(lit(1L)) * lit(1L << (2 * i + 1)))
     }.reduce(_ + _)
 
-  /** Size-gated broadcast for the loop-carried frames of the iterative
-    * graph family (q_dedup_cluster, q_graph_pagerank,
-    * q_graph_triangles). These frames are O(|V|)/O(|E|), not dimension
+  /** Size-gated broadcast for O(|V|)/O(|E|) frames (the iterative graph
+    * family's loop-carried label/degree frames, vocabulary and
+    * customer-dimension tables). These are not constant-size dimension
     * tables: an unconditional `broadcast()` hint hard-pins a plan that
     * at 100× node counts OOMs the driver assembling the broadcast.
     * Broadcasting them IS 30-45% faster at fixture scale (measured,
     * round 3), so the hint stays — but only while the frame's estimated
-    * size (`estRows` × `bytesPerRow`) is under
-    * `graft.loop.broadcastThreshold` bytes (default 8 MiB ≈ Spark's own
-    * equi-join runs un-hinted, i.e. as a co-partitioned shuffle join —
-    * semantics identical, plan scale-safe. PlanShapeSpec pins both
-    * branches (hinted under the gate; no BroadcastExchange above it). */
+    * size (`estRows` × `bytesPerRow`) is within `budgetBytes` (default
+    * 8 MiB, near Spark's own auto-broadcast default); past it
+    * the same equi-join runs un-hinted, i.e. as a co-partitioned
+    * shuffle join — semantics identical, plan scale-safe. A site whose
+    * build side is a flat lookup table live in one join at a time
+    * declares a larger budget (the q_dedup_editdist prefix rejoin
+    * 128 MiB, the triangle closing filter 256 MiB). A session
+    * that switches Spark's own broadcast off
+    * (`spark.sql.autoBroadcastJoinThreshold` negative) gets no hint
+    * either, so one switch closes every broadcast. PlanShapeSpec pins
+    * both branches (hinted under the gate; no BroadcastExchange with
+    * the switch off). */
   def gatedBroadcast(s: SparkSession, df: DataFrame, estRows: Long,
                      bytesPerRow: Int = 48,
-                     thresholdBytes: Option[Long] = None): DataFrame = {
-    // thresholdBytes overrides the loop-frame default for sites whose
-    // build side is a flat lookup table rather than a loop frame (the
-    // editdist prefix rejoin, the triangle closing filter): those
-    // tolerate a larger broadcast because exactly ONE such join is
-    // live at a time. The two regimes get SEPARATE conf keys
-    // (round-10 ADVICE — one shared key meant a user raising the
-    // loop-frame gate to tune label frames silently LOWERED the
-    // one-live-join sites from their declared 128-256 MiB budgets,
-    // flipping the closing-edge semi join into the sort-merge
-    // wedge-stream cliff): `graft.loop.broadcastThreshold` gates only
-    // the default-budget loop frames; `graft.join.siteBroadcastThreshold`
-    // gates only the sites that declare their own budget. Forced-path
-    // tests that want EVERY broadcast closed set both to 0.
-    val thr = thresholdBytes match {
-      case Some(site) => s.conf.getOption("graft.join.siteBroadcastThreshold")
-        .map(_.toLong).getOrElse(site)
-      case None => s.conf.getOption("graft.loop.broadcastThreshold")
-        .map(_.toLong).getOrElse(8L << 20)
-    }
-    if (estRows * bytesPerRow <= thr) broadcast(df) else df
-  }
+                     budgetBytes: Long = 8L << 20): DataFrame =
+    if (estRows * bytesPerRow <= budgetBytes &&
+        s.asInstanceOf[classic.SparkSession].sessionState.conf
+          .autoBroadcastJoinThreshold >= 0) broadcast(df)
+    else df
 
   /** Connected components of an undirected pair list (columns `a_id`,
     * `b_id`; duplicates and either orientation allowed) →

@@ -30,7 +30,7 @@ object Vectors {
   /** (vec_id, dv, nrm) with the norm computed once per vector.
     * repartition(32): the fixture table is one parquet file — without it
     * every derived pairwise op starts from a single-task scan side. */
-  private def normed(s: SparkSession, sf: String): DataFrame =
+  private[graft] def normed(s: SparkSession, sf: String): DataFrame =
     Tables.embeddings(s, sf)
       .repartition(32)
       .select(col("vec_id"), col("embedding").as("dv"))
@@ -62,9 +62,8 @@ object Vectors {
       // toLocalIterator one RANGE partition at a time straight into the
       // packed layout. The bulk collect-then-sortBy this replaces held
       // row objects AND the flat arrays simultaneously — ~2× the packed
-      // bytes of driver transient, which at the 2 GiB
-      // `graft.ann.packBudget` ceiling was the round-9 verdict's
-      // declared envelope. Now the transient is one partition's rows.
+      // bytes of driver transient, which at the 2 GiB `AnnPackBudget`
+      // ceiling was the round-9 verdict's declared envelope. Now the transient is one partition's rows.
       val src = Tables.embeddings(s, sf)
         .select(col("vec_id"), col("embedding")).sort("vec_id")
       val nL = src.count()
@@ -98,6 +97,56 @@ object Vectors {
       s.sparkContext.broadcast(
         new graft.functions.PackedVecs(ids, flat, nrm, dim))
     }
+
+  /** Float-packed bytes past which the ANN verify ladder leaves its
+    * packed-broadcast rung for shuffle-hash joins. */
+  private val AnnPackBudget = 2L << 30
+
+  /** The ANN verify ladder of [[aSimAnnLsh]], [[aSimAnnIvf]] and
+    * [[aDedupSemantic]]: exact cosine (4 places) of every candidate
+    * `(a_id, b_id)` over the `n` vectors of `v`, kept at sim ≥ 0.4, as
+    * `(a_id, b_id, sim)` — duplicates of a candidate stay duplicates.
+    * The rung follows the vector-set size (`rung` forces one):
+    *  1. ≤ `graft.ann.verifyBroadcastBytes` (default 256 MiB, both
+    *     sides counted): broadcast hash joins of the two vector sides.
+    *  2. ≤ [[AnnPackBudget]] as float-packed bytes: a broadcast-lookup
+    *     scalar (`graft_packed_cos` against [[packedVecs]]) — the
+    *     candidate stream flows map-side through the sim filter with
+    *     no shuffle and no join. Sims are bit-identical to rung 1
+    *     (float32 embeddings, the same widened sum). At sf100 this is a
+    *     530 MB broadcast against a ~600 GB vector-laden shuffle.
+    *  3. beyond (vectors exceed one executor's RAM): SHUFFLE_HASH joins
+    *     on the vector side over `candParts` partitions. A sort-merge
+    *     join would sort each task's multi-million-pair candidate slice
+    *     (UNABLE_TO_ACQUIRE_MEMORY at sf100); hash-building the
+    *     n/candParts vector slice streams candidates with no per-pair
+    *     memory. */
+  private[graft] def verifiedPairs(s: SparkSession, sf: String, cand: DataFrame,
+                                   v: DataFrame, n: Long, candParts: Int,
+                                   rung: Option[Int] = None): DataFrame = {
+    val dim = 64
+    val joinBytes = s.conf.getOption("graft.ann.verifyBroadcastBytes")
+      .map(_.toLong).getOrElse(256L << 20)
+    val scored = rung.getOrElse(
+        if (2L * n * (16L + 8L * dim) <= joinBytes) 1
+        else if (n * (8L + 4L * dim) <= AnnPackBudget) 2
+        else 3) match {
+      case 1 =>
+        cand.join(broadcast(aSide(v)), "a_id").join(broadcast(bSide(v)), "b_id")
+          .withColumn("sim", pairSim)
+      case 2 =>
+        cand.withColumn("sim", round(
+          graft.functions.VectorExpressions.packedCosine(
+            col("a_id"), col("b_id"), packedVecs(s, sf)), 4))
+      case _ =>
+        cand.repartition(candParts, col("a_id"))
+          .join(aSide(v).hint("shuffle_hash"), "a_id")
+          .repartition(candParts, col("b_id"))
+          .join(bSide(v).hint("shuffle_hash"), "b_id")
+          .withColumn("sim", pairSim)
+    }
+    scored.where(col("sim") >= 0.4).select("a_id", "b_id", "sim")
+  }
 
   /** cosine(a, b) — caller rounds for cross-engine output. */
   def cosine(a: Column, b: Column): Column =
@@ -183,27 +232,19 @@ object Vectors {
     * ints) ride the join; vectors re-join only for verification.
     *
     * Round-8 rework (the sf1→sf10 rung paid a 61× one-time step):
-    *  - the TOTAL plane budget is now a real cap (`graft.lsh.planeBudget`,
-    *    default 512): past it bands are reduced to ⌊budget/bits⌋, so
-    *    per-row signature cost AND candidate volume (∝ L) are bounded
-    *    explicitly instead of L×bits growing to 64×13 between rungs.
+    *  - the TOTAL plane budget is a real cap (512 planes): past it
+    *    bands are reduced to ⌊budget/bits⌋, so per-row signature cost
+    *    AND candidate volume (∝ L) are bounded explicitly instead of
+    *    L×bits growing to 64×13 between rungs.
     *    The round-7 doc claimed a "64 planes-budget" while capping only
     *    bands — the cap is now on planes, as stated.
-    *  - the design-recall target is exposed (`graft.lsh.recall`,
-    *    default 0.95 at the sim-0.7 design point) so the band count can
-    *    be traded explicitly.
+    *  - the design recall is 0.95 at the sim-0.7 design point.
     *  - banded signatures are a SESSION ARTIFACT (the pq-model/BPE
     *    discipline): a checkpointed [[graft.SharedFrames]] entry —
     *    repeated calls (bench min-of-2, the ladder)
     *    skip the n·planes·dim projection pass entirely.
-    *  - candidate verification is a size-gated BROADCAST hash join
-    *    (`graft.lsh.verifyBroadcastBytes`, default 128 MiB ≈ 250k
-    *    64-d vectors): the in-bucket pair stream — the only frame here
-    *    that is NOT linear-sized — flows map-side from the banded join
-    *    through both vector lookups and the cosine filter without ever
-    *    being shuffled, and the id-distinct runs on the ~1000×-smaller
-    *    verified output. Past the gate (cluster-scale corpora) the
-    *    same joins run shuffled, as before. */
+    *  - candidate verification is the size-gated ladder of
+    *    [[verifiedPairs]]. */
   def aSimAnnLsh(s: SparkSession, sf: String): DataFrame = {
     val dim = 64
     val n = Tables.rowCount(s, sf, "embeddings")
@@ -212,14 +253,11 @@ object Vectors {
       math.ceil(math.log(math.max(1.0, n.toDouble / targetBucket)) / math.log(2.0)).toInt)
     val pDesign = 1.0 - math.acos(0.7) / math.Pi
     val pBand = math.pow(pDesign, bitsPerBand)
-    val recallTarget = s.conf.getOption("graft.lsh.recall")
-      .map(_.toDouble).getOrElse(0.95)
-    val planeBudget = s.conf.getOption("graft.lsh.planeBudget")
-      .map(_.toInt).getOrElse(512)
+    val recallTarget = 0.95
+    val planeBudget = 512
     // Budget OUTERMOST (round-8 ADVICE): the recall-driven band count
     // has a 16-band floor, but the plane budget must win even against
-    // the floor — a user-set small graft.lsh.planeBudget is a hard cap,
-    // not a suggestion (min 1 band so the op stays well-formed).
+    // the floor (min 1 band so the op stays well-formed).
     val nBands = math.max(1, math.min(planeBudget / bitsPerBand,
       math.max(16, math.min(64,
         math.ceil(math.log(1.0 - recallTarget) / math.log(1.0 - pBand)).toInt))))
@@ -231,8 +269,7 @@ object Vectors {
     // nodes and Catalyst time dwarfed execution). Session artifact
     // (the pq-model discipline): planes are seed-deterministic and
     // (bits, L) are data-sized, so the signature frame is a SharedFrames
-    // entry; a mid-session conf change to the lsh knobs intentionally
-    // does not invalidate it.
+    // entry.
     val sigs = SharedFrames.getOrBuild("lshSignatures", s, sf) {
       val rnd = new scala.util.Random(42)
       val planes: Array[Array[Double]] =
@@ -262,48 +299,10 @@ object Vectors {
             Seq("band", "bv"))
       .where(col("a_id") < col("b_id"))
       .select("a_id", "b_id")
-    // 256 MiB default under the round-8-ADVICE 2×-both-sides
-    // accounting — the same effective boundary as the historical
-    // 128 MiB per-side gate, so the sf10 broadcast-verify posture is
-    // unchanged.
-    val bcastBytes = s.conf.getOption("graft.lsh.verifyBroadcastBytes")
-      .map(_.toLong).getOrElse(256L << 20)
-    // THREE verify rungs by vector-set size (round-9 — the sf100 slots
-    // measured both failure modes of a one-rung design):
-    //  1. ≤ bcastBytes: the historical broadcast hash joins (fixture
-    //     posture, plan-pinned).
-    //  2. ≤ packBudget as float-packed bytes: a broadcast-lookup SCALAR
-    //     (`graft_packed_cos` against the [[packedVecs]] artifact) — the
-    //     candidate stream flows map-side from the banding join through
-    //     the sim filter with ZERO shuffles/joins. Bit-identical sims
-    //     (embeddings are float32; same widened sum). At sf100 this is
-    //     a 530 MB broadcast vs a ~600 GB vector-laden shuffle.
-    //  3. beyond (cluster-scale corpora, vectors exceed one executor's
-    //     RAM): SHUFFLE_HASH joins on the vector side — planned as SMJ
-    //     each verify task SORTS its multi-million-pair candidate slice
-    //     (the r2 slot's UNABLE_TO_ACQUIRE_MEMORY); hash-building the
-    //     n/candParts vector slice instead streams candidates with zero
-    //     per-pair memory. The vector-laden exchange this rung pays is
-    //     what a 1000-executor cluster's aggregate disk absorbs.
-    val packBudget = s.conf.getOption("graft.ann.packBudget")
-      .map(_.toLong).getOrElse(2L << 30)
-    val scored =
-      if (2L * n * (16L + 8L * dim) <= bcastBytes)
-        cand.join(broadcast(aSide(v)), "a_id").join(broadcast(bSide(v)), "b_id")
-          .withColumn("sim", pairSim)
-      else if (n * (8L + 4L * dim) <= packBudget)
-        cand.withColumn("sim", round(
-          graft.functions.VectorExpressions.packedCosine(
-            col("a_id"), col("b_id"), packedVecs(s, sf)), 4))
-      else
-        cand.repartition(candParts, col("a_id"))
-          .join(aSide(v).hint("shuffle_hash"), "a_id")
-          .repartition(candParts, col("b_id"))
-          .join(bSide(v).hint("shuffle_hash"), "b_id")
-          .withColumn("sim", pairSim)
-    scored
-      .where(col("sim") >= 0.4)
-      .select("a_id", "b_id", "sim")
+    // the shared verify ladder: the in-bucket pair stream is the only
+    // frame here that is not linear-sized, and it never shuffles below
+    // rung 3; the id-distinct runs on the ~1000×-smaller verified output
+    verifiedPairs(s, sf, cand, v, n, candParts)
       .distinct()
       .orderBy("a_id", "b_id")
   }
@@ -422,40 +421,11 @@ object Vectors {
     // the whole multi-billion-row stream once before verification; a
     // duplicate pair now just re-verifies (codegen dots, the cheap part)
     // and the distinct runs on the ~1000×-smaller verified output.
-    // SHUFFLE_HASH verify joins, same rationale as the LSH path: no
-    // per-task sort of the candidate slice, hash-build the ~2 MiB
-    // vector slice instead.
     val cand = exploded.select(col("cell"), col("vec_id").as("a_id"))
       .join(exploded.select(col("cell"), col("vec_id").as("b_id")), Seq("cell"))
       .where(col("a_id") < col("b_id"))
       .select("a_id", "b_id")
-    // same three verify rungs as the LSH path (rung 1 here is the
-    // historical un-hinted joins AQE broadcasts at fixture scale —
-    // kept for the plan pins; see aSimAnnLsh for the full rationale)
-    val packBudget = s.conf.getOption("graft.ann.packBudget")
-      .map(_.toLong).getOrElse(2L << 30)
-    // conf-overridable (like graft.ivf.flatMax) so PropertySpec can
-    // force the packed rung onto the fixture
-    val joinBytes = s.conf.getOption("graft.ann.verifyBroadcastBytes")
-      .map(_.toLong).getOrElse(256L << 20)
-    val dim = 64
-    val scored =
-      if (2L * nVec * (16L + 8L * dim) <= joinBytes)
-        cand.join(aSide(v), "a_id").join(bSide(v), "b_id")
-          .withColumn("sim", pairSim)
-      else if (nVec * (8L + 4L * dim) <= packBudget)
-        cand.withColumn("sim", round(
-          graft.functions.VectorExpressions.packedCosine(
-            col("a_id"), col("b_id"), packedVecs(s, sf)), 4))
-      else
-        cand.repartition(candParts, col("a_id"))
-          .join(aSide(v).hint("shuffle_hash"), "a_id")
-          .repartition(candParts, col("b_id"))
-          .join(bSide(v).hint("shuffle_hash"), "b_id")
-          .withColumn("sim", pairSim)
-    scored
-      .where(col("sim") >= 0.4)
-      .select("a_id", "b_id", "sim")
+    verifiedPairs(s, sf, cand, v, nVec, candParts)
       .distinct()
       .orderBy("a_id", "b_id")
   }
@@ -804,38 +774,19 @@ object Vectors {
   // ------------------------------------------------------------------
 
   /** Exactly-k lowest-vec_id seed cells as a DISTRIBUTED frame
-    * (cell = rank−1, cvec = unit vector): range-exchange on vec_id,
-    * per-partition row_number + partition-count offsets (the
-    * distributed-rank idiom — the only collect is one row per
-    * partition), so sparse id spaces seed exactly k cells and the
-    * cell↔i-th-lowest-id mapping matches the flat path's seed array
-    * bit-for-bit (same float→double widening, same norm). */
-  private def seedCellsDistributed(s: SparkSession, vFull: DataFrame,
-                                   k: Int, n: Long): DataFrame = {
-    import s.implicits._
-    val p = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val parts = Util.serCheckpoint(vFull
-      .select(col("vec_id"), col("dv"), col("nrm"))
-      .repartitionByRange(p, col("vec_id"))
-      .withColumn("_pid", spark_partition_id()),
-      n) // two jobs (counts, rank) must see one layout
-    val cnts = parts.groupBy("_pid").agg(count(lit(1)).as("_n"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val offs = cnts.scanLeft((0, 0L)) { case ((_, acc), (pid, nn)) =>
-      (pid, acc + nn) }.init.zip(cnts).map { case ((_, off), (pid, _)) =>
-      (pid, off) }
-    val offDf = offs.toSeq.toDF("_pid", "_off")
-    val w = Window.partitionBy(col("_pid")).orderBy(col("vec_id"))
-    val seeds = parts.withColumn("_rn", row_number().over(w))
-      .join(broadcast(offDf), "_pid")
-      .where(col("_off") + col("_rn") <= k)
-      .select((col("_off") + col("_rn") - 1).cast("int").as("cell"),
-              transform(col("dv"), x => x.cast("double") / col("nrm"))
-                .as("cvec"))
-    val out = Util.serCheckpoint(seeds, k.toLong)
-    Util.dropCheckpoint(parts) // seeds are file/block-backed now
-    out
-  }
+    * (cell = rank−1, cvec = unit vector): one [[Util.rankedByRange]]
+    * over vec_id, kept at rank ≤ k, so sparse id spaces seed exactly k
+    * cells and the cell↔i-th-lowest-id mapping matches the flat path's
+    * seed array bit-for-bit (same float→double widening, same norm). */
+  private def seedCellsDistributed(vFull: DataFrame, k: Int): DataFrame =
+    Util.serCheckpoint(
+      Util.rankedByRange(vFull.select(col("vec_id"), col("dv"), col("nrm")),
+                         Seq(col("vec_id")), "_rk")
+        .where(col("_rk") <= k)
+        .select((col("_rk") - 1).cast("int").as("cell"),
+                transform(col("dv"), x => x.cast("double") / col("nrm"))
+                  .as("cvec")),
+      k.toLong)
 
   /** √k-group routing index over a DISTRIBUTED cells frame: 5 Lloyd
     * rounds, g lowest-cell-id seeds (g×d collect — the envelope),
@@ -933,9 +884,8 @@ object Vectors {
     val v = if (trainFrac >= 1.0) vFull else vFull.where(
       conv(substring(md5(col("vec_id").cast("string")), 1, 6), 16, 10)
         .cast("long") < math.floor(trainFrac * 16777216.0).toLong)
-    val n = Tables.rowCount(s, sf, "embeddings")
     val g = math.max(1, math.ceil(math.sqrt(k.toDouble)).toInt)
-    var cells = seedCellsDistributed(s, vFull, k, n)
+    var cells = seedCellsDistributed(vFull, k)
     for (_ <- 1 to iters) {
       val gc = groupIndexDistributed(cells, g)
       val mem = memberSlabs(cells, gc)
@@ -1022,13 +972,12 @@ object Vectors {
   def aDedupSemantic(s: SparkSession, sf: String): DataFrame = {
     val v = normed(s, sf)
     val n = Tables.rowCount(s, sf, "embeddings")
-    // scale knobs (README table): cluster-size target sets k = n/target
-    // (candidate volume ≈ n·target·nprobe — the linearity constant);
+    // the cluster-size target sets k = n/target (candidate volume ≈
+    // n·target·nprobe — the linearity constant); the multi-probe width
     // nprobe trades recall at low-similarity thresholds against it
     val target = s.conf.getOption("graft.semantic.clusterTarget")
       .map(_.toLong).getOrElse(256L)
-    val nprobe = s.conf.getOption("graft.semantic.nprobe")
-      .map(_.toInt).getOrElse(4)
+    val nprobe = 4
     val k = math.max(8L, n / target).toInt
     // sample-train the Lloyd passes once k grows with the corpus: the
     // trainer sees ~trainPerCell vectors per cell (FAISS-style), the
@@ -1128,31 +1077,7 @@ object Vectors {
       .join(exploded.select(col("cell"), col("vec_id").as("b_id")), Seq("cell"))
       .where(col("a_id") < col("b_id"))
       .select("a_id", "b_id")
-    // the ANN verify ladder (see aSimAnnLsh for the full rationale):
-    // broadcast joins at fixture scale, the packed-broadcast scalar in
-    // the sf10-sf100 regime (bit-identical sims — pinned by the
-    // forced-path PropertySpec), shuffle-hash past executor RAM
-    val joinBytes = s.conf.getOption("graft.ann.verifyBroadcastBytes")
-      .map(_.toLong).getOrElse(256L << 20)
-    val packBudget = s.conf.getOption("graft.ann.packBudget")
-      .map(_.toLong).getOrElse(2L << 30)
-    val dim = 64
-    val scored =
-      if (2L * n * (16L + 8L * dim) <= joinBytes)
-        cand.join(broadcast(aSide(v)), "a_id").join(broadcast(bSide(v)), "b_id")
-          .withColumn("sim", pairSim)
-      else if (n * (8L + 4L * dim) <= packBudget)
-        cand.withColumn("sim", round(
-          graft.functions.VectorExpressions.packedCosine(
-            col("a_id"), col("b_id"), packedVecs(s, sf)), 4))
-      else
-        cand.repartition(candParts, col("a_id"))
-          .join(aSide(v).hint("shuffle_hash"), "a_id")
-          .repartition(candParts, col("b_id"))
-          .join(bSide(v).hint("shuffle_hash"), "b_id")
-          .withColumn("sim", pairSim)
-    scored
-      .where(col("sim") >= 0.4)
+    verifiedPairs(s, sf, cand, v, n, candParts)
       .groupBy(col("b_id").as("vec_id"))
       // countDistinct, not count: multi-probe can surface the same
       // (a,b) pair through several shared cells

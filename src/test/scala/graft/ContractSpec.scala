@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 /** §5.2(2) oracle-parity dry-run: catches contract drift before the
   * driver does — every oracleSql key must exist in queries, every query
   * must run on sf0.001, and the flagship entry() must return rows. */
@@ -59,5 +61,29 @@ class ContractSpec extends SparkSpec {
     val unregistered = declared -- registered
     assert(undeclared.isEmpty, s"keys missing from SURVEY §2: $undeclared")
     assert(unregistered.isEmpty, s"SURVEY keys with no implementation: $unregistered")
+  }
+
+  test("README's Scale knobs table lists exactly the graft.* confs src/main reads") {
+    // read = a "graft.x.y" string literal in main code whose segments
+    // are all lower-camel (a class name such as "graft.sources.
+    // GraftCatalog" has a capitalized segment); listed = a backticked
+    // key in the first column of the table's rows
+    val lit = "\"(graft(?:\\.[a-z][A-Za-z0-9]*)+)\"".r
+    val read = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap(f => lit.findAllMatchIn(
+        new String(java.nio.file.Files.readAllBytes(f), "UTF-8")).map(_.group(1)))
+      .toSet
+    val readme = scala.io.Source.fromFile("README.md", "UTF-8")
+    val table = try readme.getLines()
+        .dropWhile(!_.startsWith("## Scale knobs")).drop(1)
+        .takeWhile(!_.startsWith("## ")).filter(_.startsWith("| `")).toList
+      finally readme.close()
+    val listed = table.flatMap(row => "`(graft\\.[A-Za-z0-9.]+)`".r
+      .findAllMatchIn(row.split('|')(1)).map(_.group(1))).toSet
+    assert(read.nonEmpty && listed.nonEmpty, "found no confs or no table")
+    assert((read -- listed).isEmpty, s"confs read but not in the README table: ${read -- listed}")
+    assert((listed -- read).isEmpty, s"README table rows no code reads: ${listed -- read}")
   }
 }

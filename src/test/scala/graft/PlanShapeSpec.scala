@@ -195,11 +195,6 @@ class PlanShapeSpec extends SparkSpec {
     val pairs = ((1 to 200).map(i => (0L, i.toLong)) ++
                  (1 to 50).map(i => (i.toLong, (i + 1).toLong)))
       .distinct.toDF("a_id", "b_id")
-    val gateKey = "graft.loop.broadcastThreshold"
-    // orientTriangles' closing-edge semi join declares its own 256 MiB
-    // one-live-join budget, gated by the SITE key (round-10 ADVICE
-    // split) — closing every broadcast needs both keys at 0
-    val siteKey = "graft.join.siteBroadcastThreshold"
     val autoKeys = Seq("spark.sql.autoBroadcastJoinThreshold",
                        "spark.sql.adaptive.autoBroadcastJoinThreshold")
     // default path: gate open at this scale → broadcast wedge joins
@@ -207,12 +202,11 @@ class PlanShapeSpec extends SparkSpec {
     val hintedRows = hinted.collect().map(_.toString).sorted.toSeq
     assert(plan(hinted).contains("BroadcastHashJoin"),
            s"gate should broadcast at fixture scale:\n${plan(hinted)}")
-    // fallback path: gate closed (threshold 0) + Spark's own auto
-    // broadcast off, so the plan must degrade to shuffle joins — this
-    // is the shape the same code produces at 100× |E|
+    // fallback path: Spark's own auto broadcast off withholds every
+    // gated hint too (the 256 MiB closing-edge site included), so the
+    // plan must degrade to shuffle joins — the shape the same code
+    // produces at 100× |E|
     val prev = autoKeys.map(k => k -> spark.conf.getOption(k))
-    spark.conf.set(gateKey, "0")
-    spark.conf.set(siteKey, "0")
     autoKeys.foreach(spark.conf.set(_, "-1"))
     try {
       val fb = TextDedup.orientTriangles(spark, pairs)
@@ -222,8 +216,6 @@ class PlanShapeSpec extends SparkSpec {
              s"gate closed but plan still broadcasts:\n$p")
       assert(fbRows == hintedRows, "fallback path changed the result")
     } finally {
-      spark.conf.unset(gateKey)
-      spark.conf.unset(siteKey)
       prev.foreach { case (k, v) =>
         v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
     }
@@ -235,7 +227,6 @@ class PlanShapeSpec extends SparkSpec {
     * sort-merge join — the shape the same code produces on a
     * web-corpus vocabulary. Results must be identical on either path. */
   test("q_text_tfidf + q_text_rarity + q_text_unigram_lm gate the vocab df broadcast, shuffle fallback above") {
-    val gateKey = "graft.loop.broadcastThreshold"
     val autoKeys = Seq("spark.sql.autoBroadcastJoinThreshold",
                        "spark.sql.adaptive.autoBroadcastJoinThreshold")
     for (q <- Seq(TextDedup.qTextTfidf(_, _), TextDedup.qTextRarity(_, _),
@@ -246,7 +237,6 @@ class PlanShapeSpec extends SparkSpec {
              s"gate should broadcast the df table at fixture scale:\n${plan(hinted)}")
       assert(!plan(hinted).contains("SortMergeJoin"))
       val prev = autoKeys.map(k => k -> spark.conf.getOption(k))
-      spark.conf.set(gateKey, "0")
       autoKeys.foreach(spark.conf.set(_, "-1"))
       try {
         val fb = q(spark, sf)
@@ -256,7 +246,6 @@ class PlanShapeSpec extends SparkSpec {
         assert(fb.collect().map(_.toString).toSeq == hintedRows,
                "fallback path changed the result")
       } finally {
-        spark.conf.unset(gateKey)
         prev.foreach { case (k, v) =>
           v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
       }
@@ -271,7 +260,6 @@ class PlanShapeSpec extends SparkSpec {
     * forced broadcast OOMs the driver. nation/region stay hinted in
     * BOTH regimes. Results must be identical on either path. */
   test("customer-dim joins gate the broadcast, shuffle fallback above") {
-    val gateKey = "graft.loop.broadcastThreshold"
     val autoKeys = Seq("spark.sql.autoBroadcastJoinThreshold",
                        "spark.sql.adaptive.autoBroadcastJoinThreshold")
     for (q <- Seq(Joins.qJoinBroadcast(_, _), Joins.qJoinStar(_, _),
@@ -284,7 +272,6 @@ class PlanShapeSpec extends SparkSpec {
              !plan(hinted).contains("ShuffledHashJoin"),
              s"fixture-scale star plan must not shuffle the fact side:\n${plan(hinted)}")
       val prev = autoKeys.map(k => k -> spark.conf.getOption(k))
-      spark.conf.set(gateKey, "0")
       autoKeys.foreach(spark.conf.set(_, "-1"))
       try {
         val fb = q(spark, sf)
@@ -294,7 +281,6 @@ class PlanShapeSpec extends SparkSpec {
         assert(fb.collect().map(_.toString).toSeq == hintedRows,
                "fallback path changed the result")
       } finally {
-        spark.conf.unset(gateKey)
         prev.foreach { case (k, v) =>
           v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
       }
@@ -381,16 +367,17 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q_dedup_cluster + q_graph_pagerank are correct on the shuffle fallback path") {
-    val gateKey = "graft.loop.broadcastThreshold"
+    val autoKeys = Seq("spark.sql.autoBroadcastJoinThreshold",
+                       "spark.sql.adaptive.autoBroadcastJoinThreshold")
     val clusterRows = TextDedup.qDedupCluster(spark, sf).collect().map(_.toString).toSeq
     val prRows = TextDedup.qGraphPagerank(spark, sf).collect().map(_.toString).toSeq
-    spark.conf.set(gateKey, "0")
+    autoKeys.foreach(spark.conf.set(_, "-1"))
     try {
       assert(TextDedup.qDedupCluster(spark, sf).collect().map(_.toString).toSeq
                == clusterRows, "cluster fallback path changed the result")
       assert(TextDedup.qGraphPagerank(spark, sf).collect().map(_.toString).toSeq
                == prRows, "pagerank fallback path changed the result")
-    } finally spark.conf.unset(gateKey)
+    } finally autoKeys.foreach(spark.conf.unset)
   }
 
   test("q_join_theta_range plans as a hash equi-join on the bucket key") {
@@ -798,16 +785,11 @@ class PlanShapeSpec extends SparkSpec {
            "the surviving unpartitioned window must be the decile-frame cumsum")
   }
 
-  test("q_pipeline_pack: only the super-shard frame (|docs|/2^20) windows unpartitioned") {
+  test("q_pipeline_pack: start positions ride rankedByRange, no unpartitioned window") {
     val df = TextAnalysis.qPipelinePack(spark, sf)
-    val un = windowNodes(df).filter(_.partitionSpec.isEmpty)
-    assert(un.size == 1,
-           s"expected exactly the super-shard offset window, got ${un.size}")
-    // the window node's own output carries the pre-projection window
-    // buffer (_we0) plus its child's columns — identify the frame by
-    // the per-super total it cumulates
-    assert(un.head.output.exists(_.name == "sup_tokens"),
-           "the surviving unpartitioned window must be the super-shard cumsum")
+    assert(unpartitioned(df) == 0,
+           "the per-doc running token sum must never sort in one window task")
+    assertGatedRanks("q_pipeline_pack", df)
   }
 
   test("docGrams8 build plan has no Window and no Sort (round-13 map-side shingles)") {
@@ -838,24 +820,16 @@ class PlanShapeSpec extends SparkSpec {
     assert(got == ref, s"gram frames differ: got ${got.size} rows, ref ${ref.size}")
   }
 
-  test("q_pipeline_pack forced path: with both broadcast gates at 0 the offsets rejoin as shuffle joins, rows identical") {
-    val base = TextAnalysis.qPipelinePack(spark, sf).collect().toSet
-    val autoKeys = Seq("spark.sql.autoBroadcastJoinThreshold",
-                       "spark.sql.adaptive.autoBroadcastJoinThreshold")
-    spark.conf.set("graft.loop.broadcastThreshold", "0")
-    spark.conf.set("graft.join.siteBroadcastThreshold", "0")
-    autoKeys.foreach(spark.conf.set(_, "-1"))
-    try {
-      val forced = TextAnalysis.qPipelinePack(spark, sf)
-      assert(!plan(forced).contains("BroadcastExchange"),
-             s"gate at 0 must close every offset broadcast:\n${plan(forced)}")
-      assert(forced.collect().toSet == base,
-             "offset placement must be identical on the shuffle-join path")
-    } finally {
-      spark.conf.unset("graft.loop.broadcastThreshold")
-      spark.conf.unset("graft.join.siteBroadcastThreshold")
-      autoKeys.foreach(spark.conf.unset)
-    }
+  test("q_pipeline_pack forced path: the range-exchange rank gives identical rows") {
+    val base = TextAnalysis.qPipelinePack(spark, sf).collect().toSeq
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1b")
+    val forced = TextAnalysis.qPipelinePack(s, sf)
+    val ranks = rankInputs(forced)
+    assert(ranks == Seq("range"),
+           s"minPartitionSize=1b must rank over a range exchange, got $ranks")
+    assert(forced.collect().toSeq == base,
+           "offset placement must be identical on the range-exchange path")
   }
 
   // ---- SmallSortStrategy: a global ORDER BY over an input AQE would

@@ -341,7 +341,6 @@ class PropertySpec extends SparkSpec {
     val lshDefault = Vectors.aSimAnnLsh(spark, sf).collect().toSeq
     val ivfDefault = Vectors.aSimAnnIvf(spark, sf).collect().toSeq
     val semDefault = Vectors.aDedupSemantic(spark, sf).collect().toSeq
-    spark.conf.set("graft.lsh.verifyBroadcastBytes", "0")
     spark.conf.set("graft.ann.verifyBroadcastBytes", "0")
     try {
       val lshPacked = Vectors.aSimAnnLsh(spark, sf).collect().toSeq
@@ -355,10 +354,29 @@ class PropertySpec extends SparkSpec {
       val semPacked = Vectors.aDedupSemantic(spark, sf).collect().toSeq
       assert(semPacked == semDefault,
              "semantic-dedup packed-lookup verify diverged from the join verify")
-    } finally {
-      spark.conf.unset("graft.lsh.verifyBroadcastBytes")
-      spark.conf.unset("graft.ann.verifyBroadcastBytes")
+    } finally spark.conf.unset("graft.ann.verifyBroadcastBytes")
+  }
+
+  test("ANN verify ladder: each forced rung gives the same (a_id, b_id, sim) rows") {
+    // rung 3 (shuffle-hash joins) only engages past the 2 GiB packed
+    // budget, so no query key reaches it on a fixture: drive the shared
+    // ladder directly, once per rung, over the exact twin's near-dup
+    // pairs plus every pair of the 30 lowest ids (mostly below τ, so
+    // the sim filter is exercised too), and require identical rows
+    val v = Vectors.normed(spark, sf)
+    val ids = v.select(col("vec_id")).where(col("vec_id") < 30)
+    val cand = Vectors.qDedupEmbed(spark, sf).select("a_id", "b_id")
+      .unionByName(ids.select(col("vec_id").as("a_id"))
+        .crossJoin(ids.select(col("vec_id").as("b_id")))
+        .where(col("a_id") < col("b_id")))
+    val n = Tables.rowCount(spark, sf, "embeddings")
+    val rows = (1 to 3).map { r =>
+      Vectors.verifiedPairs(spark, sf, cand, v, n, 8, Some(r))
+        .collect().map(_.toString).sorted.toSeq
     }
+    assert(rows.head.nonEmpty, "no candidate cleared sim 0.4")
+    assert(rows(1) == rows.head, "packed rung diverged from the broadcast-join rung")
+    assert(rows(2) == rows.head, "shuffle-hash rung diverged from the broadcast-join rung")
   }
 
   test("IVF product-quantizer branch (forced onto the fixture): precision 1.0, candidates sane") {
@@ -656,7 +674,7 @@ class PropertySpec extends SparkSpec {
     assert(bad == 0, "running total must telescope to the exact user total")
   }
 
-  test("sequence packing: contiguous exact cover, straddle math, sparse-id two-level prefix") {
+  test("sequence packing: contiguous exact cover, straddle math, sparse-id ranked prefix") {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.expressions.Window
     val p = graft.ops.TextAnalysis.qPipelinePack(spark, sf).cache()
@@ -676,34 +694,27 @@ class PropertySpec extends SparkSpec {
       ((col("start_pos") + col("n_tokens") - 1) / 256).cast("long")
         - (col("start_pos") / 256).cast("long") + 1).count()
     assert(badSeq == 0, "n_seqs must count touched blocks")
-    // sparse ids (doc_id × 7 + 3): the div-1024 sharding makes copies
-    // land in DIFFERENT shards, yet the two-level prefix must still
-    // telescope — same contiguity invariant on a gappy id space
-    val sparse = Tables.documents(spark, sf)
-      .withColumn("doc_id", col("doc_id") * 7 + 3)
-    val shards = p.select((col("doc_id") / 1024).cast("long")).distinct.count()
-    val sp = {
-      // the operator's own two-level arithmetic, applied to the sparse
-      // frame (the operator reads the fixture table, so inline the body)
-      val docs = sparse.select(col("doc_id"),
-        size(split(col("text"), " ")).cast("long").as("n_tokens"))
-        .withColumn("shard", expr("doc_id div 1024"))
-      val wSh = Window.orderBy("shard").rowsBetween(Window.unboundedPreceding, -1)
-      val offsets = docs.groupBy("shard").agg(sum(col("n_tokens")).as("st"))
-        .withColumn("off", coalesce(sum(col("st")).over(wSh), lit(0L)))
-        .select("shard", "off")
-      val wIn = Window.partitionBy("shard").orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      docs.join(broadcast(offsets), "shard")
-        .withColumn("start_pos",
-          col("off") + coalesce(sum(col("n_tokens")).over(wIn), lit(0L)))
-    }
+    // sparse ids (doc_id × 7 + 3) through the operator's own arithmetic
+    // (it reads the fixture table, so the body is inlined): one
+    // rankedByRange carrying Σ n_tokens, forced onto its range exchange
+    // (minPartitionSize=1b), so the per-partition offsets must telescope
+    // across partition boundaries on a gappy id space
+    val rs = spark.newSession()
+    rs.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1b")
+    val sparse = Tables.documents(rs, sf)
+      .select((col("doc_id") * 7 + 3).as("doc_id"),
+              size(split(col("text"), " ")).cast("long").as("n_tokens"))
+    val sp = graft.ops.Util.rankedByRange(sparse, Seq(col("doc_id")), "rk",
+        Seq("n_tokens" -> "cum"))
+      .withColumn("start_pos", col("cum") - col("n_tokens"))
+      .cache()
     val spBad = sp.withColumn("prev_end",
         lag(col("start_pos") + col("n_tokens"), 1, 0L).over(Window.orderBy("doc_id")))
       .where(col("start_pos") =!= col("prev_end")).count()
-    assert(spBad == 0, "two-level prefix must telescope on a sparse id space")
-    assert(sp.select(col("shard")).distinct.count() > shards,
-      "sparse ids must actually exercise multiple shards")
+    assert(spBad == 0, "the rank's running sum must telescope on a sparse id space")
+    assert(sp.select(spark_partition_id()).distinct.count() > 1,
+      "the sparse rank must actually span several range partitions")
+    sp.unpersist()
     p.unpersist(); ()
   }
 
@@ -1144,19 +1155,17 @@ class PropertySpec extends SparkSpec {
   }
 
   test("linkpred/2hop wide path: map-side pair-pack adjacency filter is row-identical to the anti-join") {
-    // round 14: the pack filter IS the default (gate 0); the anti-join
-    // branch (the pack-ineligible fallback) is forced by raising the
-    // gate past the fixture edge count, and both paths must agree.
-    // Eligibility first, so a fixture that outgrew the pack gates
-    // fails apart from a default path that stopped using the pack.
-    val nPairs = TextDedup.nearDupPairGraph(spark, sf).count()
-    assert(TextDedup.canonicalPairPack(spark, sf, nPairs).isDefined,
+    // the pack filter is the default; the anti-join branch (the
+    // pack-ineligible fallback) is forced by passing no pack, and both
+    // paths must agree. Eligibility first, so a fixture that outgrew
+    // the pack gates fails apart from a default path that stopped
+    // using the pack.
+    assert(TextDedup.canonicalPairPack(spark, sf).isDefined,
            "the fixture pair graph is outside the pair-pack gates")
-    spark.conf.set("graft.graph.wideEdges", Long.MaxValue.toString)
-    val (antiLp, anti2h) = try {
-      (TextDedup.qGraphLinkpred(spark, sf).collect().map(_.toString).sorted.toSeq,
-       TextDedup.qGraph2hop(spark, sf).collect().map(_.toString).sorted.toSeq)
-    } finally spark.conf.unset("graft.graph.wideEdges")
+    val antiLp = TextDedup.qGraphLinkpredWith(spark, sf, None)
+      .collect().map(_.toString).sorted.toSeq
+    val anti2h = TextDedup.qGraph2hopWith(spark, sf, None)
+      .collect().map(_.toString).sorted.toSeq
     val lp = TextDedup.qGraphLinkpred(spark, sf)
     assert(lp.queryExecution.optimizedPlan.toString.contains("graft_pair_contains"),
            "default-path linkpred did not use the packed adjacency filter")
