@@ -63,6 +63,7 @@ object ClusterProof {
     "q_dedup_cluster",        // union-find contraction CC over the shared pair graph
     "q_graph_cc_star",        // the same op under its own graded key
     "q_graph_degree_dist",
+    "q_graph_2core", "q_graph_bfs", "q_graph_pagerank", // per-component kernels
     "q_dedup_profile",
     "q_text_contamination",   // shared 8-gram shingle frame
     "q_text_bigram_lm",       // shared bigram frame

@@ -828,64 +828,52 @@ object TextDedup {
     * (already filtered) pair list — nothing data-sized past the pair
     * stage. */
   def qGraphDegreeDist(s: SparkSession, sf: String): DataFrame = {
-    val pairs = nearDupPairGraph(s, sf)
-      .select(col("a_id"), col("b_id"))
-    pairs.select(col("a_id").as("id"))
-      .unionAll(pairs.select(col("b_id").as("id")))
-      .groupBy(col("id")).agg(count(lit(1)).as("degree"))
+    directedEdges(nearDupPairGraph(s, sf))
+      .groupBy(col("u")).agg(count(lit(1)).as("degree"))
       .groupBy(col("degree")).agg(count(lit(1)).as("n_nodes"))
       .orderBy("degree")
   }
+
+  /** Both directions of an undirected (`a_id`, `b_id`) pair list, as
+    * (`u`, `v`): the SQL edge list `pairs ∪ swapped`. */
+  private def directedEdges(pairs: DataFrame): DataFrame =
+    pairs.select(col("a_id").as("u"), col("b_id").as("v"))
+      .unionAll(pairs.select(col("b_id").as("u"), col("a_id").as("v")))
 
   /** 2-core of the τ=0.6 near-dup graph by iterative degree peeling —
     * separates DENSE duplication structure (template families, where
     * every member has ≥2 near-dup neighbors even after pruning) from
     * pendant/chain noise that degree-1 trimming dissolves; the
     * standard preprocessing cut before any clique-ish analysis
-    * (triangles, community detection) on a dup graph. Each round: one
-    * degree hash-agg, two semi-join-shaped filters of the edge list
-    * against the surviving-node set (gated broadcast, the loop-frame
-    * rule), localCheckpoint per round; stops at the edge-count
-    * fixpoint (monotone decreasing — equality IS convergence, no
-    * anti-join), bounded at 10 rounds to mirror the oracle's unrolled
-    * bound (rounds past the fixpoint are identities, so the results
-    * agree whether or not the bound is hit). ALL-INTEGER output:
+    * (triangles, community detection) on a dup graph. The oracle's 10
+    * unrolled synchronous rounds each keep the edges whose two ends
+    * both have degree ≥ 2; a round reads only a node's neighbours, so
+    * each connected component peels on its own in one task
+    * ([[Util.perComponent]]), and stops after a round that removes
+    * nothing (later rounds are identities). ALL-INTEGER output:
     * (node, within-core degree). */
-  def qGraph2core(s: SparkSession, sf: String): DataFrame = {
-    val pairs = nearDupPairGraph(s, sf)
-      .select(col("a_id"), col("b_id"))
-    val nP = nearDupPairCount(s, sf)
-    val parts = loopPartitions(nP)
-    // pre-partition on u ONCE (round 14): the checkpoint pins the
-    // layout and the round's broadcast joins preserve the streamed
-    // side's partitioning, so the per-round degree groupBy(u) is
-    // exchange-free every round — the loop shuffles nothing at fixture
-    // scale and only the keep-frame past the broadcast gate
-    var edges = pairs
-      .unionAll(pairs.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
-      .select(col("a_id").as("u"), col("b_id").as("v"))
-      .repartition(parts, col("u"))
-      .serCheckpoint(2L * nP)
-    var nEdges = edges.count()
-    def bc(df: DataFrame): DataFrame = Util.gatedBroadcast(s, df, nEdges)
-    var converged = nEdges == 0
-    var rounds = 0
-    while (!converged && rounds < 10) {
-      val keep = edges.groupBy(col("u")).agg(count(lit(1)).as("d"))
-        .where(col("d") >= 2).select(col("u"))
-      val next = edges.join(bc(keep), "u")
-        .join(bc(keep.select(col("u").as("v"))), "v")
-        .select(col("u"), col("v"))
-        .serCheckpoint(nEdges)
-      val n2 = next.count()
-      converged = n2 == nEdges
-      Util.dropCheckpoint(edges) // predecessor files dead once `next` exists
-      edges = next
-      nEdges = n2
+  def qGraph2core(s: SparkSession, sf: String): DataFrame =
+    graph2core(nearDupPairGraph(s, sf), nearDupPairCount(s, sf)).orderBy("doc_id")
+
+  /** [[qGraph2core]]'s unordered rows over any pair list. */
+  private[graft] def graph2core(pairs: DataFrame, nPairs: Long): DataFrame =
+    Util.perComponent(pairs, nPairs)(peel2core).toDF("doc_id", "core_degree")
+
+  private def peel2core(a: Array[Long], b: Array[Long]): Iterator[(Long, Long)] = {
+    val g = Util.LocalGraph(a, b)
+    // a removed node's degree is 0, so `deg ≥ 2` is the round's keep set,
+    // and equal degree arrays mean the round removed no edge
+    var deg = Array.tabulate(g.n)(g.deg)
+    var (rounds, removed) = (0, true)
+    while (removed && rounds < 10) {
+      val keep = deg.map(_ >= 2)
+      val next = Array.tabulate(g.n)(i =>
+        if (!keep(i)) 0 else (g.off(i) until g.off(i + 1)).count(k => keep(g.nbr(k))))
+      removed = !java.util.Arrays.equals(next, deg)
+      deg = next
       rounds += 1
     }
-    edges.groupBy(col("u").as("doc_id")).agg(count(lit(1)).as("core_degree"))
-      .orderBy("doc_id")
+    Iterator.range(0, g.n).filter(deg(_) > 0).map(i => (g.ids(i), deg(i).toLong))
   }
 
   /** Common-neighbor link prediction over the τ=0.6 near-dup graph —
@@ -910,9 +898,7 @@ object TextDedup {
     // block-cached reliable artifact; a select over it re-reads blocks
     val pairs = nearDupPairGraph(s, sf)
       .select(col("a_id"), col("b_id"))
-    val edges = pairs
-      .unionAll(pairs.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
-      .select(col("a_id").as("u"), col("b_id").as("v"))
+    val edges = directedEdges(pairs)
     val deg = edges.groupBy(col("u")).agg(count(lit(1)).as("d"))
     // distance-2 candidates need ALL wedges (no orientation shortcut),
     // so the skew guard is the hub-salted layout: a hub mid-vertex's
@@ -983,11 +969,7 @@ object TextDedup {
   private[graft] def qGraph2hopWith(
       s: SparkSession, sf: String,
       pack: Option[org.apache.spark.broadcast.Broadcast[Array[Long]]]): DataFrame = {
-    val pairs = nearDupPairGraph(s, sf)
-      .select(col("a_id"), col("b_id"))
-    val edges = pairs
-      .unionAll(pairs.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
-      .select(col("a_id").as("u"), col("b_id").as("v"))
+    val edges = directedEdges(nearDupPairGraph(s, sf))
     val deg = edges.groupBy(col("u")).agg(count(lit(1)).as("deg"))
     // all-wedges enumeration is inherent to exact 2-hop reach; the
     // hub-salted layout spreads a hub mid-vertex's deg² rows across
@@ -1032,11 +1014,7 @@ object TextDedup {
     * the canonical (v<w) pair list, 1e4 fixed-point cc via integer
     * div. Every shuffle keys on node ids; no broadcast, no loop. */
   def qGraphClustercoef(s: SparkSession, sf: String): DataFrame = {
-    val pairs = nearDupPairGraph(s, sf)
-      .select(col("a_id"), col("b_id"))
-    val edges = pairs
-      .unionAll(pairs.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
-      .select(col("a_id").as("u"), col("b_id").as("v"))
+    val edges = directedEdges(nearDupPairGraph(s, sf))
     val deg = edges.groupBy(col("u")).agg(count(lit(1)).as("deg"))
     // t(u) from the SHARED degree-oriented triangle frame (each
     // triangle once, credit all three corners) — replaces the per-node
@@ -1072,11 +1050,7 @@ object TextDedup {
     * to 6dp at the end. Shape: degree hash-agg, two node-keyed joins to
     * decorate edges, constant-size final agg — one row out. */
   def qGraphAssortativity(s: SparkSession, sf: String): DataFrame = {
-    val pairs = nearDupPairGraph(s, sf)
-      .select(col("a_id"), col("b_id"))
-    val edges = pairs
-      .unionAll(pairs.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
-      .select(col("a_id").as("u"), col("b_id").as("v"))
+    val edges = directedEdges(nearDupPairGraph(s, sf))
     val deg = edges.groupBy(col("u")).agg(count(lit(1)).as("d"))
     edges
       .join(deg.select(col("u"), col("d").as("du")), "u")
@@ -1107,71 +1081,31 @@ object TextDedup {
     * family spread?) and the third member of the iterative-graph
     * family (CC labels, PageRank mass, now distances).
     *
-    * Shape: min-distance relaxation — per round, every labeled node
-    * offers dist+1 to its neighbors through ONE equi-join on the edge
-    * list (gated broadcast, like the CC/PageRank loop frames), then a
-    * min-groupBy; rounds stop when the (count, Σdist) signature is a
-    * fixpoint (both read the round's checkpointed blocks, no extra
-    * shuffle — Σdist is monotone non-increasing and count monotone
-    * non-decreasing, so signature equality IS set equality here, no
-    * anti-join needed). All-INTEGER output. The 20-hop bound matches
-    * the oracle's recursion bound; fixture eccentricities close in <6
-    * rounds. */
-  def qGraphBfs(s: SparkSession, sf: String): DataFrame = {
-    val pairs = nearDupPairGraph(s, sf)
-      .select(col("a_id"), col("b_id"))
-    val nP = nearDupPairCount(s, sf)
-    val parts = loopPartitions(nP)
-    // edges pre-partitioned on the JOIN key (v) once, before the loop:
-    // the checkpoint pins the layout, so the per-round offers join
-    // re-shuffles only the frontier side past the broadcast gate
-    // (round 14; previously the 2|E| frame re-exchanged every round on
-    // the non-broadcast path)
-    val edges = pairs
-      .unionAll(pairs.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
-      .select(col("a_id").as("u"), col("b_id").as("v"))
-      .repartition(parts, col("v"))
-      .serCheckpoint(2L * nP)
-    val nNodes = edges.select("u").distinct().count()
-    def bc(df: DataFrame): DataFrame = Util.gatedBroadcast(s, df, nNodes)
-    // distC is always the round's checkpoint ROOT (the dropCheckpoint
-    // target); distView normalizes away the settled flag later rounds
-    // carry
-    var distC = edges.select(col("u").as("id")).distinct()
-      .where(col("id") % 100 === 0)
-      .select(col("id"), lit(0L).as("dist"))
-      .serCheckpoint(2L * nP)
-    def distView = distC.select(col("id"), col("dist"))
-    // FRONTIER relaxation (round 14): in unweighted multi-source BFS a
-    // node's distance is FINAL the round it is first labeled, so only
-    // the nodes labeled last round can improve a neighbor — offers from
-    // the settled interior are always re-offers the min-groupBy would
-    // discard. Each round joins edges against the frontier alone,
-    // unions the standing distances, and keeps min(dist) plus a
-    // settled flag; the new frontier is the unsettled remainder, and
-    // an EMPTY frontier is the convergence check itself (one count of
-    // the round's checkpointed blocks — the previous shape needed a
-    // full extra no-change round to observe a stable signature).
-    var frontier = distView
-    var frontN = frontier.count()
-    var rounds = 0
-    while (frontN > 0 && rounds < 20) {
-      val offers = edges
-        .join(bc(frontier.select(col("id").as("v"), col("dist"))), "v")
-        .select(col("u").as("id"), (col("dist") + 1L).as("dist"))
-      val next = distView.withColumn("settled", lit(true))
-        .unionByName(offers.withColumn("settled", lit(false)))
-        .groupBy("id").agg(min(col("dist")).as("dist"),
-                           max(col("settled")).as("settled"))
-        .serCheckpoint(2L * nP)
-      frontier = next.where(!col("settled")).select(col("id"), col("dist"))
-      frontN = frontier.count() // block read — the convergence check
-      Util.dropCheckpoint(distC) // predecessor files dead once `next` exists
-      distC = next
-      rounds += 1
+    * A node's distance is final the round it is first reached, and a
+    * round reads only a node's neighbours, so each connected component
+    * runs a frontier BFS from its own seeds in one task
+    * ([[Util.perComponent]]), to the oracle's recursion bound of 20
+    * hops. All-INTEGER output. */
+  def qGraphBfs(s: SparkSession, sf: String): DataFrame =
+    graphBfs(nearDupPairGraph(s, sf), nearDupPairCount(s, sf)).orderBy("doc_id")
+
+  /** [[qGraphBfs]]'s unordered rows over any pair list. */
+  private[graft] def graphBfs(pairs: DataFrame, nPairs: Long): DataFrame =
+    Util.perComponent(pairs, nPairs)(bfs20).toDF("doc_id", "dist")
+
+  private def bfs20(a: Array[Long], b: Array[Long]): Iterator[(Long, Long)] = {
+    val g = Util.LocalGraph(a, b)
+    val dist = Array.tabulate(g.n)(i => if (g.ids(i) % 100 == 0) 0L else -1L)
+    var frontier = dist.indices.filter(dist(_) == 0)
+    var d = 0L
+    while (frontier.nonEmpty && d < 20) {
+      d += 1
+      val next = Vector.newBuilder[Int]
+      for (i <- frontier; k <- g.off(i) until g.off(i + 1); j = g.nbr(k))
+        if (dist(j) < 0) { dist(j) = d; next += j }
+      frontier = next.result()
     }
-    Util.dropCheckpoint(edges) // the readout below reads only the labels
-    distView.select(col("id").as("doc_id"), col("dist")).orderBy("doc_id")
+    Iterator.range(0, g.n).filter(dist(_) >= 0).map(i => (g.ids(i), dist(i)))
   }
 
   /** Corpus stats per (lang, source); integer sums stay exact. */
@@ -1656,9 +1590,7 @@ object TextDedup {
     val nPairs = nearDupPairCount(s, sf)
     val wedgeBoundB: Long = SharedFrames.getOrBuild("wedgeBound", s, sf) {
       if (nPairs > 64000000L) Long.MaxValue else {
-        val deg = pairs.select(col("a_id").as("v"))
-          .unionAll(pairs.select(col("b_id").as("v")))
-          .groupBy("v").agg(count(lit(1)).as("d"))
+        val deg = directedEdges(pairs).groupBy("u").agg(count(lit(1)).as("d"))
         // DECIMAL(38,0): a hub-heavy graph's Σd² can overflow BIGINT,
         // and a wrapped-negative bound would flip the gate the WRONG
         // way (negative > maxWedges is false → materialize the frame
@@ -1721,9 +1653,7 @@ object TextDedup {
     // untouched (gate > 4M edges).
     val wide = wideTriangles(s, nPairs)
     val wideParts = math.max(64, math.min(8192, (nPairs / 500000L).toInt))
-    val edges = pairs
-      .unionAll(pairs.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
-      .select(col("a_id").as("u"), col("b_id").as("v"))
+    val edges = directedEdges(pairs)
     val deg = edges.groupBy(col("u")).agg(count(lit(1)).as("d"))
     // decorate both endpoints, orient low rank → high rank; rank =
     // (degree, id) — a strict total order, so each undirected edge
@@ -1795,49 +1725,25 @@ object TextDedup {
     * mirrored on both engines, zero float accumulation. The edge set
     * is the τ=0.6 Jaccard pair graph ([[qDedupJaccard]] — already
     * oracle-verified equal to the oracle's own pair derivation).
-    * Shape: per-iteration (node-key) join+agg over |edges| rows, the
-    * standard distributed PageRank round; edges/degrees are
-    * localCheckpoint'd once, ranks per round (plans stay constant
-    * size, and min-of-2 benches never read a cross-invocation cache
-    * — the q_dedup_cluster discipline). */
-  def qGraphPagerank(s: SparkSession, sf: String): DataFrame = {
-    val pairs = qDedupJaccard(s, sf).select(col("a_id"), col("b_id"))
-    val nP = nearDupPairCount(s, sf)
-    // pre-partition on the message key ONCE (round 14, the 2core/bfs
-    // discipline): the checkpoint pins the layout and the broadcast
-    // joins preserve the streamed side's partitioning, so each round's
-    // groupBy(v) message aggregation — the loop's only shuffle — is
-    // exchange-free at fixture scale
-    val parts = loopPartitions(nP)
-    val edges = pairs.select(col("a_id").as("u"), col("b_id").as("v"))
-      .unionAll(pairs.select(col("b_id").as("u"), col("a_id").as("v")))
-      .repartition(parts, col("v"))
-      .serCheckpoint(2L * nP)
-    val degs = edges.groupBy(col("u")).agg(count(lit(1)).as("d"))
-      .serCheckpoint(2L * nP)
-    // rank and degree frames are |V| rows — broadcast both (so each
-    // round's only shuffle is the groupBy(v) message aggregation, the
-    // distributed-PageRank minimum) but only under the size gate: at a
-    // |V| past broadcast budget the hint is withheld and the same
-    // equi-joins run as shuffles unchanged (Util.gatedBroadcast)
-    val nV = degs.count()
-    def bc(df: DataFrame): DataFrame = Util.gatedBroadcast(s, df, nV)
-    var r = degs.select(col("u").as("id"), lit(1000000L).as("r"))
-    for (_ <- 1 to 5) {
-      val prev = r
-      r = edges
-        .join(bc(r.withColumnRenamed("id", "u")), "u")
-        .join(bc(degs), "u")
-        .groupBy(col("v"))
-        .agg(sum(expr("r div d")).as("m"))
-        .select(col("v").as("id"),
-          expr("150000 + (850000 * m) div 1000000").as("r"))
-        .serCheckpoint(2L * nP)
-      Util.dropCheckpoint(prev) // no-op round 1 (not a checkpoint root)
+    * A round reads only a node's in-neighbours, so each connected
+    * component iterates on its own in one task ([[Util.perComponent]]);
+    * the sum and product overflow-check as ANSI SQL's BIGINT does. */
+  def qGraphPagerank(s: SparkSession, sf: String): DataFrame =
+    graphPagerank(nearDupPairGraph(s, sf), nearDupPairCount(s, sf)).orderBy("doc_id")
+
+  /** [[qGraphPagerank]]'s unordered rows over any pair list. */
+  private[graft] def graphPagerank(pairs: DataFrame, nPairs: Long): DataFrame =
+    Util.perComponent(pairs, nPairs)(pagerank5).toDF("doc_id", "rank_fp")
+
+  private def pagerank5(a: Array[Long], b: Array[Long]): Iterator[(Long, Long)] = {
+    val g = Util.LocalGraph(a, b)
+    val r = (1 to 5).foldLeft(Array.fill(g.n)(1000000L)) { (prev, _) =>
+      Array.tabulate(g.n) { v =>
+        val m = (g.off(v) until g.off(v + 1)).map(g.nbr)
+          .foldLeft(0L)((acc, u) => Math.addExact(acc, prev(u) / g.deg(u)))
+        150000L + Math.multiplyExact(850000L, m) / 1000000L
+      }
     }
-    Util.dropCheckpoint(edges) // the readout below reads only `r`
-    Util.dropCheckpoint(degs)
-    r.select(col("id").as("doc_id"), col("r").as("rank_fp"))
-      .orderBy("doc_id")
+    Iterator.range(0, g.n).map(i => (g.ids(i), r(i)))
   }
 }

@@ -90,19 +90,20 @@ object Util {
     }
   }
 
-  /** Size-gated checkpoint for PER-QUERY data-sized frames (loop rounds,
-    * wedge/arc/hit frames): reliable [[serCheckpoint]] once the frame is
-    * big enough (`graft.checkpoint.reliableMinRows`, default 4M rows)
-    * that the file write amortizes against the compute it protects —
-    * the sf100 regime, where losing a multi-minute loop to one executor
-    * death is the real risk; BELOW the gate, a serialized
-    * `localCheckpoint` — same lineage truncation, zero file I/O, one
-    * job — because a fixture-scale frame is trivially recomputable: an
-    * executor loss there costs ONE query retry, not the session (the
-    * session-cached artifacts stay reliable unconditionally, so
-    * retries always find their shared inputs intact). Measured: the
-    * everything-reliable sweep cost 3-6× on the per-round loops at
-    * sf0.1 (bfs 2.3→14.9 s) for durability no 40k-row frame needs. */
+  /** Size-gated checkpoint for PER-QUERY data-sized frames
+    * ([[componentLabels]] rounds, wedge/arc/hit frames): reliable
+    * [[serCheckpoint]] once the frame is big enough
+    * (`graft.checkpoint.reliableMinRows`, default 4M rows) that the file
+    * write amortizes against the compute it protects — the sf100
+    * regime, where losing a multi-minute loop to one executor death is
+    * the real risk; BELOW the gate, a serialized `localCheckpoint` —
+    * same lineage truncation, zero file I/O, one job — because a
+    * fixture-scale frame is trivially recomputable: an executor loss
+    * there costs ONE query retry, not the session (the session-cached
+    * artifacts stay reliable unconditionally, so retries always find
+    * their shared inputs intact). Every reliable checkpoint is two
+    * jobs and a file write, a cost a loop pays once per round, for
+    * durability no 40k-row frame needs. */
   def serCheckpoint(df: DataFrame, estRows: Long): DataFrame = {
     val gate = df.sparkSession.conf.getOption("graft.checkpoint.reliableMinRows")
       .map(_.toLong).getOrElse(4000000L)
@@ -215,9 +216,9 @@ object Util {
       (shiftright(y, i).bitwiseAND(lit(1L)) * lit(1L << (2 * i + 1)))
     }.reduce(_ + _)
 
-  /** Size-gated broadcast for O(|V|)/O(|E|) frames (the iterative graph
-    * family's loop-carried label/degree frames, vocabulary and
-    * customer-dimension tables). These are not constant-size dimension
+  /** Size-gated broadcast for O(|V|)/O(|E|) frames (the graph family's
+    * degree and hub frames, vocabulary and customer-dimension
+    * tables). These are not constant-size dimension
     * tables: an unconditional `broadcast()` hint hard-pins a plan that
     * at 100× node counts OOMs the driver assembling the broadcast.
     * Broadcasting them IS 30-45% faster at fixture scale (measured,
@@ -268,9 +269,9 @@ object Util {
   def componentLabels(pairs: DataFrame, nPairs: Long): DataFrame =
     componentLabels(pairs, nPairs, loopPartitions(nPairs), 50)
 
-  /** Partitions of a graph loop over `nPairs` undirected pairs: ~250k
-    * both-direction edges each, clamped to 1..4096. */
-  def loopPartitions(nPairs: Long): Int =
+  /** Partitions of [[componentLabels]] over `nPairs` undirected pairs:
+    * ~250k both-direction edges each, clamped to 1..4096. */
+  private def loopPartitions(nPairs: Long): Int =
     math.max(1L, math.min(4096L, 2L * nPairs / 250000L)).toInt
 
   /** [[componentLabels]] with the partition count and round bound given;
@@ -334,6 +335,63 @@ object Util {
       j += 2
     }
     Iterator.range(0, n).map(i => (ids(i), ids(find(i))))
+  }
+
+  /** A graph held in one task: `ids` are the sorted distinct ends of its
+    * pairs, and node i (the index of `ids(i)`) has the neighbours
+    * `nbr(off(i) until off(i + 1))`, as indices, over both directions of
+    * every pair — so a pair listed twice is two edges, as in the SQL
+    * edge list `pairs ∪ swapped`. */
+  private[graft] final case class LocalGraph(ids: Array[Long], off: Array[Int], nbr: Array[Int]) {
+    def n: Int = ids.length
+    def deg(i: Int): Int = off(i + 1) - off(i)
+  }
+
+  private[graft] object LocalGraph {
+    def apply(a: Array[Long], b: Array[Long]): LocalGraph = {
+      val ids = a ++ b
+      java.util.Arrays.sort(ids)
+      var n = 0
+      for (i <- ids.indices) if (n == 0 || ids(i) != ids(n - 1)) { ids(n) = ids(i); n += 1 }
+      val ai = a.map(java.util.Arrays.binarySearch(ids, 0, n, _))
+      val bi = b.map(java.util.Arrays.binarySearch(ids, 0, n, _))
+      val off = new Array[Int](n + 1)
+      for (j <- ai.indices) { off(ai(j) + 1) += 1; off(bi(j) + 1) += 1 }
+      for (i <- 0 until n) off(i + 1) += off(i)
+      val (nbr, fill) = (new Array[Int](off(n)), off.clone())
+      for (j <- ai.indices) {
+        nbr(fill(ai(j))) = bi(j); fill(ai(j)) += 1
+        nbr(fill(bi(j))) = ai(j); fill(bi(j)) += 1
+      }
+      LocalGraph(java.util.Arrays.copyOf(ids, n), off, nbr)
+    }
+  }
+
+  /** Runs `solve` once per connected component of the undirected pair
+    * list `pairs` (`a_id`, `b_id`), on that component's pairs as two
+    * arrays a(j), b(j) in no fixed order, and returns its rows as
+    * (`id`, `value`). The components are [[componentLabels]]; one join
+    * of `a_id` to the labels tags each pair, and one `groupByKey` hands
+    * each component to one call. A round-synchronous algorithm whose
+    * round reads only a node's neighbours so runs to its end inside one
+    * task with no exchange per round: the block-centric model of Tian
+    * et al., "From Think Like a Vertex to Think Like a Graph" (VLDB
+    * 2013), with the whole component as the block, so nothing crosses a
+    * block boundary. A task's memory is linear in its component. */
+  def perComponent(pairs: DataFrame, nPairs: Long)(
+      solve: (Array[Long], Array[Long]) => Iterator[(Long, Long)]): DataFrame = {
+    val pairEnc = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
+    pairs.join(componentLabels(pairs, nPairs), col("a_id") === col("id"))
+      .select(col("lab"), col("a_id"), col("b_id"))
+      .as(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong))
+      .groupByKey(_._1)(Encoders.scalaLong)
+      .flatMapGroups { (_, it: Iterator[(Long, Long, Long)]) =>
+        val (a, b) = (new scala.collection.mutable.ArrayBuilder.ofLong,
+                      new scala.collection.mutable.ArrayBuilder.ofLong)
+        it.foreach { case (_, u, v) => a += u; b += v }
+        solve(a.result(), b.result())
+      }(pairEnc)
+      .toDF("id", "value")
   }
 
   /** Exact hub-salted wedge self-join — the skew guard for the graph

@@ -1255,17 +1255,25 @@ class PropertySpec extends SparkSpec {
   private val path2000: Seq[(Long, Long)] =
     (1L until 2000L).map(i => if (i % 2 == 0) (i, i + 1) else (i + 1, i))
 
+  /** A star whose centre (1000) is not its minimum id. */
+  private val star: Seq[(Long, Long)] =
+    (1L to 250L).map(i => (i, 1000L)) ++ (1001L to 1250L).map(i => (1000L, i))
+  private def clique(base: Long, k: Int): Seq[(Long, Long)] =
+    for (i <- 0 until k; j <- i + 1 until k) yield (base + i, base + j)
+  /** Two 20-cliques joined by a 300-edge path. */
+  private val barbell: Seq[(Long, Long)] =
+    clique(0L, 20) ++ (19L until 319L).map(i => (i, i + 1)) ++ clique(319L, 20)
+  private val pairs300: Seq[(Long, Long)] = (0L until 300L).map(i => (2 * i + 7, 2 * i + 8))
+  /** A path near Long.MaxValue, a pair at Long.MinValue, and edges across zero. */
+  private val extreme: Seq[(Long, Long)] = {
+    val top = Long.MaxValue
+    (0L until 50L).map(i => (top - i - 1, top - i)) ++
+      Seq((top - 200L, top), (Long.MinValue, Long.MinValue + 1), (-1L, top - 300L))
+  }
+
   test("componentLabels == driver-side union-find (path, star, cliques + path, pairs, duplicates, extreme ids; 1/8/64 partitions)") {
-    val star = (1L to 250L).map(i => (i, 1000L)) ++ (1001L to 1250L).map(i => (1000L, i))
-    def clique(base: Long, k: Int) =
-      for (i <- 0 until k; j <- i + 1 until k) yield (base + i, base + j)
-    val barbell = clique(0L, 20) ++ (19L until 319L).map(i => (i, i + 1)) ++ clique(319L, 20)
-    val pairs300 = (0L until 300L).map(i => (2 * i + 7, 2 * i + 8))
     val dups = (1L to 40L).flatMap(i => Seq((i, i + 1), (i + 1, i), (i, i + 1))) ++
                Seq.fill(5)((500L, 600L))
-    val top = Long.MaxValue
-    val extreme = (0L until 50L).map(i => (top - i - 1, top - i)) ++
-                  Seq((top - 200L, top), (Long.MinValue, Long.MinValue + 1), (-1L, top - 300L))
     // heap-numbered complete binary tree of 511 nodes
     val binTree = (1L until 511L).map(i => ((i - 1) / 2, i))
     // a 503-node path with ids permuted by i -> (211 i + 17) mod 503: the
@@ -1321,6 +1329,62 @@ class PropertySpec extends SparkSpec {
     assert(rounds == 1, s"expected one round, counted $rounds checkpoint jobs")
     val eight = checkpointJobs { labelsOf(path2000, 8) }
     assert(eight > 1, s"the counter must see the rounds of 8 partitions, counted $eight")
+  }
+
+  test("2-core, BFS and PageRank kernels == the oracle's rounds (path, cycle + pendant chains, cliques + path, star, pairs, extreme ids; 8 partitions)") {
+    import graft.tools.ReferenceGraphRounds
+    val s2 = rangeSession(8)
+    import s2.implicits._
+    // a 30-cycle with a 3-edge chain at 5000 and a 15-edge chain at 5015:
+    // the long chain outlasts the 10 peel rounds
+    val cycle = (0L until 30L).map(i => (5000L + i, 5000L + (i + 1) % 30)) ++
+      (0L until 3L).map(i => (4999L - i, 5000L - i)) ++
+      ((5015L, 6000L) +: (6000L until 6014L).map(i => (i, i + 1)))
+    // on the 2,000-node path both bounds bind: 10 rounds peel 20 of its
+    // 1,999 edges (its true 2-core is empty), and the seeds reach only
+    // 20 hops
+    assert(ReferenceGraphRounds.twoCore(path2000).values.sum == 2 * 1979)
+    assert(ReferenceGraphRounds.bfs(path2000).values.max == 20)
+    assert(ReferenceGraphRounds.twoCore(cycle).keySet.contains(6004L))
+    def rows(df: org.apache.spark.sql.DataFrame): Map[Long, Long] = {
+      val r = df.collect()
+      val m = r.map(x => x.getLong(0) -> x.getLong(1)).toMap
+      assert(m.size == r.length, "a node has more than one row")
+      m
+    }
+    val graphs = Seq("path" -> path2000, "cycle + pendant chains" -> cycle,
+                     "cliques + path" -> barbell, "star" -> star,
+                     "isolated pairs" -> pairs300, "extreme ids" -> extreme)
+    for ((name, g) <- graphs) {
+      val pairs = g.toDF("a_id", "b_id").repartition(8)
+      val n = g.size.toLong
+      assert(rows(TextDedup.graph2core(pairs, n)) == ReferenceGraphRounds.twoCore(g), s"2-core: $name")
+      assert(rows(TextDedup.graphBfs(pairs, n)) == ReferenceGraphRounds.bfs(g), s"BFS: $name")
+      assert(rows(TextDedup.graphPagerank(pairs, n)) == ReferenceGraphRounds.pagerank(g), s"PageRank: $name")
+    }
+    assert(TextDedup.graph2core(pairs300.toDF("a_id", "b_id"), 300L).rdd.getNumPartitions == 8,
+           "the components must be spread over the 8 shuffle partitions")
+  }
+
+  test("q_graph_2core, q_graph_bfs and q_graph_pagerank run at most 6 jobs each over a built pair graph, and no count job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val s = spark.newSession()
+    TextDedup.nearDupPairGraph(s, sf)
+    val sc = s.sparkContext
+    for (key <- Seq("q_graph_2core", "q_graph_bfs", "q_graph_pagerank")) {
+      val names = new java.util.concurrent.ConcurrentLinkedQueue[String]
+      val l = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          names.add(e.stageInfos.maxBy(_.stageId).name)
+      }
+      org.apache.spark.graftspec.ListenerDrain(sc)
+      sc.addSparkListener(l)
+      try { SparkEntry.queries(key)(s, sf).collect(); org.apache.spark.graftspec.ListenerDrain(sc) }
+      finally sc.removeSparkListener(l)
+      assert(names.size <= 6, s"$key ran ${names.size} jobs: $names")
+      assert(!names.stream().anyMatch(_.startsWith("count at TextDedup.scala")),
+             s"$key ran a count job: $names")
+    }
   }
 
   test("q_dedup_jaccard and q_dedup_ngram sort their pairs; the shared pair graph is built with no sort") {
